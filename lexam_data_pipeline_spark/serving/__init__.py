@@ -1,5 +1,17 @@
 """Serving parity layer (SURVEY §7.6): each reference REST endpoint's
-result shape as a DataFrame program."""
+result shape as a DataFrame program.
+
+Scale notes: every endpoint first passes its table arguments through
+:func:`operators.partitioning.narrow`.  A table that is a bare file scan
+at or under ``spark.sql.autoBroadcastJoinThreshold`` becomes one
+partition, so the request's aggregates, sorts and semi-joins plan no
+shuffle (only the explicit broadcasts remain) and AQE splits off no
+extra jobs — an interactive request over a small question bank is bound
+by per-job overhead, not data volume.  Larger tables, and inputs that
+are not bare file scans (joins, explodes, cached or in-memory frames),
+keep exactly the plans they had before: shuffled, AQE-coalesced, and
+spread over the cluster.
+"""
 
 from lexam_data_pipeline_spark.serving.dashboard import (
     answer_length_histogram,

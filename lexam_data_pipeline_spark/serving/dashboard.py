@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from lexam_data_pipeline_spark.operators.caching import persist_slot
+from lexam_data_pipeline_spark.operators.partitioning import narrow
 
 AREAS = ("Private", "Public", "Criminal", "Interdisciplinary")
 JURISDICTIONS = ("Swiss", "International", "Generic")
@@ -100,6 +101,7 @@ def dashboard(
     languages: list[str] | None = None,
 ) -> dict[str, DataFrame]:
     """Every dashboard aggregate as a lazy DataFrame, reference-shaped."""
+    questions, variants = narrow(questions), narrow(variants)
     q, v = _restrict(questions, variants, configs, languages)
     # slot-bounded cache: released when the next dashboard call replaces
     # the slot (the returned frames are lazy — ADVICE r1 leak fix)
@@ -225,6 +227,7 @@ def course_summary(
     question_id instead of an unbounded forced broadcast (round-6
     review finding).
     """
+    questions, variants = narrow(questions), narrow(variants)
     q_side = questions.select(
         F.col("id").alias("question_id"),
         "course",

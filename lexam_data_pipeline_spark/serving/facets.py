@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from lexam_data_pipeline_spark.operators.partitioning import narrow
 from lexam_data_pipeline_spark.operators.filters import (
     BOOL_FIELDS,
     QUESTION_LIST_FIELDS,
@@ -36,6 +37,7 @@ def facet_frame(questions: DataFrame, variants: DataFrame, fc: dict | None = Non
 
     Boolean filters apply to every facet (the reference never facets on
     them, only list fields are faceted — main.py:462-495)."""
+    questions, variants = narrow(questions), narrow(variants)
     fc = fc or {}
     base = variants.select("question_id", *VARIANT_LIST_FIELDS).join(
         F.broadcast(

@@ -15,6 +15,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from lexam_data_pipeline_spark.functions.extract import gold_choice
+from lexam_data_pipeline_spark.operators.partitioning import narrow
 
 MAX_LIST_LIMIT = 500  # ref generation.py:34 / judging.py:39
 
@@ -64,6 +65,7 @@ def answers_page(
 ) -> ListingPage:
     """list_answers: ordered by answer id, enriched page (ref
     generation.py:30-70)."""
+    answers, variants, questions = narrow(answers), narrow(variants), narrow(questions)
     limit = max(1, min(int(limit), MAX_LIST_LIMIT))
     offset = max(0, int(offset))
     base = answers.filter(F.col("experiment_id") == experiment_id).persist()
@@ -113,6 +115,8 @@ def judgments_page(
 ) -> ListingPage:
     """list_judgments: experiment-scoped via the answers join, optional
     judge filter, ordered by judgment id (ref judging.py:35-79)."""
+    judgments, answers = narrow(judgments), narrow(answers)
+    variants, questions = narrow(variants), narrow(questions)
     limit = max(1, min(int(limit), MAX_LIST_LIMIT))
     offset = max(0, int(offset))
     exp_answers = answers.filter(F.col("experiment_id") == experiment_id).select(

@@ -18,7 +18,9 @@ reference's semantics:
 Scale notes: pagination is a global sort — the reference caps page depth
 (limit ≤ 200) and so do we; the sort ships only the page keys, and the
 variant nesting join runs on the ≤200 page ids (broadcast), so the deep
-work is the filter scan, which pushes down to parquet.
+work is the filter scan, which pushes down to parquet.  Inputs small
+enough to narrow to one partition (see the package docstring) run the
+whole page without a shuffle; larger inputs keep the shuffled plan.
 """
 
 from __future__ import annotations
@@ -28,6 +30,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from lexam_data_pipeline_spark.operators.caching import persist_slot, qopt_enabled
+from lexam_data_pipeline_spark.operators.partitioning import narrow
 from lexam_data_pipeline_spark.operators.filters import (
     VARIANT_LIST_FIELDS,
     apply_question_filters,
@@ -66,6 +69,7 @@ def filtered_questions(
 ) -> DataFrame:
     """The filtered+searched question set shared by the listing, the facet
     endpoint, and the dashboard."""
+    questions, variants = narrow(questions), narrow(variants)
     fc = fc or {}
     q = apply_question_filters(questions, fc)
     vmatch = _question_ids_matching(variants, fc)
@@ -104,6 +108,7 @@ def questions_page(
         raise ValueError(f"unsortable column: {sort_by}")
     limit = max(1, min(int(limit), MAX_PAGE_LIMIT))
     offset = max(0, int(offset))
+    questions, variants = narrow(questions), narrow(variants)
 
     base = filtered_questions(questions, variants, fc, search)
     # count + page off one cached plan (ref runs the query twice,
@@ -197,6 +202,7 @@ def get_question(questions: DataFrame, variants: DataFrame, question_id: str) ->
     """Single-question lookup with nested variants (ref
     main.py /api/questions/{id}): point filter + broadcast-nested
     children — the scan prunes to one row before the join."""
+    questions, variants = narrow(questions), narrow(variants)
     one = questions.filter(F.col("id") == question_id)
     nested = (
         variants.filter(F.col("question_id") == question_id)

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from lexam_data_pipeline_spark.operators.caching import persist_slot
+from lexam_data_pipeline_spark.operators.partitioning import narrow
 
 #: score histogram: 11 buckets of 0.1, last bucket = [1.0, ∞)
 #: (experiment_stats.py:54-61)
@@ -60,6 +61,7 @@ def experiment_stats(
 ) -> dict[str, DataFrame]:
     """The /stats endpoint: overall MCQ/open stats, score histogram,
     token totals, self-consistency — each a lazy DataFrame."""
+    answers, judgments = narrow(answers), narrow(judgments)
     # slot-bounded: the returned frames are lazy, so release happens when
     # the NEXT stats call replaces the slot (ADVICE r1 leak fix)
     ans = persist_slot(
@@ -175,6 +177,8 @@ def breakdown_by_field(
 ) -> DataFrame:
     """A12 per-field accuracy/score breakdown (experiment_stats.py:225-259)
     — the reference's N+1 lookups replaced by two broadcast joins."""
+    answers, judgments = narrow(answers), narrow(judgments)
+    variants, questions = narrow(variants), narrow(questions)
     ans = _filtered_answers(answers, experiment_id, model_name)
     dims = variants.select(F.col("id").alias("variant_id"), "question_id").join(
         F.broadcast(questions.select(F.col("id").alias("question_id"), field)),
@@ -237,6 +241,8 @@ def breakdown_by_fields(
     one grouped aggregate per side serves every field.  Output adds a
     leading ``field`` column; each field's slice equals
     :func:`breakdown_by_field` for that field exactly."""
+    answers, judgments = narrow(answers), narrow(judgments)
+    variants, questions = narrow(variants), narrow(questions)
     ans = _filtered_answers(answers, experiment_id, model_name)
     dims = variants.select(F.col("id").alias("variant_id"), "question_id").join(
         F.broadcast(questions.select(F.col("id").alias("question_id"), *fields)),
@@ -297,6 +303,7 @@ def compare_judges(
     """A6: per-judge count/avg/median (experiment_stats.py:117-160) — the
     reference re-fetches all scores per judge for the median; one grouped
     aggregate here."""
+    answers, judgments = narrow(answers), narrow(judgments)
     exp_answers = answers.filter(F.col("experiment_id") == experiment_id).select(
         F.col("id").alias("answer_id")
     )
@@ -326,6 +333,8 @@ def stats_by_question(
     """A14 per-question rollup (experiment_stats.py:163-222), sorted by
     avg score desc (NULL → 0 in the sort key, like the reference's
     ``x["avg_score"] or 0``)."""
+    answers, judgments = narrow(answers), narrow(judgments)
+    variants, questions = narrow(variants), narrow(questions)
     ans = _filtered_answers(answers, experiment_id, model_name)
     dims = variants.select(F.col("id").alias("variant_id"), "question_id", "config").join(
         F.broadcast(questions.select(F.col("id").alias("question_id"), "course", "area")),

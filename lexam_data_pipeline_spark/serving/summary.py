@@ -21,10 +21,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from lexam_data_pipeline_spark.operators.filters import filtered_variants
+from lexam_data_pipeline_spark.operators.partitioning import narrow
 from lexam_data_pipeline_spark.serving.questions import filtered_questions
 
 
 def corpus_stats(questions: DataFrame, variants: DataFrame) -> dict[str, DataFrame]:
+    questions, variants = narrow(questions), narrow(variants)
     return {
         "totals": questions.agg(F.count(F.lit(1)).alias("total_questions")).crossJoin(
             variants.agg(F.count(F.lit(1)).alias("total_variants"))
@@ -62,6 +64,7 @@ def search_summary(
 
 
 def judge_summary(answers: DataFrame, judgments: DataFrame, experiment_id: int) -> DataFrame:
+    answers, judgments = narrow(answers), narrow(judgments)
     exp_answers = answers.filter(F.col("experiment_id") == experiment_id).select(
         F.col("id").alias("answer_id")
     )
@@ -78,4 +81,5 @@ def judge_summary(answers: DataFrame, judgments: DataFrame, experiment_id: int) 
 
 def question_count(variants: DataFrame, questions: DataFrame, fc: dict | None) -> int:
     """Pre-generation preview: how many variants the filter selects."""
+    variants, questions = narrow(variants), narrow(questions)
     return filtered_variants(variants, questions, fc or {}).count()

@@ -11,6 +11,14 @@ re-planning knobs (AQE) that matter at cluster scale:
   ``timestamp[ns]`` which Spark's parquet reader otherwise rejects; the
   catalog converts the raw nanos back to a proper timestamp column
   (see :mod:`lexam_data_pipeline_spark.catalog`).
+* ``spark.sql.codegen.cache.maxEntries`` = :data:`CODEGEN_CACHE_ENTRIES`
+  — Spark's LRU cache of Janino-compiled whole-stage classes defaults to
+  100 entries, but one cycle of the serving request mix generates about
+  260 distinct classes, so at the default every class was evicted and
+  recompiled on every cycle (``CodegenMetrics`` compile count per warm
+  ten-request cycle of ``lexbench`` ``serve`` at sf0.1: 258–264 at 100
+  entries, 4–25 at 1000).  The cache is JVM-wide and static, so it only
+  takes effect when this factory builds the session.
 """
 
 from __future__ import annotations
@@ -20,6 +28,10 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+
+#: Janino class-cache size: about four serving request cycles' worth of
+#: generated classes (see the module docstring).
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -50,6 +62,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # Deterministic session timezone so timestamp arithmetic matches the
         # DuckDB oracle regardless of host TZ.
         .config("spark.sql.session.timeZone", "UTC")

@@ -15,6 +15,24 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
+def _marker_line(config) -> str:
+    expr = config.getoption("markexpr")
+    return f"marker expression: -m {expr!r}" + ("" if expr else " (no tests deselected by marker)")
+
+
+def pytest_report_header(config):
+    """State the active ``-m`` marker expression, so every run's output
+    says which marked tests it deselected (pytest.ini defaults to
+    ``not slowsuite``; ``-m ""`` runs everything)."""
+    return _marker_line(config)
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    # ``-q`` hides the header; repeat the line under the summary instead
+    if config.getoption("verbose") < 0:
+        terminalreporter.write_line(_marker_line(config))
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = get_spark(app_name="lexam-tests", master="local[4]", shuffle_partitions=4,

@@ -46,6 +46,18 @@ FAN_TOUCHED_KEYS: tuple[str, ...] = (
 )
 
 
+#: the serving-parity keys, whose plans changed when the serving
+#: endpoints began narrowing small file-scan inputs; they lead the window
+SERVING_KEYS: tuple[str, ...] = (
+    "q_questions_page",
+    "q_search_top_courses",
+    "q_dashboard_suite",
+    "q_course_summary",
+    "q_experiment_stats",
+    "q_experiment_stats_empty",
+    "q_compare_judges",
+)
+
 R12_CHANGED_KEYS: tuple[str, ...] = (
     "q_dedup_threshold_sweep",
     "q_dedup_rate_by_source",
@@ -65,13 +77,14 @@ R6_STALE_KEYS: tuple[str, ...] = (
 
 
 def test_round12_window_layout():
+    """The round-12 cohorts, shifted behind the serving-parity keys."""
     assert len(DRIVER_PRIORITY) == len(set(DRIVER_PRIORITY)) == 50
-    assert DRIVER_PRIORITY[:4] == R12_CHANGED_KEYS
-    assert DRIVER_PRIORITY[4:26] == R6_STALE_KEYS
-    rest = DRIVER_PRIORITY[26:]
-    assert len(rest) == len(set(rest)) == 24
-    assert not (set(rest) & set(R12_CHANGED_KEYS))
-    assert not (set(rest) & set(R6_STALE_KEYS))
+    assert DRIVER_PRIORITY[:7] == SERVING_KEYS
+    assert DRIVER_PRIORITY[7:11] == R12_CHANGED_KEYS
+    assert DRIVER_PRIORITY[11:33] == R6_STALE_KEYS
+    rest = DRIVER_PRIORITY[33:]
+    assert len(rest) == len(set(rest)) == 17
+    assert not (set(rest) & set(SERVING_KEYS + R12_CHANGED_KEYS + R6_STALE_KEYS))
 
 
 def test_round12_window_registered_first():
