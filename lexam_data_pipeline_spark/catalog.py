@@ -15,6 +15,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 FIXTURE_TABLES = (
     "region",
@@ -137,3 +138,40 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     for name, df in tables.items():
         df.createOrReplaceTempView(name)
     return tables
+
+
+def local_rows(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """Driver-side rows as a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(<python list>, schema)`` parallelizes the list
+    as a Python RDD: every action over it runs ``defaultParallelism``
+    tasks through Python workers (on a 4-core VM, about 1 s of worker
+    CPU per call for an 11-row frame).  The same rows sent as one Arrow
+    table become a ``LocalRelation`` instead: no Python worker, no job to
+    build it, and the optimizer can fold or prune it (an empty relation
+    removes the joins against it).
+
+    Values go through ``schema.toInternal`` first, the conversion the
+    list path applies, so ``None``, NaN, arrays, nested structs, maps and
+    naive ``datetime`` values (local time, like the list path) arrive as
+    the same Spark values.  ``schema`` is a ``StructType`` or a DDL
+    string; the frame's schema is exactly the declared one, nullability
+    included.  Works whatever ``spark.sql.execution.arrow.pyspark.enabled``
+    says: an Arrow table always takes the Arrow path.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    internal = [schema.toInternal(row) for row in rows]
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [
+            pa.array([row[i] for row in internal], type=field.type)
+            for i, field in enumerate(arrow_schema)
+        ],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

@@ -40,7 +40,7 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from lexam_data_pipeline_spark.catalog import load_table
+from lexam_data_pipeline_spark.catalog import load_table, local_rows
 from lexam_data_pipeline_spark.functions.text import shingle_set, tokens
 
 #: 2^18 bits = 32 KiB = 4096 longs.  At the fixture's bench-gram counts
@@ -138,7 +138,8 @@ def bloom_filter(
     shuffle; the build side is at most m/64 rows regardless of key count.
     """
     if isinstance(bloom, list):
-        words = df.sparkSession.createDataFrame(
+        words = local_rows(
+            df.sparkSession,
             [(i, w) for i, w in enumerate(bloom) if w != 0], "w: int, word: bigint"
         )
     else:

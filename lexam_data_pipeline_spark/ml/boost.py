@@ -39,7 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from lexam_data_pipeline_spark.catalog import load_table
+from lexam_data_pipeline_spark.catalog import load_table, local_rows
 from lexam_data_pipeline_spark.operators.guards import collect_bounded
 
 #: Leading embedding dimensions used as stump features.
@@ -230,7 +230,8 @@ def q_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
         if fuse:
             # the last round has no next cells job to ride — one count
             out[-1] = out[-1][:5] + (bv.where(prev_correct).count(),)
-        return spark.createDataFrame(
+        return local_rows(
+            spark,
             out,
             "round int, feature int, thr_bin int, polarity int, "
             "weighted_err bigint, n_correct bigint",

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from lexam_data_pipeline_spark.catalog import load_table
+from lexam_data_pipeline_spark.catalog import load_table, local_rows
 from lexam_data_pipeline_spark.ml.similarity import cosine
 
 
@@ -137,7 +137,7 @@ def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     qhead = emb.orderBy("vec_id").limit(1).collect()
     if not qhead:  # empty corpus: no query vector, no index — empty result
-        return spark.createDataFrame([], "vec_id long, cluster int, cosine double")
+        return local_rows(spark, [], "vec_id long, cluster int, cosine double")
     key = (sf_dir, 16, 3)
     if _IVF_CACHE.get("key") == key:
         assigned, centroids = _IVF_CACHE["index"]

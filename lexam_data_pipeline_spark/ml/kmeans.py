@@ -38,7 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from lexam_data_pipeline_spark.catalog import load_table
+from lexam_data_pipeline_spark.catalog import load_table, local_rows
 from lexam_data_pipeline_spark.ml.ivf import _assign
 
 K_CLUSTERS = 8
@@ -131,7 +131,8 @@ def cluster_stats(base: DataFrame, centroids: list[list[float]]) -> DataFrame:
         x2[r["cluster"]] += r["x2"]
     sse = x2 - 2.0 * (S * C).sum(axis=1) + n * (C * C).sum(axis=1)
     spark = base.sparkSession
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [
             (int(cid), int(n[cid]), float(round(sse[cid], 3)))
             for cid in range(k)
@@ -163,7 +164,8 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     centroids = train_kmeans(base, K_CLUSTERS, N_ITER)
     if not centroids:  # empty corpus: schema-stable empty result
-        return emb.sparkSession.createDataFrame(
+        return local_rows(
+            emb.sparkSession,
             [], "cluster int, n_points bigint, sse double"
         )
     return cluster_stats(base, centroids).orderBy("cluster")

@@ -37,7 +37,7 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, Window
 
-from lexam_data_pipeline_spark.catalog import load_table
+from lexam_data_pipeline_spark.catalog import load_table, local_rows
 from lexam_data_pipeline_spark.ml.dsir import _bucketed_tokens
 from lexam_data_pipeline_spark.operators.guards import collect_bounded
 
@@ -121,8 +121,8 @@ def q_nb_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # saves, so the per-token shape stays.
     docs = load_table(spark, sf_dir, "documents", fan=True)
     priors, weights = train_nb(docs)
-    wdf = spark.createDataFrame(weights, "cand string, b string, w long")
-    pdf = spark.createDataFrame(priors, "cand string, prior long")
+    wdf = local_rows(spark, weights, "cand string, b string, w long")
+    pdf = local_rows(spark, priors, "cand string, prior long")
     toks = _bucketed_tokens(docs)
     scores = (
         toks.join(F.broadcast(wdf), "b")

@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from lexam_data_pipeline_spark.catalog import load_table
+from lexam_data_pipeline_spark.catalog import load_table, local_rows
 
 #: The synthetic embedding corpus is near-isotropic (adjacent
 #: eigengap ratios ~0.96), so convergence needs |λ₂/λ₁|^iters ≪ 1:
@@ -113,7 +113,7 @@ def q_pca_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "component int, eigenvalue double, var_share double, cum_share double"
     )
     if n == 0:  # empty corpus: schema-stable empty result
-        return spark.createDataFrame([], schema)
+        return local_rows(spark, [], schema)
     comps = top_components(cov, N_COMPONENTS)
     trace = float(cov.trace())
     rows, cum = [], 0.0
@@ -125,6 +125,7 @@ def q_pca_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append(
             (i, round(lam, 6), round(share, 6), round(cum, 6))
         )
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         rows, "component int, eigenvalue double, var_share double, cum_share double"
     )

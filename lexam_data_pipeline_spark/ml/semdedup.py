@@ -46,7 +46,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from lexam_data_pipeline_spark.catalog import load_table
+from lexam_data_pipeline_spark.catalog import load_table, local_rows
 from lexam_data_pipeline_spark.ml.ivf import _assign
 from lexam_data_pipeline_spark.ml.kmeans import K_CLUSTERS, N_ITER, train_kmeans
 
@@ -113,7 +113,8 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     centroids = train_kmeans(base, K_CLUSTERS, N_ITER)
     if not centroids:  # empty corpus: schema-stable empty result
-        return emb.sparkSession.createDataFrame(
+        return local_rows(
+            emb.sparkSession,
             [], "cluster int, n_vectors bigint, n_kept bigint, n_dropped bigint"
         )
     assigned = _assign(base, centroids)

@@ -6,14 +6,17 @@ the experiment row (``created → generating → generated → judging →
 completed / error``) and a 409 guard against concurrent stage starts.
 Here the stages are driver-side jobs over parquet sinks:
 
-* control table ``experiments/`` — tiny, rewritten atomically per status
-  transition (swap-directory pattern; Delta/Iceberg would make this a
-  transactional ``UPDATE``, noted per method),
+* control table ``experiments.json`` — a few rows that live on the
+  driver, kept as one JSON commit file replaced with ``os.replace`` per
+  status transition (the idea of Delta's JSON commit log): a save or a
+  status change runs no Spark job and is crash-atomic.
+  :meth:`ExperimentStore.experiments` still serves it as a DataFrame
+  (a ``LocalRelation``),
 * append-only ``answers/`` and ``judgments/`` sinks (S6) with
   deterministic row ids, so task retries and stage re-runs are idempotent
   (ST3: the anti-join in run_generation/run_judging consults the sink),
-* predicate/cascade deletes (S7/S8) as anti-join rewrites with the same
-  atomic swap.
+* predicate/cascade deletes (S7/S8) on the sinks as anti-join rewrites
+  with a write-new-then-swap of the sink directory.
 
 Failure isolation (ST4) lives inside the LLM map (error column); a stage
 only transitions to ``error`` on driver-level failure, mirroring the
@@ -27,9 +30,12 @@ import json
 import os
 import shutil
 import uuid
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import TimestampType, _make_type_verifier
 
+from lexam_data_pipeline_spark.catalog import local_rows
 from lexam_data_pipeline_spark.model import (
     ANSWERS_SCHEMA,
     EXPERIMENTS_SCHEMA,
@@ -45,8 +51,21 @@ class ConcurrentStageError(RuntimeError):
     """Reference's HTTP 409 (routers/generation.py:18-19)."""
 
 
+#: The control table's commit file under the store root.
+CONTROL_FILE = "experiments.json"
+_TS_FIELDS = frozenset(
+    f.name for f in EXPERIMENTS_SCHEMA.fields if isinstance(f.dataType, TimestampType)
+)
+_verify_experiment = _make_type_verifier(EXPERIMENTS_SCHEMA)
+
+
+def _ts_to_json(value: datetime | None) -> str | None:
+    # naive values are local time, as Spark's own TimestampType reads them
+    return None if value is None else value.astimezone(timezone.utc).isoformat()
+
+
 class ExperimentStore:
-    """Parquet-backed experiment control table + answer/judgment sinks."""
+    """JSON control file for experiments + parquet answer/judgment sinks."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -61,14 +80,16 @@ class ExperimentStore:
         if not os.path.exists(path) or not any(
             f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
         ):
-            return self.spark.createDataFrame([], schema)
+            return local_rows(self.spark, [], schema)
         return self.spark.read.schema(schema).parquet(path)
 
     def _overwrite_atomic(self, df: DataFrame, name: str) -> None:
-        """Rewrite a table via write-new-then-swap: never reads and
-        overwrites the same files (Spark's lazy scans would race).  The
-        Delta-backed version of this store would be a transactional
-        MERGE/DELETE instead.
+        """Rewrite a sink (``answers`` or ``judgments``) via
+        write-new-then-swap: never reads and overwrites the same files
+        (Spark's lazy scans would race).  The Delta-backed version of this
+        store would be a transactional MERGE/DELETE instead.  The control
+        table does not come through here: it is a JSON commit file (see
+        :meth:`_commit_experiments`).
 
         NOT crash-atomic: a crash between the two renames leaves no live
         ``name`` directory — the data survives only in the newest
@@ -90,11 +111,18 @@ class ExperimentStore:
         """Restore ``name`` from the newest ``.old-*`` snapshot if a crash
         mid-swap left no live directory.  Returns True if a restore
         happened.  Call at store startup for each table; leftover ``.tmp``
-        dirs are incomplete writes and are removed."""
+        entries are incomplete writes and are removed (for
+        ``experiments`` that is a stale commit file — the live
+        ``experiments.json`` is replaced in one ``os.replace``, so it is
+        never half-written and never needs restoring)."""
         final = self._path(name)
         for entry in os.listdir(self.root):
             if entry.startswith(f".{name}.tmp-"):
-                shutil.rmtree(os.path.join(self.root, entry))
+                stale = os.path.join(self.root, entry)
+                if os.path.isdir(stale):
+                    shutil.rmtree(stale)
+                else:
+                    os.remove(stale)
         if os.path.exists(final):
             return False
         olds = sorted(
@@ -114,14 +142,42 @@ class ExperimentStore:
 
     # -- experiments control table ------------------------------------------
 
+    def _load_experiments(self) -> list[dict]:
+        try:
+            with open(self._path(CONTROL_FILE)) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return []
+
+    def _commit_experiments(self, rows: list[dict]) -> None:
+        """Replace the control file: write a temp file beside it, fsync,
+        then ``os.replace`` — atomic on POSIX, so a crash leaves either
+        the old or the new file live, plus at most a stale ``.tmp`` file
+        that :meth:`recover` removes."""
+        tmp = self._path(f".experiments.tmp-{uuid.uuid4().hex[:8]}")
+        with open(tmp, "w") as f:
+            json.dump(rows, f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, self._path(CONTROL_FILE))
+
     def experiments(self) -> DataFrame:
-        return self._read("experiments", EXPERIMENTS_SCHEMA)
+        rows = [
+            tuple(
+                datetime.fromisoformat(r[n]) if n in _TS_FIELDS and r[n] else r[n]
+                for n in EXPERIMENTS_SCHEMA.names
+            )
+            for r in self._load_experiments()
+        ]
+        return local_rows(self.spark, rows, EXPERIMENTS_SCHEMA)
 
     def get_experiment(self, exp_id: int) -> dict | None:
-        rows = self.experiments().filter(F.col("id") == exp_id).collect()
-        if not rows:
+        d = next((r for r in self._load_experiments() if r["id"] == exp_id), None)
+        if d is None:
             return None
-        d = rows[0].asDict()
+        for n in _TS_FIELDS:
+            if d[n]:  # naive local time, as a collected Spark row gives it
+                d[n] = datetime.fromisoformat(d[n]).astimezone().replace(tzinfo=None)
         if d.get("filter_config"):
             d["filter_config"] = json.loads(d["filter_config"])
         return d
@@ -131,24 +187,23 @@ class ExperimentStore:
         if isinstance(exp.get("filter_config"), dict):
             exp["filter_config"] = json.dumps(exp["filter_config"])
         exp.setdefault("status", "created")
-        row_df = self.spark.createDataFrame(
-            [tuple(exp.get(f.name) for f in EXPERIMENTS_SCHEMA.fields)], EXPERIMENTS_SCHEMA
-        )
-        others = self.experiments().filter(F.col("id") != int(exp["id"]))
-        self._overwrite_atomic(others.unionByName(row_df), "experiments")
+        exp["id"] = int(exp["id"])
+        _verify_experiment(tuple(exp.get(n) for n in EXPERIMENTS_SCHEMA.names))
+        row = {
+            n: _ts_to_json(exp.get(n)) if n in _TS_FIELDS else exp.get(n)
+            for n in EXPERIMENTS_SCHEMA.names
+        }
+        others = [r for r in self._load_experiments() if r["id"] != row["id"]]
+        self._commit_experiments(others + [row])
 
     def set_status(self, exp_id: int, status: str) -> None:
         assert status in STATUSES, status
-        updated = self.experiments().withColumn(
-            "status",
-            F.when(F.col("id") == exp_id, F.lit(status)).otherwise(F.col("status")),
-        ).withColumn(
-            "updated_at",
-            F.when(F.col("id") == exp_id, F.current_timestamp()).otherwise(
-                F.col("updated_at")
-            ),
-        )
-        self._overwrite_atomic(updated, "experiments")
+        rows = self._load_experiments()
+        now = _ts_to_json(datetime.now(timezone.utc))
+        for r in rows:
+            if r["id"] == exp_id:
+                r["status"], r["updated_at"] = status, now
+        self._commit_experiments(rows)
 
     # -- sinks ---------------------------------------------------------------
 
@@ -235,8 +290,8 @@ class ExperimentStore:
         """S8 cascade: experiment → answers → judgments (ref
         models.py:136,156; routers/experiments.py:130-137)."""
         self.delete_answers(exp_id)
-        self._overwrite_atomic(
-            self.experiments().filter(F.col("id") != exp_id), "experiments"
+        self._commit_experiments(
+            [r for r in self._load_experiments() if r["id"] != exp_id]
         )
 
 

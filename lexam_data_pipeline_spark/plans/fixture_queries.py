@@ -30,7 +30,7 @@ import math
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
-from lexam_data_pipeline_spark.catalog import load_table
+from lexam_data_pipeline_spark.catalog import load_table, local_rows
 from lexam_data_pipeline_spark.operators.caching import qopt_enabled
 from lexam_data_pipeline_spark.operators.guards import collect_bounded
 
@@ -2568,7 +2568,7 @@ def q_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     # degenerate empty join: schema-stable empty result; the oracle's
     # HAVING count(*) > 0 mirrors the zero-row output (round-6 advice)
     if n == 0:
-        return spark.createDataFrame([], schema).select(
+        return local_rows(spark, [], schema).select(
             F.col("_s").cast("double").alias("chi2"), "dof", "n"
         )
     # each grid cell's term is one fixed IEEE expression (float() before
@@ -2580,7 +2580,8 @@ def q_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
             o = counts.get((s, p), 0)
             e = float(row_tot[s] * col_tot[p]) / float(n)
             s_chi += math.floor(((o - e) * (o - e) / e) * 1000000.0)
-    row = spark.createDataFrame(
+    row = local_rows(
+        spark,
         [(s_chi, (len(row_tot) - 1) * (len(col_tot) - 1), n)], schema
     )
     return row.select(
@@ -3169,7 +3170,8 @@ def q_hll_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     sk = ev.groupBy("event_type").agg(
         F.hll_sketch_agg(F.col("user_id"), F.lit(14)).alias("sk")
     )
-    pairs = spark.createDataFrame(
+    pairs = local_rows(
+        spark,
         [("view", "click"), ("view", "purchase"), ("click", "purchase")],
         "type_a string, type_b string",
     )
@@ -4422,7 +4424,8 @@ def q_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_obs"))
     )
     total = digits.agg(F.sum("n_obs").alias("n_total"))
-    benford = spark.createDataFrame(
+    benford = local_rows(
+        spark,
         [
             (1, 0.30102999566398120),
             (2, 0.17609125905568124),
@@ -4960,7 +4963,8 @@ def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
                         round(n_pos / n, 6),
                     )
                 )
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         out,
         "bin int, n bigint, raw_rate double, pool_id int, iso_rate double",
     ).orderBy("bin")
@@ -5159,7 +5163,7 @@ def q_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     counts, ma, mb, n = _cell_marginals(cells, "a", "b", "n_ab")
     if n == 0:  # degenerate empty corpus: schema-stable empty result
-        row = spark.createDataFrame([], schema)
+        row = local_rows(spark, [], schema)
         return row.select(
             "n_rows",
             "n_cells",
@@ -5194,7 +5198,7 @@ def q_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     ha, hb = ent(ma), ent(mb)
     # constant column(s): min entropy 0 → normalized MI undefined (null)
     nmi = mi / min(ha, hb) if min(ha, hb) > 0.0 else None
-    row = spark.createDataFrame([(n, len(cells), mi, ha, hb, nmi)], schema)
+    row = local_rows(spark, [(n, len(cells), mi, ha, hb, nmi)], schema)
     return row.select(
         "n_rows",
         "n_cells",
@@ -5233,7 +5237,7 @@ def q_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         (i, math.floor(ENTROPY_SCALE * math.log(2.0) / math.log(i + 1.0)))
         for i in range(1, NDCG_K + 1)
     ]
-    ddf = spark.createDataFrame(discounts, "rank int, d long")
+    ddf = local_rows(spark, discounts, "rank int, d long")
     w = Window.partitionBy("c_nationkey").orderBy(
         F.col("c_acctbal").desc(), F.col("c_custkey").asc()
     )
@@ -5310,7 +5314,7 @@ def q_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     schema = "source string, n_docs bigint, _jsd double"
     if not cells:
-        return spark.createDataFrame([], schema).select(
+        return local_rows(spark, [], schema).select(
             "source", "n_docs", F.col("_jsd").alias("jsd_bits")
         )
     counts, a_tot, b_tot, bb = _cell_marginals(cells, "s", "l", "c")
@@ -5340,7 +5344,7 @@ def q_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         ) / 2 / math.log(2.0)
         rows.append((s, a, jsd))
     return (
-        spark.createDataFrame(rows, schema)
+        local_rows(spark, rows, schema)
         .select("source", "n_docs", F.round("_jsd", 6).alias("jsd_bits"))
         .orderBy("source")
     )
@@ -5846,7 +5850,7 @@ def q_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over the empty grid can't emit a stray (NULL, 1, NULL, NULL) row
     # (round-6 advice; monoculture grids still emit their one real row)
     if n == 0:
-        return spark.createDataFrame([], schema).select(
+        return local_rows(spark, [], schema).select(
             F.col("_s").cast("double").alias("chi2"),
             F.col("r").alias("dof"),
             "n",
@@ -5862,7 +5866,7 @@ def q_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
             e = float(a_tot[a] * b_tot[b]) / float(n)
             s_chi += math.floor(((o - e) * (o - e) / e) * 1000000.0)
     r, c = len(a_tot), len(b_tot)
-    row = spark.createDataFrame([(s_chi, r, c, n)], schema)
+    row = local_rows(spark, [(s_chi, r, c, n)], schema)
     chi2 = F.col("_s") / F.lit(1000000.0)
     denom = F.nullif(
         (F.col("n") * F.least(F.col("r") - 1, F.col("cc") - 1)).cast("double"),
@@ -6082,7 +6086,7 @@ def q_shannon_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         st["sl"] += math.floor(1000000.0 * c * math.log(c))
         st["simp"] += c * (c - 1)
     if not per_source:
-        return spark.createDataFrame([], schema).select(
+        return local_rows(spark, [], schema).select(
             "source",
             "n_docs",
             "richness",
@@ -6093,7 +6097,7 @@ def q_shannon_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         (s, st["n"], st["rich"], st["sl"], st["simp"], math.log(st["n"]))
         for s, st in sorted(per_source.items(), key=lambda kv: _null_first(kv[0]))
     ]
-    df = spark.createDataFrame(rows, schema)
+    df = local_rows(spark, rows, schema)
     n = F.col("n_docs").cast("double")
     # H = ln(n) − (Σ c·ln c)/n, in bits.  ln(n_s) is computed DRIVER-side
     # (math.log == DuckDB ln, the ml/nb.py libm argument) — the JVM's
@@ -6552,10 +6556,11 @@ def q_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
         # row (0, NULL, NULL) — mirror it, don't return zero rows (the
         # q_cramers_v degenerate-grid lesson; newly reachable since the
         # strictly-positive month guard)
-        return spark.createDataFrame(
+        return local_rows(
+            spark,
             [(0, None, None)], "n_months bigint, elasticity double, intercept double"
         )
-    df = spark.createDataFrame([(n, sx, sy, sxy, sxx)], schema)
+    df = local_rows(spark, [(n, sx, sy, sxy, sxx)], schema)
     nD = F.col("n").cast("double")
     sxD = F.col("sx").cast("double") / 1e9
     syD = F.col("sy").cast("double") / 1e9
@@ -7072,7 +7077,8 @@ def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         tie_row = tie_agg.collect()[0]
     if not groups:
-        out = spark.createDataFrame(
+        out = local_rows(
+            spark,
             [(None, 0, None, None)],
             "n bigint, k bigint, h_stat double, h_tie_corrected double",
         )
@@ -7091,7 +7097,8 @@ def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     nnn = n**3 - n
     corr = 1.0 - float(t3t) / float(nnn) if nnn > 0 else None
     h_corr = h / corr if corr is not None and corr > 0.0 else None
-    out = spark.createDataFrame(
+    out = local_rows(
+        spark,
         [(n, k, h, h_corr)],
         "n bigint, k bigint, h_stat double, h_tie_corrected double",
     )
@@ -7315,7 +7322,7 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     schema = "n_terms bigint, zipf_slope double, fit_r2 double"
     if not top:
-        out = spark.createDataFrame([(0, None, None)], schema)
+        out = local_rows(spark, [(0, None, None)], schema)
         return out.select(
             "n_terms",
             F.round("zipf_slope", 6).alias("zipf_slope"),
@@ -7341,7 +7348,7 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         if den != 0 and deny != 0
         else None
     )
-    out = spark.createDataFrame([(n, slope, r2)], schema)
+    out = local_rows(spark, [(n, slope, r2)], schema)
     return out.select(
         "n_terms",
         F.round("zipf_slope", 6).alias("zipf_slope"),
@@ -7549,7 +7556,7 @@ def q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     schema = "n_sources bigint, heaps_beta double, fit_r2 double"
     if not pts:
-        out = spark.createDataFrame([(0, None, None)], schema)
+        out = local_rows(spark, [(0, None, None)], schema)
         return out.select(
             "n_sources",
             F.round("heaps_beta", 6).alias("heaps_beta"),
@@ -7574,7 +7581,7 @@ def q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         if den != 0 and deny != 0
         else None
     )
-    out = spark.createDataFrame([(n, beta, r2)], schema)
+    out = local_rows(spark, [(n, beta, r2)], schema)
     return out.select(
         "n_sources",
         F.round("heaps_beta", 6).alias("heaps_beta"),

@@ -44,7 +44,9 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     # ── driver window (exactly 50; asserted by test_bench_contract) ──
     # Slots 1-7: the serving-parity keys, whose plans changed when the
     # serving endpoints began narrowing small file-scan inputs to one
-    # partition (operators/partitioning.narrow).  Changed plans earn
+    # partition (operators/partitioning.narrow), and again when their
+    # driver-built spec frames (length bins, score buckets) became
+    # LocalRelations (catalog.local_rows).  Changed plans earn
     # fresh external oracle rows.  q_dashboard_suite's ``courses``
     # section reads ``first(area)``, which is row-order dependent in
     # general but exact here: area is a function of course.

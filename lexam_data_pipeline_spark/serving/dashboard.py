@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from lexam_data_pipeline_spark.catalog import local_rows
 from lexam_data_pipeline_spark.operators.caching import persist_slot
 from lexam_data_pipeline_spark.operators.partitioning import narrow
 
@@ -84,7 +85,8 @@ def answer_length_histogram(open_answers: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("count")
     )
     spark = open_answers.sparkSession
-    spec = spark.createDataFrame(
+    spec = local_rows(
+        spark,
         [(label,) for _, _, label in ANSWER_LENGTH_BINS], "range string"
     )
     return (

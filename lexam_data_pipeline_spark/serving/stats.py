@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from lexam_data_pipeline_spark.catalog import local_rows
 from lexam_data_pipeline_spark.operators.caching import persist_slot
 from lexam_data_pipeline_spark.operators.partitioning import narrow
 
@@ -116,7 +117,8 @@ def experiment_stats(
     # experiment serves an EMPTY distribution, not 11 zero buckets
     # (round-9 verdict item 2).  The gate is a broadcast 0-or-1-row
     # aggregate, same shape as the tokens-total crossJoin below.
-    bucket_spec = ans.sparkSession.createDataFrame(
+    bucket_spec = local_rows(
+        ans.sparkSession,
         [(label,) for _, _, label in SCORE_BUCKETS], "range string"
     )
     bucket = F.least(F.floor(F.col("score") * 10), F.lit(10)).cast("int")

@@ -52,13 +52,14 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from lexam_data_pipeline_spark.catalog import local_rows
 from lexam_data_pipeline_spark.operators.caching import persist_slot
 
 LABELS_SCHEMA = "node long, cluster long"
 
 
 def _empty_labels(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], LABELS_SCHEMA)
+    return local_rows(spark, [], LABELS_SCHEMA)
 
 
 def clusters_merge(

@@ -41,6 +41,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from lexam_data_pipeline_spark.catalog import local_rows
 from lexam_data_pipeline_spark.operators.caching import persist_slot
 
 STATE_TABLES = ("q_cells", "split_counts", "split_total", "wc_hist")
@@ -57,7 +58,7 @@ _SCHEMAS = {
 
 
 def _empty(spark: SparkSession, name: str) -> DataFrame:
-    return spark.createDataFrame([], _SCHEMAS[name])
+    return local_rows(spark, [], _SCHEMAS[name])
 
 
 def _merge_sum(state: DataFrame, delta: DataFrame, keys: list[str]) -> DataFrame:
@@ -220,7 +221,8 @@ def dashboard_report(state: dict[str, DataFrame]) -> DataFrame:
         .groupBy("range")
         .agg(F.sum("n").alias("count"))
     )
-    spec = spark.createDataFrame(
+    spec = local_rows(
+        spark,
         [(label,) for _, _, label in ANSWER_LENGTH_BINS], "range string"
     )
     answer_lengths = spec.join(counted, "range", "left_outer").withColumn(

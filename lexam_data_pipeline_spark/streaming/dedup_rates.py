@@ -43,6 +43,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from lexam_data_pipeline_spark.catalog import local_rows
 from lexam_data_pipeline_spark.operators.caching import persist_slot
 
 #: must equal the batch twin's df cap (ml/dedup.q_dedup_rate_by_source)
@@ -61,7 +62,7 @@ _SCHEMAS = {
 
 
 def _empty(spark: SparkSession, name: str) -> DataFrame:
-    return spark.createDataFrame([], _SCHEMAS[name])
+    return local_rows(spark, [], _SCHEMAS[name])
 
 
 def dedup_rates_merge(

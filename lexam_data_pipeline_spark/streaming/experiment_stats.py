@@ -52,6 +52,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from lexam_data_pipeline_spark.catalog import local_rows
 from lexam_data_pipeline_spark.operators.caching import persist_slot
 from lexam_data_pipeline_spark.serving.stats import (
     SCORE_BUCKETS,
@@ -100,7 +101,7 @@ _SCHEMAS = {
 
 
 def _empty(spark: SparkSession, name: str) -> DataFrame:
-    return spark.createDataFrame([], _SCHEMAS[name])
+    return local_rows(spark, [], _SCHEMAS[name])
 
 
 def _state(
@@ -337,7 +338,8 @@ def experiment_stats_report(
         ).alias("avg_score"),
         F.round(F.lit(float(median)), 4).alias("median_score"),
     )
-    bucket_spec = spark.createDataFrame(
+    bucket_spec = local_rows(
+        spark,
         [(label,) for _, _, label in SCORE_BUCKETS], "range string"
     )
     bucket = F.least(F.floor(F.col("score") * 10), F.lit(10)).cast("int")
@@ -345,7 +347,8 @@ def experiment_stats_report(
     # emitted only when judged scores exist — the batch twin's
     # ``if scores:`` gate (ref experiment_stats.py:55-61); here the gate
     # reads the already-collected cells, no extra job
-    any_scores = spark.createDataFrame(
+    any_scores = local_rows(
+        spark,
         [(1,)] if cell_rows else [], "__has_scores int"
     )
     score_distribution = (

@@ -58,6 +58,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from lexam_data_pipeline_spark.catalog import local_rows
 from lexam_data_pipeline_spark.operators.caching import persist_slot
 
 PR_STATE_TABLES = ("edges", "ranks")
@@ -81,7 +82,7 @@ PR_TOL = 1e-9
 
 
 def _empty(spark: SparkSession, name: str) -> DataFrame:
-    return spark.createDataFrame([], _SCHEMAS[name])
+    return local_rows(spark, [], _SCHEMAS[name])
 
 
 def _get(spark, state: dict[str, DataFrame | None], name: str) -> DataFrame:

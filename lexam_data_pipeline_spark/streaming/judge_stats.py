@@ -45,6 +45,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from lexam_data_pipeline_spark.catalog import local_rows
 from lexam_data_pipeline_spark.operators.caching import persist_slot
 from lexam_data_pipeline_spark.serving.stats import flatten_compare_judges
 
@@ -63,7 +64,7 @@ _SCHEMAS = {
 
 
 def _empty(spark: SparkSession, name: str) -> DataFrame:
-    return spark.createDataFrame([], _SCHEMAS[name])
+    return local_rows(spark, [], _SCHEMAS[name])
 
 
 def _state(
@@ -227,7 +228,8 @@ def judge_stats_report(state: dict[str, DataFrame | None]) -> DataFrame:
     for r in rows:
         per_judge.setdefault(r["judge_model"], []).append((r["score"], r["n"]))
     medians = [(j, float(_median_from_cells(c))) for j, c in sorted(per_judge.items())]
-    med_df = spark.createDataFrame(
+    med_df = local_rows(
+        spark,
         medians or [], "judge_model string, median_raw double"
     )
     judges = (

@@ -42,6 +42,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from lexam_data_pipeline_spark.catalog import local_rows
 from lexam_data_pipeline_spark.operators.caching import persist_slot
 
 STATE_TABLES = ("signatures", "postings", "pairs")
@@ -60,7 +61,7 @@ def _schemas(k: int) -> dict[str, str]:
 
 
 def _empty(spark: SparkSession, name: str, k: int) -> DataFrame:
-    return spark.createDataFrame([], _schemas(k)[name])
+    return local_rows(spark, [], _schemas(k)[name])
 
 
 def minhash_merge(

@@ -7,6 +7,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from lexam_data_pipeline_spark.catalog import local_rows
+from lexam_data_pipeline_spark.model import EXPERIMENTS_SCHEMA, JUDGMENTS_SCHEMA
 from lexam_data_pipeline_spark.pipeline.experiment import (
     ConcurrentStageError,
     ExperimentRunner,
@@ -273,26 +275,101 @@ def test_stats_exclude_errored_answers(spark, t):
 
 
 def test_store_recover_after_crash_mid_swap(spark, t, tmp_path):
-    """_overwrite_atomic's swap is not crash-atomic: simulate a crash
-    between the two renames (final moved to .old, tmp never promoted)
-    and assert recover() restores the newest snapshot."""
+    """_overwrite_atomic's sink swap is not crash-atomic: simulate a crash
+    between the two renames of the judgments sink (final moved to .old,
+    tmp never promoted) and assert recover() restores the newest
+    snapshot."""
     import os
-    import shutil
 
     store = ExperimentStore(spark, str(tmp_path / "exp_store"))
-    store.save_experiment(EXPERIMENT)
-    assert store.experiments().count() == 1
+    row = (1, 2, "mock-judge", "[[1.0]]", 1.0, 3, 4, None, None)
+    store.append_judgments(local_rows(spark, [row], JUDGMENTS_SCHEMA))
+    assert store.judgments().count() == 1
 
     # crash simulation: demote live dir to .old, leave a stale .tmp
     root = store.root
     os.rename(
-        os.path.join(root, "experiments"),
-        os.path.join(root, ".experiments.old-deadbeef"),
+        os.path.join(root, "judgments"),
+        os.path.join(root, ".judgments.old-deadbeef"),
     )
-    os.makedirs(os.path.join(root, ".experiments.tmp-cafe0000"))
+    os.makedirs(os.path.join(root, ".judgments.tmp-cafe0000"))
 
-    assert store.recover("experiments") is True
-    assert store.experiments().count() == 1
-    assert not any(e.startswith(".experiments.tmp-") for e in os.listdir(root))
+    assert store.recover("judgments") is True
+    assert store.judgments().count() == 1
+    assert not any(e.startswith(".judgments.tmp-") for e in os.listdir(root))
     # idempotent when healthy
-    assert store.recover("experiments") is False
+    assert store.recover("judgments") is False
+
+
+def test_control_file_crash_leaves_live_file_intact(spark, tmp_path, monkeypatch):
+    """The control table is one JSON file replaced with os.replace: a
+    crash before the replace leaves a stale .tmp file and the old live
+    file untouched; recover() removes the stale file."""
+    import os
+
+    from lexam_data_pipeline_spark.pipeline import experiment
+
+    store = ExperimentStore(spark, str(tmp_path / "exp_store"))
+    store.save_experiment(EXPERIMENT)
+
+    def crash(src, dst):
+        raise OSError("simulated crash before the commit")
+
+    monkeypatch.setattr(experiment.os, "replace", crash)
+    with pytest.raises(OSError):
+        store.set_status(7, "generating")
+    monkeypatch.undo()
+
+    root = store.root
+    assert [e for e in os.listdir(root) if e.startswith(".experiments.tmp-")]
+    assert store.get_experiment(7)["status"] == "created"
+    assert store.experiments().count() == 1
+
+    assert store.recover("experiments") is False  # nothing to restore
+    assert not any(e.startswith(".experiments.tmp-") for e in os.listdir(root))
+    assert store.get_experiment(7)["status"] == "created"
+
+
+def test_control_table_runs_no_spark_job(spark, tmp_path, monkeypatch):
+    """save/get/set_status and the control-row delete of
+    delete_experiment are driver-side file operations: the statusTracker
+    job count does not move.  experiments() serves the rows as a
+    LocalRelation with EXPERIMENTS_SCHEMA, also without a job."""
+    sc = spark.sparkContext
+    store = ExperimentStore(spark, str(tmp_path / "exp_store"))
+    # the sinks' cascade is Spark work, measured elsewhere
+    monkeypatch.setattr(store, "delete_answers", lambda exp_id: None)
+    group = "control-table-no-jobs"
+
+    sc.setJobGroup(group, group)
+    try:
+        store.save_experiment(EXPERIMENT)
+        store.save_experiment(dict(EXPERIMENT, id=8, name="other"))
+        got = store.get_experiment(7)
+        store.set_status(7, "generated")
+        exps = store.experiments()
+        store.delete_experiment(8)
+        after = store.get_experiment(8)
+    finally:
+        sc.setJobGroup(None, None)
+    assert not (sc.statusTracker().getJobIdsForGroup(group) or [])
+
+    assert got["filter_config"] == {} and got["status"] == "created"
+    assert got["updated_at"] is None and got["temperature"] == 0.0
+    assert after is None
+    assert exps.schema == EXPERIMENTS_SCHEMA
+    assert exps._jdf.queryExecution().analyzed().getClass().getSimpleName() == (
+        "LocalRelation"
+    )
+    rows = {r["id"]: r for r in exps.collect()}
+    assert set(rows) == {7, 8}
+    assert rows[7]["status"] == "generated"
+    assert rows[7]["updated_at"] == store.get_experiment(7)["updated_at"]
+    assert [r["id"] for r in store.experiments().collect()] == [7]
+
+
+def test_save_experiment_rejects_a_mistyped_row(spark, tmp_path):
+    store = ExperimentStore(spark, str(tmp_path / "exp_store"))
+    with pytest.raises(TypeError):
+        store.save_experiment(dict(EXPERIMENT, temperature="hot"))
+    assert store.get_experiment(7) is None
