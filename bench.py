@@ -1,5 +1,7 @@
 #!/usr/bin/env python
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
+"""Benchmark harness: every registry key but
+``plans/registry.BENCH_EXCLUDED``, in registry order, at
+$SPARK_GRAFT_SF_DIR.
 
 Prints ONE JSON line:
 ``{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}``
@@ -23,43 +25,56 @@ REPO_ROOT = str(Path(__file__).resolve().parent)
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
+from lexam_data_pipeline_spark.operators.caching import release_all  # noqa: E402
 from lexam_data_pipeline_spark.plans.registry import (  # noqa: E402
-    ROUND7_KEYS,
-    ROUND8_KEYS,
-    ROUND9_KEYS,
-    ROUND10_KEYS,
+    bench_keys,
     build_queries,
 )
 from lexam_data_pipeline_spark.session import get_spark  # noqa: E402
 
-#: Headline set: every operator family with nontrivial execution cost.
-HEADLINE = [
-    "q_join_3way_agg",
-    "q_join_5way_region",
-    "q_join_enrich",
-    "q_semi_exists",
-    "q_anti_dedup",
-    "q_groupby_multi",
-    "q_pivot_status",
-    "q_count_distinct",
-    "q_agg_stats",
-    "q_histogram_bins",
-    "q_top_n",
-    "q_min_per_group",
-    "q_sort_paginate",
-    "q_conditional_agg",
-    "q_wordcount_stats",
-    "q_regex_extract",
-    "q_events_tumbling",
-    "q_sessionize",
-    "q_nest_children",
-    "q_facets_one_pass",
-    "q_rollup_total",
-    "q_window_rank",
-    "q_events_sliding",
-    "q_session_window",
-    "q_fullouter_merge",
-]
+
+def noop_write(df) -> float:
+    """Seconds to run ``df`` to the ``noop`` sink (no driver collect)."""
+    t0 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
+
+
+def settle(spark) -> None:
+    """Reset between timed queries, outside their timed windows."""
+    # Slot caches exist for WITHIN-query reuse; carrying ~30 of them
+    # across a 57-query session turns storage-memory eviction + GC
+    # churn into ±2s noise on later queries.  Release between queries
+    # (a real pipeline run would hold one query's caches, not the
+    # whole suite's).
+    release_all()
+    # A 70-query session accretes plan/broadcast/codegen garbage;
+    # left alone, the JVM pays it back as one unscheduled full GC
+    # that lands INSIDE some random query's timed window (observed:
+    # a roving 10-20 s spike hitting a different query each run).
+    # Collect deterministically between queries instead.
+    spark.sparkContext._jvm.System.gc()
+
+
+def run(spark, queries, name: str, sf_dir: str) -> float:
+    """Build and run one key to the noop sink; seconds for both."""
+    t0 = time.perf_counter()
+    noop_write(queries[name](spark, sf_dir))
+    elapsed = time.perf_counter() - t0
+    settle(spark)
+    return elapsed
+
+
+def warm_up(spark, queries, name: str, sf_dir: str) -> None:
+    """Absorb JVM start, codegen, the parquet footer cache and Python
+    worker fork-up before anything is timed."""
+    try:
+        run(spark, queries, name, sf_dir)
+    except Exception:
+        pass
+    # warm the Python/Arrow worker pool too (mapInPandas queries would
+    # otherwise pay worker fork/startup inside their timed run)
+    noop_write(spark.range(10).mapInPandas(lambda it: it, "id long"))
 
 
 def main() -> None:
@@ -69,234 +84,7 @@ def main() -> None:
     spark = get_spark(app_name="lexam-bench")
     spark.sparkContext.setLogLevel("ERROR")
     queries = build_queries()
-    names = [n for n in HEADLINE if n in queries]
-    # optional extension headliners, present once ml/ lands.  Embedding
-    # dedup is represented by the blocked (100 TB-shape) variant; the
-    # all-pairs exact twin exists for oracle verification, not headlines.
-    for extra in (
-        "q_dedup_ngram_jaccard",
-        "q_knn_bruteforce",
-        "q_minhash_lsh_pairs",
-        "q_dedup_embedding_blocked",
-        "q_curation_pipeline",
-        "q_mix_sources_balanced",
-        "q_asof_join_orders",
-        "q_range_join_events",
-        "q_decontaminate_docs",
-        "q_pack_sequences",
-        "q_repetition_stats",
-        "q_dedup_segments",
-        "q_mix_temperature",
-        "q_cube_orders",
-        "q_ntile_customers",
-        "q_lexical_rarity",
-        "q_pretrain_pipeline",
-        "q_knn_ivfpq",
-        "q_moving_avg_revenue",
-        "q_first_last_event",
-        "q_grouping_sets",
-        "q_edit_distance",
-        "q_embedding_norms",
-        "q_sentence_stats",
-        "q_chunk_overlap",
-        "q_split_assign",
-        "q_corr_stats",
-        "q_merge_upsert",
-        "q_kcore_prune",
-        "q_dataset_card",
-        "q_percentile_multi",
-        "q_date_arith",
-        "q_incremental_agg",
-        "q_knn_batch",
-        "q_quality_audit",
-        "q_bitmap_distinct",
-        "q_events_variant",
-        "q_bloom_decontaminate",
-        "q_zorder_layout",
-        "q_join_skew_salted",
-        "q_funnel_steps",
-        "q_retention_cohorts",
-        "q_containment_dedup",
-        "q_sample_weighted",
-        "q_embedding_quantize",
-        "q_heavy_hitters",
-        "q_ab_test",
-        "q_approx_quantiles",
-        "q_bm25_topk",
-        "q_hybrid_rrf",
-        "q_outlier_mad",
-        "q_winsorized_stats",
-        "q_time_decay",
-        "q_char_class_stats",
-        "q_score_normalize",
-        "q_hard_negatives",
-        "q_length_buckets",
-        "q_bpe_tokenize",
-        "q_judge_agreement",
-        "q_pr_curve",
-        "q_kfold_assign",
-        "q_hourly_anomalies",
-        "q_cooccur_lift",
-        "q_majority_vote",
-        "q_pagerank",
-        "q_outlier_mad_approx",
-        "q_skyline_pareto",
-        "q_triangle_count",
-        "q_scd2_intervals",
-        "q_event_transitions",
-        "q_gap_fill",
-        "q_chi_square",
-        "q_graph_bfs",
-        "q_snapshot_diff",
-        "q_calibration_bins",
-        "q_hll_merge_windows",
-        "q_theil_sen",
-        "q_running_distinct",
-        "q_dau_wau_stickiness",
-        "q_peak_concurrency",
-        "q_event_pattern",
-        "q_user_streaks",
-        "q_gini_revenue",
-        "q_top_paths",
-        "q_hll_intersection",
-        "q_new_vs_returning",
-        "q_customer_ltv_cohort",
-        "q_lorenz_deciles",
-        "q_session_stats",
-        "q_label_propagation",
-        "q_window_funnel",
-        "q_abandoned_carts",
-        "q_table_profile",
-        "q_table_profile_approx",
-        "q_stratified_sample",
-        "q_trimmed_mean",
-        "q_spearman_corr",
-        "q_mannwhitney",
-        "q_ks_test",
-        "q_anova_f",
-        "q_cramers_v",
-        "q_crosscorr_lagged",
-        "q_kendall_tau",
-        "q_decile_lift",
-        "q_shannon_diversity",
-        "q_bootstrap_ci",
-        "q_tukey_fences",
-        "q_polyfit_quadratic",
-        "q_cohort_retention",
-        "q_topic_keywords",
-        "q_hhi_concentration",
-        "q_price_elasticity",
-        "q_ab_sequential",
-        "q_rfm_segments",
-        "q_linear_attribution",
-        "q_mom_growth",
-        "q_survival_km",
-        "q_ewma_revenue",
-        "q_autocorr_revenue",
-        "q_cusum_changepoint",
-        "q_weighted_median",
-        "q_expectations_report",
-        "q_basket_pairs",
-        "q_holt_forecast",
-        "q_seasonal_decompose",
-        "q_benford_digits",
-        "q_percent_rank_spend",
-        "q_order_gap_stats",
-        "q_ols_regression",
-        "q_fk_discovery",
-        "q_logreg_quality",
-        "q_kmeans_clusters",
-        "q_pca_variance",
-        "q_lm_surprisal",
-        "q_semantic_dedup",
-        "q_dsir_select",
-        "q_skew_diagnostics",
-        "q_entity_resolution",
-        "q_item_similarity",
-        "q_isotonic_calibration",
-        "q_ngram_novelty",
-        "q_nb_classifier",
-        "q_column_entropy",
-        "q_mutual_information",
-        "q_ndcg_eval",
-        "q_boosted_stumps",
-        "q_js_divergence",
-        "q_split_audit",
-        "q_compression_ratio",
-        "q_random_projection",
-        "q_multimodal_features",
-        "q_course_summary",
-        "q_burstiness",
-        "q_runs_test",
-        "q_mann_kendall",
-        "q_abc_classification",
-        "q_quartile_skewness",
-        # round-7/8 keys come from the registry's single source of truth
-        *ROUND7_KEYS,
-        *ROUND8_KEYS,
-        *ROUND9_KEYS,
-        *ROUND10_KEYS,
-        # round-8 sweep: every remaining registry key gains timing
-        # visibility (round-7 verdict item 3).  The ONLY documented
-        # exclusion stays q_dedup_embedding — the all-pairs exact oracle
-        # twin of the blocked/LSH dedup paths (see the note above).
-        "q_dedup_clusters",
-        "q_dedup_clusters_two_phase",
-        "q_dedup_exact",
-        "q_dedup_keep_best",
-        "q_distinct_facet",
-        "q_doc_fingerprint",
-        "q_doc_rolling_hash",
-        "q_events_json_extract",
-        "q_events_sessionless_rate",
-        "q_filter_in",
-        "q_groupby_count",
-        "q_groupby_salted",
-        "q_hll_distinct",
-        "q_intersect_except",
-        "q_knn_ivf",
-        "q_knn_lsh",
-        "q_lang_id",
-        "q_letter_extract_roundtrip",
-        "q_pii_redact_stats",
-        "q_sample_bernoulli",
-        "q_sample_stratified",
-        "q_scan_project",
-        "q_search_contains",
-        "q_share_of_total",
-        "q_simhash_buckets",
-        "q_string_agg",
-        "q_substr_year",
-        "q_template_concat",
-        "q_text_quality",
-        "q_tfidf_top_terms",
-        "q_token_count_regex",
-        "q_unanimity",
-        "q_union_sets",
-        "q_url_dedup",
-    ):
-        if extra in queries and extra not in names:
-            names.append(extra)
-
-    from lexam_data_pipeline_spark.operators.caching import release_all
-
-    def run(name: str) -> float:
-        t0 = time.perf_counter()
-        queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        elapsed = time.perf_counter() - t0
-        # Slot caches exist for WITHIN-query reuse; carrying ~30 of them
-        # across a 57-query session turns storage-memory eviction + GC
-        # churn into ±2s noise on later queries.  Release between queries
-        # (outside the timed window — a real pipeline run would hold one
-        # query's caches, not the whole suite's).
-        release_all()
-        # A 70-query session accretes plan/broadcast/codegen garbage;
-        # left alone, the JVM pays it back as one unscheduled full GC
-        # that lands INSIDE some random query's timed window (observed:
-        # a roving 10-20 s spike hitting a different query each run).
-        # Collect deterministically between queries instead.
-        spark.sparkContext._jvm.System.gc()
-        return elapsed
+    names = bench_keys()
 
     # Optional cap for SMOKE runs only (tests/test_bench_contract.py):
     # the full set at sf0.001 outgrew the pytest subprocess timeout at
@@ -306,15 +94,7 @@ def main() -> None:
     if limit > 0:
         names = names[:limit]
 
-    try:
-        run(names[0])  # warmup: JVM + codegen + parquet footer cache
-    except Exception:
-        pass
-    # warm the Python/Arrow worker pool too (mapInPandas queries would
-    # otherwise pay worker fork/startup inside their timed run)
-    spark.range(10).mapInPandas(lambda it: it, "id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
+    warm_up(spark, queries, names[0], sf_dir)
     # One broken query must never zero out the whole round's bench
     # number — time what runs, report what broke.
     #
@@ -329,8 +109,10 @@ def main() -> None:
     errors: dict[str, str] = {}
     for name in names:
         try:
-            cold[name] = round(run(name), 4)
-            timings[name] = round(min(cold[name], run(name)), 4)
+            cold[name] = round(run(spark, queries, name, sf_dir), 4)
+            timings[name] = round(
+                min(cold[name], run(spark, queries, name, sf_dir)), 4
+            )
         except Exception as exc:  # noqa: BLE001 — keep benching
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
     total = round(sum(timings.values()), 4)

@@ -78,18 +78,14 @@ def load_table(
     break-even on this fixture is roughly >1 s of post-scan map/partial
     aggregation work (full interleaved A/B table in
     OPTIMIZATION_r11.md; e.g. Arrow codec decode 3.8→1.3 s ON, but
-    multi-scan HLL profiling 2.0→3.2 s ON).  Env override
-    ``SPARK_GRAFT_SCAN_FANOUT``: ``1`` forces fan-out for every
-    FANOUT_KEYS table (A/B tooling), ``0`` forces it off everywhere
-    (production kill-switch); unset honors the call site."""
+    multi-scan HLL profiling 2.0→3.2 s ON)."""
     # Engine-wide UTC semantics: fixture timestamps are TZ-naive and every
     # consumer (including the DuckDB oracle) treats them as wall-clock.  A
     # caller-provided session in a non-UTC zone would otherwise shift
     # year()/date_trunc() results.
     if spark.conf.get("spark.sql.session.timeZone") != "UTC":
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    mode = os.environ.get("SPARK_GRAFT_SCAN_FANOUT", "")
-    do_fan = name in FANOUT_KEYS and (mode == "1" or (mode != "0" and fan))
+    do_fan = fan and name in FANOUT_KEYS
     cache_key = (
         spark.sparkContext.applicationId,
         os.path.abspath(sf_dir),

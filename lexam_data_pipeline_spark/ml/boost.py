@@ -164,16 +164,13 @@ def q_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle applies the identical GROUP BY collapse in its ``binned``
     CTE, so an all-duplicates corpus trains on each vector counted once
     on BOTH engines rather than silently diverging (round-6 advice)."""
-    from lexam_data_pipeline_spark.operators.caching import qopt_enabled
-
     emb = load_table(spark, sf_dir, "embeddings", fan=True)
     bv = _binned_vectors(emb).persist()
-    fuse = qopt_enabled()
     try:
         stumps: list[tuple[int, int, int]] = []
         out = []
         # round r's ensemble-accuracy predicate, counted in round r+1's
-        # cells job when fusing (see below)
+        # cells job (see below)
         prev_correct: Column | None = None
         for rnd in range(1, BOOST_ROUNDS + 1):
             # w = 2^(#misclassifications so far) as a product of exact
@@ -184,17 +181,17 @@ def q_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
                     _stump_pred_pos(sf_, st, sp) != (F.col("y") == 1),
                     F.lit(2),
                 ).otherwise(F.lit(1)).cast("bigint")
-            # Action fusion (r11, SPARK_GRAFT_QOPT): the PREVIOUS
-            # round's ensemble count rides this round's cells job as one
-            # extra conditional sum — every vector contributes exactly
-            # one f==0 row to the explode, so Σ nc over f==0 cells IS
-            # the ensemble-correct count, bit-for-bit the old separate
-            # count() job.  Saves one driver action per inner round
-            # (probe: the key's cost is ~6 × ~0.6 s of actions over the
-            # tiny persisted frame, not execution).
+            # Action fusion (r11): the PREVIOUS round's ensemble count
+            # rides this round's cells job as one extra conditional sum
+            # — every vector contributes exactly one f==0 row to the
+            # explode, so Σ nc over f==0 cells IS the ensemble-correct
+            # count, bit-for-bit a separate count() job.  Saves one
+            # driver action per inner round (probe: the key's cost is
+            # ~6 × ~0.6 s of actions over the tiny persisted frame, not
+            # execution).
             sel = [wcol.alias("w"), F.col("y"), F.posexplode("bv").alias("f", "b")]
             aggs = [F.sum("w").alias("sw")]
-            if fuse and prev_correct is not None:
+            if prev_correct is not None:
                 sel.insert(0, prev_correct.cast("int").alias("pc"))
                 aggs.append(F.sum("pc").alias("nc"))
             cells = collect_bounded(
@@ -202,7 +199,7 @@ def q_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
                 BOOST_FEATURES * BOOST_BINS * 2,
                 "boosted-stumps (feature, bin, y) weight table",
             )
-            if fuse and prev_correct is not None:
+            if prev_correct is not None:
                 n_prev = sum(int(r["nc"]) for r in cells if r["f"] == 0)
                 out[-1] = out[-1][:5] + (n_prev,)
             # per-class total weight: every vector appears once per
@@ -222,14 +219,9 @@ def q_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
             for extra in votes[1:]:
                 vote_sum = vote_sum + extra
             prev_correct = (vote_sum > 0) == (F.col("y") == 1)
-            if fuse:
-                out.append((rnd, f, t, p, err, -1))  # filled next round
-            else:
-                n_correct = bv.where(prev_correct).count()
-                out.append((rnd, f, t, p, err, n_correct))
-        if fuse:
-            # the last round has no next cells job to ride — one count
-            out[-1] = out[-1][:5] + (bv.where(prev_correct).count(),)
+            out.append((rnd, f, t, p, err, -1))  # filled next round
+        # the last round has no next cells job to ride — one count
+        out[-1] = out[-1][:5] + (bv.where(prev_correct).count(),)
         return local_rows(
             spark,
             out,

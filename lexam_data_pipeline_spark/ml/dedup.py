@@ -22,15 +22,17 @@ whole-stage codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+import time
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from lexam_data_pipeline_spark.catalog import load_table
 from lexam_data_pipeline_spark.functions.text import shingle_set, tokens
 from lexam_data_pipeline_spark.operators.caching import (
     persist_slot,
-    qopt_enabled,
     register_release_hook,
 )
+from lexam_data_pipeline_spark.operators.observe import observed_within
 
 
 def _doc_shingles(docs: DataFrame) -> DataFrame:
@@ -62,8 +64,7 @@ def _rare_shingle_index(
     downstream consumers already ride AQE reuse; the materialization
     pass only added cost), while the plain Jaccard / containment /
     clusters keys measured it as a win (r11 interleaved A/Bs in
-    OPTIMIZATION_r11.md).  Kill-switch: ``SPARK_GRAFT_QOPT=0`` restores
-    the r10 recompute-per-side plan everywhere."""
+    OPTIMIZATION_r11.md)."""
     from pyspark.sql import Window
 
     ex = (
@@ -73,7 +74,7 @@ def _rare_shingle_index(
         .withColumn("n_sh", F.count("*").over(Window.partitionBy("doc_id")))
         .select("doc_id", "s", "n_sh")
     )
-    if persist and qopt_enabled():
+    if persist:
         ex = persist_slot(ex, slot)
     return ex
 
@@ -186,39 +187,28 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id_b",
         )
     )
-    if qopt_enabled():
-        # ONE pass over the qualifying pairs (guide §2.4, r11 VERDICT
-        # item 6): both outputs derive from the exploded (t10, doc)
-        # frame.  Each qualifying pair contributes exactly TWO exploded
-        # rows (doc_id_a < doc_id_b), so the sum of per-doc appearance
-        # counts div 2 IS the pair count — exact integer division on
-        # an even bigint — and the distinct-doc count is the group
-        # count of the (t10, d) pre-aggregate.  The two-branch shape
-        # below shares the candidate-join exchange via AQE runtime
-        # reuse but re-runs the pair groupBy + explode per branch and
-        # pays a join of the two 9-row outputs.
-        merged = (
-            qual.select(
-                "t10", F.explode(F.array("doc_id_a", "doc_id_b")).alias("d")
-            )
-            .groupBy("t10", "d")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .groupBy("t10")
-            .agg(
-                F.expr("sum(c) div 2").alias("n_pairs"),
-                F.count(F.lit(1)).alias("n_docs"),
-            )
+    # ONE pass over the qualifying pairs (guide §2.4, r11 VERDICT item
+    # 6): both outputs derive from the exploded (t10, doc) frame.  Each
+    # qualifying pair contributes exactly TWO exploded rows (doc_id_a <
+    # doc_id_b), so the sum of per-doc appearance counts div 2 IS the
+    # pair count — exact integer division on an even bigint — and the
+    # distinct-doc count is the group count of the (t10, d)
+    # pre-aggregate.  A two-branch shape (pair count and countDistinct,
+    # joined) shares the candidate-join exchange via AQE runtime reuse
+    # but re-runs the pair groupBy + explode per branch and pays a join
+    # of the two 9-row outputs.
+    merged = (
+        qual.select(
+            "t10", F.explode(F.array("doc_id_a", "doc_id_b")).alias("d")
         )
-    else:
-        n_pairs = qual.groupBy("t10").agg(F.count(F.lit(1)).alias("n_pairs"))
-        n_docs = (
-            qual.select(
-                "t10", F.explode(F.array("doc_id_a", "doc_id_b")).alias("d")
-            )
-            .groupBy("t10")
-            .agg(F.countDistinct("d").alias("n_docs"))
+        .groupBy("t10", "d")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .groupBy("t10")
+        .agg(
+            F.expr("sum(c) div 2").alias("n_pairs"),
+            F.count(F.lit(1)).alias("n_docs"),
         )
-        merged = n_pairs.join(n_docs, "t10")
+    )
     return (
         merged
         .select(
@@ -296,39 +286,26 @@ def cross_source_rate_report(pairs: DataFrame, srcmap: DataFrame) -> DataFrame:
             "doc_id_b",
         )
     )
-    if qopt_enabled():
-        # Same one-pass fold as q_dedup_threshold_sweep (guide §2.4):
-        # each tagged pair explodes to exactly TWO (cell, doc) rows, so
-        # per cell n_pairs = sum(per-doc counts) div 2 (exact — the sum
-        # is even by construction) and n_docs_touched = the group count
-        # of the (cell, d) pre-aggregate.  Replaces two aggregate
-        # branches over `tagged` + a cell-grid join with one pipeline.
-        merged = (
-            tagged.select(
-                "source_a",
-                "source_b",
-                F.explode(F.array("doc_id_a", "doc_id_b")).alias("d"),
-            )
-            .groupBy("source_a", "source_b", "d")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .groupBy("source_a", "source_b")
-            .agg(
-                F.expr("sum(c) div 2").alias("n_pairs"),
-                F.count(F.lit(1)).alias("n_docs_touched"),
-            )
+    # Same one-pass fold as q_dedup_threshold_sweep (guide §2.4): each
+    # tagged pair explodes to exactly TWO (cell, doc) rows, so per cell
+    # n_pairs = sum(per-doc counts) div 2 (exact — the sum is even by
+    # construction) and n_docs_touched = the group count of the (cell,
+    # d) pre-aggregate.  One pipeline instead of two aggregate branches
+    # over `tagged` plus a cell-grid join.
+    merged = (
+        tagged.select(
+            "source_a",
+            "source_b",
+            F.explode(F.array("doc_id_a", "doc_id_b")).alias("d"),
         )
-    else:
-        cells = tagged.groupBy("source_a", "source_b").agg(
-            F.count(F.lit(1)).alias("n_pairs")
+        .groupBy("source_a", "source_b", "d")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .groupBy("source_a", "source_b")
+        .agg(
+            F.expr("sum(c) div 2").alias("n_pairs"),
+            F.count(F.lit(1)).alias("n_docs_touched"),
         )
-        touched = (
-            tagged.select(
-                "source_a", "source_b", F.explode(F.array("doc_id_a", "doc_id_b")).alias("d")
-            )
-            .groupBy("source_a", "source_b")
-            .agg(F.countDistinct("d").alias("n_docs_touched"))
-        )
-        merged = cells.join(touched, ["source_a", "source_b"])
+    )
     return (
         merged
         .select(
@@ -773,6 +750,33 @@ def q_dedup_embedding_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: Seconds a connected-components round waits for its convergence
+#: metrics after the checkpoint job returned.  They normally land within
+#: milliseconds; past this bound the round recomputes them with an
+#: explicit aggregate instead of blocking forever.
+_OBSERVE_WAIT_S = 10.0
+
+
+def _checkpoint_observed(df: DataFrame, *metrics: Column) -> tuple[DataFrame, dict]:
+    """``localCheckpoint`` one round's state and return it with the
+    aggregate ``metrics`` over its rows — the solvers' convergence probe.
+
+    The metrics ride the checkpoint job as an ``Observation`` (guide §1
+    action fusion, r12): one job per round instead of checkpoint + a
+    separate aggregate job.  Observation metrics fire on
+    ``Dataset.localCheckpoint`` because it runs under ``withAction``.
+    The wait for them is bounded (:func:`observed_within`); when they do
+    not arrive, the same metrics are computed by ``agg(...).collect()``
+    over the checkpointed rows, so the round's result never depends on
+    which path delivered them."""
+    obs = Observation()
+    out = df.observe(obs, *metrics).localCheckpoint()
+    got = observed_within(obs, time.monotonic() + _OBSERVE_WAIT_S)
+    if got is None:
+        got = out.agg(*metrics).collect()[0].asDict()
+    return out, got
+
+
 def _two_phase_cc(
     edges: DataFrame, src: str, dst: str, max_rounds: int = 64
 ) -> tuple[DataFrame, int]:
@@ -824,28 +828,16 @@ def _two_phase_cc(
             .filter(F.col("a") != F.col("b"))
             .distinct()
         )
-        sig_exprs = (
+        e, got = _checkpoint_observed(
+            e_next,
             F.count(F.lit(1)).alias("n"),
             # bit_xor: order-independent set signature, can't overflow ANSI
             F.coalesce(F.bit_xor(F.xxhash64("a", "b")), F.lit(0)).alias("h"),
         )
-        if qopt_enabled():
-            # Fuse the fixpoint probe INTO the checkpoint job (guide §1
-            # action fusion, r12): the Observation computes the same
-            # (n, h) signature over the same rows while localCheckpoint
-            # materializes them — one job per round instead of two.
-            # Observation metrics fire on Dataset.localCheckpoint
-            # because it runs under withAction (verified empirically).
-            obs = Observation()
-            e_next = e_next.observe(obs, *sig_exprs).localCheckpoint()
-            sig = obs.get
-        else:
-            e_next = e_next.localCheckpoint()
-            sig = e_next.agg(*sig_exprs).collect()[0]
-        e = e_next
-        if prev_sig == (sig["n"], sig["h"]):
+        sig = (got["n"], got["h"])
+        if sig == prev_sig:
             break
-        prev_sig = (sig["n"], sig["h"])
+        prev_sig = sig
     # stars: every non-root has an edge to its root; roots label themselves
     labels = (
         e.select(F.col("a").alias("node"), F.col("b").alias("cluster"))
@@ -879,8 +871,18 @@ def connected_components(
     """
     if algorithm == "two_phase":
         labels, _rounds = _two_phase_cc(edges, src, dst)
-        return labels
-    assert algorithm == "label_propagation", algorithm
+    else:
+        assert algorithm == "label_propagation", algorithm
+        labels, _rounds = _label_propagation_cc(edges, src, dst)
+    return labels
+
+
+def _label_propagation_cc(
+    edges: DataFrame, src: str, dst: str
+) -> tuple[DataFrame, int]:
+    """Min-label propagation to the fixpoint; returns (labels, rounds),
+    rounds counting the propagation rounds after the initial labelling
+    (see :func:`connected_components`)."""
     # Persist the symmetrized edge list: every round joins against it,
     # and WITHOUT the cut each round would re-execute the full upstream
     # edge pipeline (for dedup clusters: shingling + df-cap windows +
@@ -910,29 +912,12 @@ def connected_components(
     # is strictly decreasing until the fixpoint — sum equality IS
     # convergence, with no join-back.
     _sum_expr = F.sum(F.col("cluster").cast("decimal(38,0)")).alias("s")
-
-    def _label_sum(df: DataFrame):
-        return df.agg(_sum_expr).collect()[0]["s"]
-
-    def _checkpoint_with_sum(df: DataFrame):
-        """Materialize one round's labels and return (labels, sum).
-
-        qopt shape (r12): the convergence probe rides the checkpoint
-        job as an Observation over the same rows — one job per round
-        instead of checkpoint + separate agg job (guide §1 action
-        fusion; the sum is the identical exact decimal either way).
-        """
-        if qopt_enabled():
-            obs = Observation()
-            out = df.observe(obs, _sum_expr).localCheckpoint()
-            return out, obs.get["s"]
-        out = df.localCheckpoint()
-        return out, _label_sum(out)
-
-    labels, prev_sum = _checkpoint_with_sum(
-        nodes.withColumn("cluster", F.col("node"))
+    labels, prev = _checkpoint_observed(
+        nodes.withColumn("cluster", F.col("node")), _sum_expr
     )
+    rounds = 0
     while True:
+        rounds += 1
         # min(own ∪ neighbors' labels) as ONE aggregate: push each label
         # across its edges, union the nodes' own labels, take the group
         # min.  Equivalent to the neighbor-min + left-outer-join-back
@@ -942,14 +927,15 @@ def connected_components(
         prop = sym.join(labels, sym.b == labels.node).select(
             F.col("a").alias("node"), "cluster"
         )
-        labels, new_sum = _checkpoint_with_sum(
+        labels, new = _checkpoint_observed(
             prop.unionByName(labels.select("node", "cluster"))
             .groupBy("node")
-            .agg(F.min("cluster").alias("cluster"))
+            .agg(F.min("cluster").alias("cluster")),
+            _sum_expr,
         )
-        if new_sum == prev_sum:
-            return labels
-        prev_sum = new_sum
+        if new["s"] == prev["s"]:
+            return labels, rounds
+        prev = new
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -36,19 +36,9 @@ def register_release_hook(fn: Callable[[], None]) -> None:
         _RELEASE_HOOKS.append(fn)
 
 
-def qopt_enabled() -> bool:
-    """Round-11 query-shape optimizations (action fusion via slot
-    persists — see OPTIMIZATION_r11.md).  ``SPARK_GRAFT_QOPT=0`` forces
-    the pre-optimization shapes everywhere: the A/B hook for the
-    interleaved measurement protocol and a production kill-switch, the
-    same pattern as ``SPARK_GRAFT_SCAN_FANOUT``.  Read at call time so
-    one session can interleave both variants."""
-    return os.environ.get("SPARK_GRAFT_QOPT", "") != "0"
-
-
 #: Analyzed-DataFrame memo for ACTION-FREE query constructions, keyed on
-#: (application id, sf_dir, key name, scan-fanout mode) — the
-#: catalog._TABLE_CACHE pattern lifted to whole queries.  Eligible keys
+#: (application id, sf_dir, key name) — the catalog._TABLE_CACHE
+#: pattern lifted to whole queries.  Eligible keys
 #: (plans/registry.MEMO_SAFE_KEYS) run ZERO Spark jobs at construction
 #: (asserted by tests/test_plan_memo.py), so the memo caches a PLAN and
 #: nothing else: no persisted data, no collected values — every
@@ -57,9 +47,7 @@ def qopt_enabled() -> bool:
 #: several keys spend 1-5 s per call on Catalyst analysis of large
 #: deterministic expression trees (q_random_projection ~4.6 s,
 #: q_experiment_stats ~1.8 s); re-planning an identical tree per call is
-#: pure driver waste at any scale.  ``SPARK_GRAFT_QOPT=0`` bypasses the
-#: memo (A/B hook + kill-switch, same as every r11/r12 query-shape
-#: change).
+#: pure driver waste at any scale.
 _PLAN_MEMO: dict[tuple, DataFrame] = {}
 
 
@@ -68,14 +56,7 @@ def memoize_plan(name: str, fn):
     builder with the analyzed-plan memo."""
 
     def wrapped(spark, sf_dir):
-        if not qopt_enabled():
-            return fn(spark, sf_dir)
-        key = (
-            spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir),
-            name,
-            os.environ.get("SPARK_GRAFT_SCAN_FANOUT", ""),
-        )
+        key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
         df = _PLAN_MEMO.get(key)
         if df is None:
             df = fn(spark, sf_dir)

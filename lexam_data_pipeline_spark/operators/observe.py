@@ -62,38 +62,8 @@ class PipelineAudit:
         deadline = time.monotonic() + timeout_s
         out: dict[str, dict | None] = {}
         for name, obs in self._gates.items():
-            out[name] = self._get_within(obs, deadline)
+            out[name] = observed_within(obs, deadline)
         return out
-
-    @staticmethod
-    def _get_within(obs: Observation, deadline: float) -> dict | None:
-        """Fetch one observation's metrics, bounded by ``deadline``.
-
-        Preferred path polls the observation's JVM future — a private
-        attribute (``Observation._jo``) stable across the PySpark
-        3.3→4.x line but still internal, so any AttributeError/py4j
-        surprise degrades to racing the blocking ``Observation.get``
-        against the deadline on a daemon thread (daemon so a
-        never-executed subtree can't pin interpreter exit) instead of
-        raising or silently stalling every ``report()``.
-        """
-        import time
-
-        try:
-            jo = obs._jo
-            while not (jo is not None and jo.future().isCompleted()):
-                if time.monotonic() >= deadline:
-                    return None
-                time.sleep(0.05)
-            return dict(obs.get)
-        except Exception:
-            import threading
-
-            box: list[dict] = []
-            t = threading.Thread(target=lambda: box.append(dict(obs.get)), daemon=True)
-            t.start()
-            t.join(timeout=max(0.0, deadline - time.monotonic()))
-            return box[0] if box else None
 
     def retention(
         self, upstream: str, downstream: str, timeout_s: float = 5.0
@@ -104,3 +74,39 @@ class PipelineAudit:
         if not up or not down or not up.get("rows"):
             return None
         return down["rows"] / up["rows"]
+
+
+def observed_within(obs: Observation, deadline: float) -> dict | None:
+    """Fetch one observation's metrics, or ``None`` once ``deadline``
+    (a ``time.monotonic()`` value) passes — ``Observation.get`` itself
+    blocks forever on a subtree no action executed.
+
+    Preferred path polls the observation's JVM future — a private
+    attribute (``Observation._jo``) stable across the PySpark
+    3.3→4.x line but still internal, so any AttributeError/py4j
+    surprise degrades to racing the blocking ``Observation.get``
+    against the deadline on a daemon thread (daemon so a
+    never-executed subtree can't pin interpreter exit) instead of
+    raising or silently stalling the caller.
+    """
+    import time
+
+    try:
+        jo = obs._jo
+        # metrics usually land within milliseconds of the action: poll
+        # fast first, backing off to 50 ms
+        pause = 0.001
+        while not (jo is not None and jo.future().isCompleted()):
+            if time.monotonic() >= deadline:
+                return None
+            time.sleep(pause)
+            pause = min(2 * pause, 0.05)
+        return dict(obs.get)
+    except Exception:
+        import threading
+
+        box: list[dict] = []
+        t = threading.Thread(target=lambda: box.append(dict(obs.get)), daemon=True)
+        t.start()
+        t.join(timeout=max(0.0, deadline - time.monotonic()))
+        return box[0] if box else None

@@ -31,7 +31,6 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from lexam_data_pipeline_spark.catalog import load_table, local_rows
-from lexam_data_pipeline_spark.operators.caching import qopt_enabled
 from lexam_data_pipeline_spark.operators.guards import collect_bounded
 
 #: Ceiling for driver-side sufficient-statistic cell tables (category ×
@@ -5574,7 +5573,7 @@ def q_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     ry = _doubled_avg_ranks(li, ["flag"], "price").select(
         "flag", "price", F.col("r2").alias("ry2")
     )
-    fact = _li(qopt_enabled())
+    fact = _li(True)
     joined = fact.join(rx, ["flag", "qty"]).join(ry, ["flag", "price"])
     # operands cast to decimal(18,0) BEFORE multiplying: doubled ranks
     # reach ~4e11 at 100 TB row counts, so a BIGINT product would wrap
@@ -7036,46 +7035,38 @@ def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keys; the scale probe owns it)
     d12 = F.col("tot").cast("decimal(12,0)")
     tie_agg = per_v.agg(F.sum(d12 * d12 * d12 - F.col("tot")).alias("t3t"))
-    if qopt_enabled():
-        # ONE driver action instead of two: union the per-segment rank
-        # sums with the 1-row tie term (NULL-marked), so both branches
-        # run in a single job where AQE's runtime exchange reuse shares
-        # the per_vs cell subtree — the unfused shape re-ran the fact
-        # scan + cell aggregate once per action (r11 probe: 2 × ~1.7 s
-        # of construct-time actions against ~0.4 s of everything else).
-        # Explicit __tie marker, NOT segment-nullness (r11 ADVICE): a
-        # NULL c_mktsegment group would otherwise be misread as the tie
-        # row and silently dropped from `groups` — latent only (the
-        # fixture has no NULL segments), but the discriminator should
-        # not depend on data values.
-        unioned = collect_bounded(
-            seg_agg.select(
-                F.lit(False).alias("__tie"),
-                "segment",
-                F.col("ng").cast("bigint").alias("ng"),
-                F.col("r2s").cast("decimal(38,0)").alias("r2s"),
-                F.lit(None).cast("decimal(38,0)").alias("t3t"),
-            ).unionByName(
-                tie_agg.select(
-                    F.lit(True).alias("__tie"),
-                    F.lit(None).cast("string").alias("segment"),
-                    F.lit(None).cast("bigint").alias("ng"),
-                    F.lit(None).cast("decimal(38,0)").alias("r2s"),
-                    F.col("t3t").cast("decimal(38,0)").alias("t3t"),
-                )
-            ),
-            _MAX_CELL_ROWS + 1,
-            "q_kruskal_wallis per-segment rank sums",
-        )
-        groups = [r for r in unioned if not r["__tie"]]
-        tie_row = next(r for r in unioned if r["__tie"])
-    else:
-        groups = collect_bounded(
-            seg_agg,
-            _MAX_CELL_ROWS,
-            "q_kruskal_wallis per-segment rank sums",
-        )
-        tie_row = tie_agg.collect()[0]
+    # ONE driver action instead of two: union the per-segment rank
+    # sums with the 1-row tie term (NULL-marked), so both branches
+    # run in a single job where AQE's runtime exchange reuse shares
+    # the per_vs cell subtree — the unfused shape re-ran the fact
+    # scan + cell aggregate once per action (r11 probe: 2 × ~1.7 s
+    # of construct-time actions against ~0.4 s of everything else).
+    # Explicit __tie marker, NOT segment-nullness (r11 ADVICE): a
+    # NULL c_mktsegment group would otherwise be misread as the tie
+    # row and silently dropped from `groups` — latent only (the
+    # fixture has no NULL segments), but the discriminator should
+    # not depend on data values.
+    unioned = collect_bounded(
+        seg_agg.select(
+            F.lit(False).alias("__tie"),
+            "segment",
+            F.col("ng").cast("bigint").alias("ng"),
+            F.col("r2s").cast("decimal(38,0)").alias("r2s"),
+            F.lit(None).cast("decimal(38,0)").alias("t3t"),
+        ).unionByName(
+            tie_agg.select(
+                F.lit(True).alias("__tie"),
+                F.lit(None).cast("string").alias("segment"),
+                F.lit(None).cast("bigint").alias("ng"),
+                F.lit(None).cast("decimal(38,0)").alias("r2s"),
+                F.col("t3t").cast("decimal(38,0)").alias("t3t"),
+            )
+        ),
+        _MAX_CELL_ROWS + 1,
+        "q_kruskal_wallis per-segment rank sums",
+    )
+    groups = [r for r in unioned if not r["__tie"]]
+    tie_row = next(r for r in unioned if r["__tie"])
     if not groups:
         out = local_rows(
             spark,

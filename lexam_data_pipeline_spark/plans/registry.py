@@ -117,47 +117,6 @@ DRIVER_PRIORITY: tuple[str, ...] = (
 )
 
 
-#: the 26 keys introduced in round 7 — slots 1-26 of the window above.
-#: bench.py and tools/scale_probe.py consume THIS tuple instead of
-#: hand-copied lists, so a new key cannot ship unbenched/unprobed
-#: (round-7 review); tests/test_round7_operators.py asserts membership.
-ROUND7_KEYS: tuple[str, ...] = (
-    "q_kruskal_wallis", "q_wilcoxon_signed_rank", "q_brown_forsythe",
-    "q_zipf_fit", "q_confusion_report", "q_mcnemar_test",
-    "q_embedding_drift", "q_heaps_law", "q_cochrans_q",
-    "q_embedding_outliers", "q_dedup_threshold_sweep", "q_welch_ttest",
-    "q_cliffs_delta", "q_hellinger_distance", "q_friedman_test",
-    "q_fleiss_kappa", "q_silhouette_labels", "q_davies_bouldin",
-    "q_mrr_eval", "q_readability", "q_cuped_adjustment", "q_vocab_overlap",
-    "q_dedup_rate_by_source", "q_ab_power", "q_sampling_bias_audit",
-    "q_cluster_size_dist",
-)
-
-#: the keys introduced in round 8 (the round-8 window's slots 1-3 —
-#: now literal, since the round-9 window rotated them out).
-ROUND8_KEYS: tuple[str, ...] = (
-    "q_questions_page",
-    "q_search_top_courses",
-    "q_dashboard_suite",
-)
-
-#: the keys introduced in round 9 (the round-9 window's slots 1-2 —
-#: now literal, since the round-10 window rotated them out).
-ROUND9_KEYS: tuple[str, ...] = (
-    "q_experiment_stats",
-    "q_compare_judges",
-)
-
-#: the keys with NEW driver evidence in round 10 (the round-10 window's
-#: slots 1-2 — now literal, since the round-11 window rotated onto the
-#: fan-out-touched keys; q_experiment_stats_empty was genuinely new,
-#: q_pagerank's hash-match oracle replaced its rows-only row).
-ROUND10_KEYS: tuple[str, ...] = (
-    "q_experiment_stats_empty",
-    "q_pagerank",
-)
-
-
 #: Keys whose construction is ACTION-FREE (zero Spark jobs — asserted by
 #: tests/test_plan_memo.py) and costs ≥0.4 s of driver-side Catalyst
 #: analysis per call (r12 steady-state construct audit,
@@ -165,11 +124,11 @@ ROUND10_KEYS: tuple[str, ...] = (
 #: operators.caching.memoize_plan: repeated construction in one session
 #: returns the already-analyzed DataFrame instead of re-planning an
 #: identical tree.  Plan-only — no data or collected values are cached,
-#: so every execution still computes from parquet; SPARK_GRAFT_QOPT=0
-#: bypasses.  Keys with construct-time driver actions (kruskal, boosted,
-#: the iterative graph/CC keys) are deliberately NOT eligible: memoizing
-#: them would freeze collected aggregates across calls, which is result
-#: caching, not plan caching.
+#: so every execution still computes from parquet.  Keys with
+#: construct-time driver actions (kruskal, boosted, the iterative
+#: graph/CC keys) are deliberately NOT eligible: memoizing them would
+#: freeze collected aggregates across calls, which is result caching,
+#: not plan caching.
 MEMO_SAFE_KEYS: tuple[str, ...] = (
     "q_bloom_decontaminate",
     "q_cochrans_q",
@@ -223,6 +182,18 @@ def build_queries() -> dict[str, QueryFn]:
         k: (memoize_plan(k, fn) if k in MEMO_SAFE_KEYS else fn)
         for k, fn in ordered.items()
     }
+
+
+#: Registry keys bench.py does not time: the all-pairs exact oracle twin
+#: of the blocked / LSH embedding-dedup keys, which are timed instead.
+BENCH_EXCLUDED: tuple[str, ...] = ("q_dedup_embedding",)
+
+
+def bench_keys() -> list[str]:
+    """The keys bench.py times (and tools/scale_probe.py probes):
+    registry order minus :data:`BENCH_EXCLUDED` — the only key list
+    either tool uses, so a new key cannot ship untimed."""
+    return [k for k in build_queries() if k not in BENCH_EXCLUDED]
 
 
 def build_oracles() -> dict[str, str]:

@@ -29,7 +29,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
-from lexam_data_pipeline_spark.operators.caching import persist_slot, qopt_enabled
+from lexam_data_pipeline_spark.operators.caching import persist_slot
 from lexam_data_pipeline_spark.operators.partitioning import narrow
 from lexam_data_pipeline_spark.operators.filters import (
     VARIANT_LIST_FIELDS,
@@ -125,63 +125,58 @@ def questions_page(
     # safe (a cache hint recomputes deterministically); only the reuse
     # vanishes.  Key the slot per request id if concurrent serving
     # ever enters scope.
-    hold = qopt_enabled()
-    base = persist_slot(base, "serving.questions.page_base") if hold else base.persist()
-    try:
-        total = base.count()
+    base = persist_slot(base, "serving.questions.page_base")
+    total = base.count()
 
-        if sort_by in VARIANT_SORT_COLUMNS:
-            # J3: correlated scalar subquery min(config|split) per question
-            keys = variants.groupBy("question_id").agg(F.min(sort_by).alias("__sort"))
-            sortable = base.join(
-                keys.withColumnRenamed("question_id", "id"), "id", "left_outer"
-            )
-            sort_col = F.col("__sort")
-        else:
-            sortable = base
-            sort_col = F.col(sort_by)
-        ordered = sortable.orderBy(
-            sort_col.desc_nulls_last() if sort_dir == "desc" else sort_col.asc_nulls_last(),
-            F.col("id").asc(),
+    if sort_by in VARIANT_SORT_COLUMNS:
+        # J3: correlated scalar subquery min(config|split) per question
+        keys = variants.groupBy("question_id").agg(F.min(sort_by).alias("__sort"))
+        sortable = base.join(
+            keys.withColumnRenamed("question_id", "id"), "id", "left_outer"
         )
-        page = ordered.offset(offset).limit(limit)
+        sort_col = F.col("__sort")
+    else:
+        sortable = base
+        sort_col = F.col(sort_by)
+    ordered = sortable.orderBy(
+        sort_col.desc_nulls_last() if sort_dir == "desc" else sort_col.asc_nulls_last(),
+        F.col("id").asc(),
+    )
+    page = ordered.offset(offset).limit(limit)
 
-        # J2: nest this page's variants. The page is ≤200 rows → broadcast
-        # it into the variants scan instead of shuffling all variants.
-        page_variants = variants.join(
-            F.broadcast(page.select(F.col("id").alias("question_id"))), "question_id", "inner"
-        )
-        nested = page_variants.groupBy("question_id").agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(  # id first → array_sort orders by variant id
-                        "id", "config", "split", "choices", "gold", "answer"
-                    )
+    # J2: nest this page's variants. The page is ≤200 rows → broadcast
+    # it into the variants scan instead of shuffling all variants.
+    page_variants = variants.join(
+        F.broadcast(page.select(F.col("id").alias("question_id"))), "question_id", "inner"
+    )
+    nested = page_variants.groupBy("question_id").agg(
+        F.array_sort(
+            F.collect_list(
+                F.struct(  # id first → array_sort orders by variant id
+                    "id", "config", "split", "choices", "gold", "answer"
                 )
-            ).alias("variants")
-        )
-        rows = (
-            page.join(
-                F.broadcast(nested.withColumnRenamed("question_id", "id")), "id", "left_outer"
             )
-            .withColumn(
-                "variants",
-                F.coalesce(F.col("variants"), F.array().cast(nested.schema["variants"].dataType)),
-            )
+        ).alias("variants")
+    )
+    rows = (
+        page.join(
+            F.broadcast(nested.withColumnRenamed("question_id", "id")), "id", "left_outer"
         )
-        # the nesting join does not preserve page order; restore it on the
-        # same key (variant-derived keys rode along as __sort)
-        key = F.col(sort_by) if sort_by in QUESTION_SORT_COLUMNS else F.col("__sort")
-        rows = rows.orderBy(
-            key.desc_nulls_last() if sort_dir == "desc" else key.asc_nulls_last(),
-            F.col("id").asc(),
+        .withColumn(
+            "variants",
+            F.coalesce(F.col("variants"), F.array().cast(nested.schema["variants"].dataType)),
         )
-        if sort_by in VARIANT_SORT_COLUMNS:
-            rows = rows.drop("__sort")
-        return QuestionsPage(total=total, rows=rows)
-    finally:
-        if not hold:
-            base.unpersist()
+    )
+    # the nesting join does not preserve page order; restore it on the
+    # same key (variant-derived keys rode along as __sort)
+    key = F.col(sort_by) if sort_by in QUESTION_SORT_COLUMNS else F.col("__sort")
+    rows = rows.orderBy(
+        key.desc_nulls_last() if sort_dir == "desc" else key.asc_nulls_last(),
+        F.col("id").asc(),
+    )
+    if sort_by in VARIANT_SORT_COLUMNS:
+        rows = rows.drop("__sort")
+    return QuestionsPage(total=total, rows=rows)
 
 
 def top_courses_for_search(

@@ -256,6 +256,46 @@ def test_two_phase_cc_matches_label_propagation(spark):
     assert lp == tp
 
 
+def test_cc_solvers_fall_back_when_round_metrics_never_arrive(spark, monkeypatch):
+    """Each CC round reads its convergence metrics from an Observation on
+    the checkpoint job.  When they never arrive, the round must not
+    block: both solvers recompute the metrics with an explicit aggregate
+    and end with the same labels after the same number of rounds."""
+    from lexam_data_pipeline_spark.ml import dedup
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(10, 15)]
+        + [(20, v) for v in (21, 22, 23)]
+        + [(30, 31), (31, 32), (32, 30)],
+        ["src", "dst"],
+    )
+
+    def solve():
+        out = {}
+        for solver in (dedup._label_propagation_cc, dedup._two_phase_cc):
+            labels, rounds = solver(edges, "src", "dst")
+            out[solver.__name__] = (
+                sorted((r["node"], r["cluster"]) for r in labels.collect()),
+                rounds,
+            )
+        return out
+
+    observed = solve()
+    waits = []
+
+    def never_arrives(obs, deadline):
+        waits.append(deadline)
+        return None
+
+    monkeypatch.setattr(dedup, "observed_within", never_arrives)
+    assert solve() == observed
+    # every checkpoint took the fallback: LPA's initial labelling plus
+    # one per round, and one per two-phase round
+    lp_rounds = observed["_label_propagation_cc"][1]
+    tp_rounds = observed["_two_phase_cc"][1]
+    assert len(waits) == lp_rounds + 1 + tp_rounds
+
+
 def test_minhash_estimates_jaccard_within_bound(spark):
     """The estimator property itself: signature-agreement rate must
     approximate the true shingle Jaccard.  k=64 permutations give a

@@ -91,7 +91,7 @@ class TestPipelineAudit:
         instead of hanging."""
         import time
 
-        from lexam_data_pipeline_spark.operators.observe import PipelineAudit
+        from lexam_data_pipeline_spark.operators.observe import observed_within
 
         class FakeObs:
             @property
@@ -102,7 +102,7 @@ class TestPipelineAudit:
             def get(self):
                 return {"rows": 7}
 
-        assert PipelineAudit._get_within(FakeObs(), time.monotonic() + 1.0) == {"rows": 7}
+        assert observed_within(FakeObs(), time.monotonic() + 1.0) == {"rows": 7}
 
         class NeverObs:
             @property
@@ -115,5 +115,5 @@ class TestPipelineAudit:
                 return {}
 
         t0 = time.monotonic()
-        assert PipelineAudit._get_within(NeverObs(), time.monotonic() + 0.3) is None
+        assert observed_within(NeverObs(), time.monotonic() + 0.3) is None
         assert time.monotonic() - t0 < 2.0

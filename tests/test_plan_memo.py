@@ -26,8 +26,7 @@ def warm_queries(spark, sf_small):
     return build_queries()
 
 
-def test_memo_safe_keys_construct_without_jobs(spark, sf_small, warm_queries, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_QOPT", raising=False)
+def test_memo_safe_keys_construct_without_jobs(spark, sf_small, warm_queries):
     sc = spark.sparkContext
     for i, key in enumerate(MEMO_SAFE_KEYS):
         _PLAN_MEMO.clear()
@@ -40,21 +39,17 @@ def test_memo_safe_keys_construct_without_jobs(spark, sf_small, warm_queries, mo
     _PLAN_MEMO.clear()
 
 
-def test_memo_returns_same_object_and_kill_switch(spark, sf_small, warm_queries, monkeypatch):
+def test_memo_returns_same_object_and_kill_switch(spark, sf_small, warm_queries):
+    # the memo has no kill-switch any more; the test keeps its name
     key = MEMO_SAFE_KEYS[0]
-    monkeypatch.delenv("SPARK_GRAFT_QOPT", raising=False)
     _PLAN_MEMO.clear()
     a = warm_queries[key](spark, sf_small)
     b = warm_queries[key](spark, sf_small)
     assert a is b, "second construction should hit the memo"
-    monkeypatch.setenv("SPARK_GRAFT_QOPT", "0")
-    c = warm_queries[key](spark, sf_small)
-    assert c is not a, "kill-switch must bypass the memo"
     _PLAN_MEMO.clear()
 
 
-def test_memo_is_scoped_per_sf_dir(spark, sf_small, sf_oracle, warm_queries, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_QOPT", raising=False)
+def test_memo_is_scoped_per_sf_dir(spark, sf_small, sf_oracle, warm_queries):
     _PLAN_MEMO.clear()
     key = "q_fleiss_kappa"
     a = warm_queries[key](spark, sf_small)
@@ -63,14 +58,12 @@ def test_memo_is_scoped_per_sf_dir(spark, sf_small, sf_oracle, warm_queries, mon
     _PLAN_MEMO.clear()
 
 
-def test_memoized_results_match_fresh_construction(spark, sf_small, warm_queries, monkeypatch):
+def test_memoized_results_match_fresh_construction(spark, sf_small, warm_queries):
     # memo hit must serve the identical rows a fresh construction computes
     key = "q_experiment_stats"
-    monkeypatch.delenv("SPARK_GRAFT_QOPT", raising=False)
     _PLAN_MEMO.clear()
     warm_queries[key](spark, sf_small)  # populate
     memo_pd = warm_queries[key](spark, sf_small).toPandas()
-    monkeypatch.setenv("SPARK_GRAFT_QOPT", "0")
-    fresh_pd = warm_queries[key](spark, sf_small).toPandas()
+    fresh_pd = warm_queries[key].__wrapped__(spark, sf_small).toPandas()
     assert memo_pd.equals(fresh_pd)
     _PLAN_MEMO.clear()

@@ -1,7 +1,6 @@
 """Round-10 additions: the /stats zero-scores edge key
 (q_experiment_stats_empty), the fixed-point oracle upgrade for
-q_pagerank, the driver window rotation onto the 48 r5-stale keys, and
-the bench/probe wiring.
+q_pagerank and the driver window rotation onto the 48 r5-stale keys.
 
 Value-level parity for both window-leading keys is proven by the oracle
 sweep (tools/parity_sweep.py — hash-match at sf0.001/sf0.01/sf0.1) and
@@ -12,55 +11,33 @@ the zero-scores payload)."""
 
 from __future__ import annotations
 
-from pathlib import Path
-
 import pytest
 
 from lexam_data_pipeline_spark.plans.registry import (
     DRIVER_PRIORITY,
-    ROUND10_KEYS,
     build_oracles,
     build_queries,
 )
 
-REPO = Path(__file__).resolve().parent.parent
-
 
 def test_round10_window_layout():
-    """ROUND10_KEYS froze to a literal when the round-11 window rotated
-    onto the fan-out-touched keys (same pattern as ROUND8/ROUND9_KEYS).
-    q_pagerank held a window slot through r11 (its plan changed that
-    round) and earned fresh driver rows in r10 AND r11; the r12 window
+    """The round-10 keys rotated out of the window when the round-11
+    window moved onto the fan-out-touched keys.  q_pagerank held a
+    window slot through r11 (its plan changed that round) and earned
+    fresh driver rows in r10 AND r11; the r12 window
     (tests/test_round12_window.py) rotates it out for the r6/r7-stale
     freshness cohort."""
-    assert ROUND10_KEYS == ("q_experiment_stats_empty", "q_pagerank")
     assert len(DRIVER_PRIORITY) == 50
 
 
 def test_round10_keys_registered_with_oracles():
     q, o = build_queries(), build_oracles()
-    for k in ROUND10_KEYS:
+    for k in ("q_experiment_stats_empty", "q_pagerank"):
         assert k in q, k
         assert k in o, f"{k} must be oracle-hash-checked, not rows-only"
     # the q_pagerank upgrade: previously the flagship rows-only row —
     # the whole point of round-9 verdict item 6 is that it is now oracled
     assert "q_pagerank" in o
-
-
-def test_round10_keys_are_benched_and_probed():
-    import importlib.util
-
-    bench_src = (REPO / "bench.py").read_text()
-    probe_src = (REPO / "tools" / "scale_probe.py").read_text()
-    assert "*ROUND10_KEYS" in bench_src
-    assert "*ROUND10_KEYS" in probe_src
-    spec = importlib.util.spec_from_file_location(
-        "scale_probe", REPO / "tools" / "scale_probe.py"
-    )
-    sp = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(sp)
-    assert set(ROUND10_KEYS) <= set(sp.PROBES)
-    assert len(sp.PROBES) == len(set(sp.PROBES)), "probe list must dedup"
 
 
 # ── the zero-scores /stats edge (ref experiment_stats.py:51-61,87-89) ──────

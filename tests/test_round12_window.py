@@ -131,9 +131,8 @@ def test_fan_sites_match_touched_keys():
     expected = (
         (set(FAN_TOUCHED_KEYS) - graph_via_sparsifier)
         | {"copurchase_mutual_topk"}
-        # round-11 batch 2: the moment-pass branch fan (fan=fan, gated
-        # by qopt_enabled) inside q_spearman_corr — see
-        # OPTIMIZATION_r11.md
+        # round-11 batch 2: the moment-pass branch fan inside
+        # q_spearman_corr — see OPTIMIZATION_r11.md
         | {"q_spearman_corr"}
     )
     assert owners == expected, owners ^ expected

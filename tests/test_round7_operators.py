@@ -556,26 +556,3 @@ def test_embedding_quant_scale_pinned_everywhere():
     ):
         assert lit in CORE_ORACLES[k], f"oracle {k} quantizes at a different scale"
         assert lit in SQL_QUERIES[k], f"SQL port {k} quantizes at a different scale"
-
-
-def test_round7_keys_are_benched_and_probed():
-    """Every round-7 key must reach the bench and the scale probe via
-    the registry's single exported tuple — a new key can no longer ship
-    unbenched/unprobed by forgetting a hand-copied list entry."""
-    import importlib.util
-    from pathlib import Path
-
-    from lexam_data_pipeline_spark.plans.registry import ROUND7_KEYS
-
-    assert len(ROUND7_KEYS) == 26
-    repo = Path(__file__).resolve().parent.parent
-    probe_src = (repo / "tools" / "scale_probe.py").read_text()
-    bench_src = (repo / "bench.py").read_text()
-    assert "*ROUND7_KEYS" in probe_src
-    assert "*ROUND7_KEYS" in bench_src
-    spec = importlib.util.spec_from_file_location(
-        "scale_probe", repo / "tools" / "scale_probe.py"
-    )
-    sp = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(sp)
-    assert set(ROUND7_KEYS) <= set(sp.PROBES)

@@ -13,8 +13,9 @@ from __future__ import annotations
 from pathlib import Path
 
 from lexam_data_pipeline_spark.plans.registry import (
+    BENCH_EXCLUDED,
     DRIVER_PRIORITY,
-    ROUND8_KEYS,
+    bench_keys,
     build_oracles,
     build_queries,
 )
@@ -27,51 +28,38 @@ def test_round8_window_layout():
     window rotated them out (their driver rows are archived in
     CORRECTNESS_r08.json; slot assertions live in test_round9_operators
     now)."""
-    assert ROUND8_KEYS == (
-        "q_questions_page",
-        "q_search_top_courses",
-        "q_dashboard_suite",
-    )
     assert len(DRIVER_PRIORITY) == 50
 
 
 def test_round8_keys_registered_with_oracles():
     q, o = build_queries(), build_oracles()
-    for k in ROUND8_KEYS:
+    for k in ("q_questions_page", "q_search_top_courses", "q_dashboard_suite"):
         assert k in q, k
         assert k in o, f"{k} must be oracle-hash-checked, not rows-only"
     # registration order still leads with the current driver window
     assert list(q)[:50] == list(DRIVER_PRIORITY)
 
 
-def test_round8_keys_are_benched_and_probed():
-    bench_src = (REPO / "bench.py").read_text()
-    probe_src = (REPO / "tools" / "scale_probe.py").read_text()
-    assert "*ROUND8_KEYS" in bench_src
-    assert "*ROUND8_KEYS" in probe_src
-
-
 def test_bench_covers_every_key_but_the_declared_exclusion():
-    """No registry key ships without timing visibility (verdict item 3);
-    the one documented exclusion is the all-pairs oracle twin."""
+    """No registry key ships without timing visibility (verdict item 3):
+    bench.py and the scale probe both take their key list from
+    ``bench_keys()``, which drops only the declared exclusion (the
+    all-pairs oracle twin)."""
+    import importlib.util
     import re
 
-    from lexam_data_pipeline_spark.plans.registry import (
-        ROUND7_KEYS,
-        ROUND9_KEYS,
-        ROUND10_KEYS,
-    )
+    import bench
 
-    src = (REPO / "bench.py").read_text()
-    benched = (
-        set(re.findall(r'"(q_\w+)"', src))
-        | set(ROUND7_KEYS)
-        | set(ROUND8_KEYS)
-        | set(ROUND9_KEYS)
-        | set(ROUND10_KEYS)
+    assert set(build_queries()) - set(bench_keys()) == set(BENCH_EXCLUDED)
+    assert bench.bench_keys is bench_keys
+    # no hand-copied key list left beside it
+    assert not re.search(r'"q_\w+"', (REPO / "bench.py").read_text())
+    spec = importlib.util.spec_from_file_location(
+        "scale_probe", REPO / "tools" / "scale_probe.py"
     )
-    missing = sorted(set(build_queries()) - benched)
-    assert missing == ["q_dedup_embedding"], missing
+    sp = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(sp)
+    assert sp.PROBES == bench_keys()
 
 
 def test_questions_page_contract(spark, sf_small):

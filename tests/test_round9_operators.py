@@ -1,7 +1,7 @@
 """Round-9 additions: the experiment-stats serving composites
 (q_experiment_stats, q_compare_judges) on the deterministic
-answers/judgments fixture projection, the driver window rotation onto
-the 48 r4-stale keys, and the bench/probe wiring.
+answers/judgments fixture projection and the driver window rotation
+onto the 48 r4-stale keys.
 
 Value-level parity for the two new keys is proven by the oracle sweep
 (tools/parity_sweep.py — hash-match at sf0.001/sf0.01/sf0.1); these
@@ -13,18 +13,13 @@ self-consistency definition).
 
 from __future__ import annotations
 
-from pathlib import Path
-
 import pytest
 
 from lexam_data_pipeline_spark.plans.registry import (
     DRIVER_PRIORITY,
-    ROUND9_KEYS,
     build_oracles,
     build_queries,
 )
-
-REPO = Path(__file__).resolve().parent.parent
 
 
 def test_round9_window_layout():
@@ -32,30 +27,14 @@ def test_round9_window_layout():
     window rotated them out (their driver rows are archived in
     CORRECTNESS_r09.json; slot assertions live in test_round10_operators
     now)."""
-    assert ROUND9_KEYS == ("q_experiment_stats", "q_compare_judges")
     assert len(DRIVER_PRIORITY) == 50
 
 
 def test_round9_keys_registered_with_oracles():
     q, o = build_queries(), build_oracles()
-    for k in ROUND9_KEYS:
+    for k in ("q_experiment_stats", "q_compare_judges"):
         assert k in q, k
         assert k in o, f"{k} must be oracle-hash-checked, not rows-only"
-
-
-def test_round9_keys_are_benched_and_probed():
-    import importlib.util
-
-    bench_src = (REPO / "bench.py").read_text()
-    probe_src = (REPO / "tools" / "scale_probe.py").read_text()
-    assert "*ROUND9_KEYS" in bench_src
-    assert "*ROUND9_KEYS" in probe_src
-    spec = importlib.util.spec_from_file_location(
-        "scale_probe", REPO / "tools" / "scale_probe.py"
-    )
-    sp = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(sp)
-    assert set(ROUND9_KEYS) <= set(sp.PROBES)
 
 
 # ── the answers/judgments projection invariants ────────────────────────────

@@ -7,7 +7,8 @@ counts grow 10×, key cardinality grows 10×, and duplicated content makes
 the dedup operators work *harder* (denser candidate graphs), so the
 ratios below are pessimistic for real corpora.
 
-Usage: python tools/scale_probe.py  (prints a markdown table)
+Usage: python tools/scale_probe.py [KEY ...]  (prints a markdown table;
+no keys = every key bench.py times)
 """
 
 from __future__ import annotations
@@ -25,10 +26,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from lexam_data_pipeline_spark.catalog import load_table  # noqa: E402
 from lexam_data_pipeline_spark.plans.registry import (  # noqa: E402
-    ROUND7_KEYS,
-    ROUND8_KEYS,
-    ROUND9_KEYS,
-    ROUND10_KEYS,
+    bench_keys,
     build_queries,
 )
 from lexam_data_pipeline_spark.session import get_spark  # noqa: E402
@@ -37,160 +35,8 @@ BASE_SF = "/root/testdata/sf0.1"
 SCALE_DIR = "/tmp/spark-graft-scale10"
 COPIES = 10
 
-#: queries measured + the id columns to offset per table they read
-PROBES = [
-    "q_dedup_ngram_jaccard",
-    "q_minhash_lsh_pairs",
-    "q_dedup_embedding_blocked",
-    "q_knn_ivf",
-    "q_events_sliding",
-    "q_sessionize",
-    "q_groupby_salted",
-    "q_join_5way_region",
-    "q_dedup_segments",
-    "q_decontaminate_docs",
-    "q_pack_sequences",
-    "q_repetition_stats",
-    "q_lexical_rarity",
-    "q_mix_temperature",
-    "q_pretrain_pipeline",
-    "q_asof_join_orders",
-    "q_range_join_events",
-    # round 3 additions
-    "q_kcore_prune",
-    "q_merge_upsert",
-    "q_corr_stats",
-    "q_dataset_card",
-    "q_moving_avg_revenue",
-    "q_grouping_sets",
-    # round 3, second batch: retrieval / graph / robust stats
-    "q_bm25_topk",
-    "q_hybrid_rrf",
-    "q_pagerank",
-    "q_outlier_mad",
-    "q_winsorized_stats",
-    "q_time_decay",
-    "q_char_class_stats",
-    "q_score_normalize",
-    "q_hard_negatives",
-    "q_length_buckets",
-    "q_bpe_tokenize",
-    "q_judge_agreement",
-    "q_pr_curve",
-    "q_hourly_anomalies",
-    "q_cooccur_lift",
-    # round 4 additions
-    "q_outlier_mad_approx",
-    "q_skyline_pareto",
-    "q_triangle_count",
-    "q_scd2_intervals",
-    "q_event_transitions",
-    "q_gap_fill",
-    "q_chi_square",
-    "q_graph_bfs",
-    "q_snapshot_diff",
-    "q_calibration_bins",
-    "q_hll_merge_windows",
-    "q_theil_sen",
-    "q_running_distinct",
-    "q_dau_wau_stickiness",
-    "q_peak_concurrency",
-    "q_event_pattern",
-    "q_user_streaks",
-    "q_gini_revenue",
-    "q_top_paths",
-    "q_hll_intersection",
-    "q_new_vs_returning",
-    "q_customer_ltv_cohort",
-    "q_lorenz_deciles",
-    "q_session_stats",
-    "q_label_propagation",
-    "q_window_funnel",
-    "q_abandoned_carts",
-    "q_table_profile",
-    "q_table_profile_approx",
-    "q_stratified_sample",
-    "q_trimmed_mean",
-    "q_spearman_corr",
-    "q_mannwhitney",
-    "q_ks_test",
-    "q_anova_f",
-    "q_cramers_v",
-    "q_crosscorr_lagged",
-    "q_kendall_tau",
-    "q_decile_lift",
-    "q_shannon_diversity",
-    "q_bootstrap_ci",
-    "q_tukey_fences",
-    "q_polyfit_quadratic",
-    "q_cohort_retention",
-    "q_topic_keywords",
-    "q_hhi_concentration",
-    "q_price_elasticity",
-    "q_ab_sequential",
-    "q_rfm_segments",
-    "q_linear_attribution",
-    "q_mom_growth",
-    "q_survival_km",
-    "q_ewma_revenue",
-    "q_autocorr_revenue",
-    "q_cusum_changepoint",
-    "q_weighted_median",
-    "q_expectations_report",
-    "q_basket_pairs",
-    "q_holt_forecast",
-    "q_seasonal_decompose",
-    "q_benford_digits",
-    "q_percent_rank_spend",
-    "q_order_gap_stats",
-    "q_ols_regression",
-    "q_fk_discovery",
-    "q_logreg_quality",
-    "q_kmeans_clusters",
-    "q_pca_variance",
-    "q_lm_surprisal",
-    "q_semantic_dedup",
-    "q_dsir_select",
-    "q_skew_diagnostics",
-    "q_entity_resolution",
-    "q_item_similarity",
-    "q_isotonic_calibration",
-    "q_ngram_novelty",
-    "q_nb_classifier",
-    "q_column_entropy",
-    "q_mutual_information",
-    "q_ndcg_eval",
-    "q_boosted_stumps",
-    "q_js_divergence",
-    "q_split_audit",
-    "q_compression_ratio",
-    "q_random_projection",
-    # round 6 additions
-    "q_course_summary",
-    "q_burstiness",
-    "q_runs_test",
-    "q_mann_kendall",
-    "q_abc_classification",
-    "q_quartile_skewness",
-    # round-7/8 keys come from the registry's single source of truth
-    *ROUND7_KEYS,
-    *ROUND8_KEYS,
-    *ROUND9_KEYS,
-    *ROUND10_KEYS,
-    # round-8 bench sweep catch: the rewritten SimHash sketch (the old
-    # HOF form was 293 s at sf0.1 — see PLANS.md)
-    "q_simhash_buckets",
-    # round-8 gap fill: the remaining top-cost bench keys without a row
-    "q_dedup_clusters",
-    "q_dedup_clusters_two_phase",
-    "q_multimodal_features",
-    "q_bloom_decontaminate",
-    "q_containment_dedup",
-    "q_agg_stats",
-]
-# ROUND*_KEYS splices can repeat hand-listed keys (e.g. q_pagerank,
-# probed since round 3, is also a round-10 window key) — probe each once
-PROBES = list(dict.fromkeys(PROBES))
+#: queries measured: bench.py's key list (pass keys to probe a subset)
+PROBES = bench_keys()
 
 OFFSETS = {
     "documents": ("doc_id", 1_000_000),
