@@ -114,10 +114,6 @@ def template_format(template: str, columns: dict[str, Column]) -> Column:
     return F.concat(*parts)
 
 
-def word_letters() -> str:
-    return string.ascii_uppercase
-
-
 def gold_choice(choices: Column, gold: Column) -> Column:
     """F13: the gold answer's display text, ``choices[gold]`` with
     1-based ``element_at`` (ref ExperimentDetail.jsx:620); NULL-safe on

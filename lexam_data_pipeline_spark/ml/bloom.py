@@ -36,8 +36,6 @@ pipelines per GPT-3 appendix C / Llama 2 §2.2-style eval hygiene).
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from lexam_data_pipeline_spark.catalog import load_table, local_rows
@@ -95,24 +93,6 @@ def bloom_build_df(
         .groupBy("w")
         .agg(F.expr("bit_or(m)").alias("word"))
     )
-
-
-def bloom_maybe_contains(
-    key: Column, words: Column, m_bits: int = DEFAULT_M_BITS, k: int = DEFAULT_K
-) -> Column:
-    """True iff all ``k`` bits of ``key`` are set in the ``words``
-    array<bigint> column — i.e. "possibly in the set" (false positives
-    at the design fpp, never false negatives)."""
-    terms = []
-    for pos in _bit_positions(key, m_bits, k):
-        word = F.element_at(words, (pos / 64).cast("int") + 1)
-        # shiftleft's Python wrapper only takes an int bit count; the SQL
-        # function accepts a column — call it directly.
-        mask = F.call_function(
-            "shiftleft", F.lit(1).cast("bigint"), F.pmod(pos, F.lit(64)).cast("int")
-        )
-        terms.append(word.bitwiseAND(mask) != 0)
-    return reduce(lambda a, b: a & b, terms)
 
 
 def bloom_filter(

@@ -1,8 +1,8 @@
-"""Distributed logistic regression by full-batch gradient descent —
+"""Distributed logistic regression by Newton-Raphson (IRLS) —
 "model training without MLlib", the aggregate-as-gradient-oracle
 pattern: each iteration is ONE map-side-combinable aggregate producing
-the d-dimensional gradient, the driver holds O(d) state (the weight
-vector) and never sees a row.
+the d-dimensional gradient and the d×d Hessian, the driver holds O(d²)
+state and never sees a row.
 
 Realizes the training half of the reference's quality-scoring loop
 (``backend/app/routers/experiments.py:1`` consumes model scores; here
@@ -12,11 +12,12 @@ the model itself is fit in-engine) as a contract key
 Scale posture (the whole point of the design):
 
 * The gradient for weights ``w`` is ``Σ_rows (σ(w·x) − y)·x`` — a sum,
-  so it partial-aggregates map-side and the shuffle carries d+1 doubles
-  per partition regardless of corpus size.
+  so it partial-aggregates map-side (the Hessian likewise) and the
+  shuffle carries O(d²) doubles per partition regardless of corpus
+  size.
 * Weights are embedded as literals each iteration (broadcast by plan,
   not by Python closure), so executors never deserialize Python state.
-* Driver memory is O(d · n_iter) floats; there is no collect of
+* Driver memory is O(d²) floats; there is no collect of
   features anywhere (contrast with the capped ``train_bpe`` collect —
   this trainer needs no cap because nothing row-shaped ever lands on
   the driver).
@@ -27,8 +28,8 @@ Scale posture (the whole point of the design):
 Float caveat, stated honestly: partition-order float summation makes
 the gradient (hence the fitted weights) reproducible only up to ulps —
 this key is declared ROWS-ONLY, with ``tests/test_logreg.py`` as the
-oracle (an independent numpy implementation of the same descent must
-agree on weights to 1e-4 and on ≥95% of predictions).
+oracle (an independent numpy implementation of the same Newton steps
+must agree on weights to 1e-3 and on ≥95% of predictions).
 """
 
 from __future__ import annotations
@@ -77,34 +78,6 @@ def featurize_documents(docs: DataFrame) -> DataFrame:
             en_hits.cast("double") / F.size(toks), F.lit(0.0)
         ).alias("x3"),
     )
-
-
-def train_logreg(
-    features: DataFrame,
-    *,
-    n_iter: int = 20,
-    lr: float = 0.5,
-) -> list[float]:
-    """Full-batch GD on the sigmoid cross-entropy loss.
-
-    Each iteration: embed ``w`` as literals, aggregate the gradient
-    (one shuffled row of d+1 doubles), step on the driver. The per-row
-    work stays in whole-stage codegen (exp/div are JVM expressions)."""
-    w = [0.0] * N_FEATURES
-    xs = [F.col(f"x{j}") for j in range(N_FEATURES)]
-    for _ in range(n_iter):
-        z = sum((F.lit(wj) * xj for wj, xj in zip(w, xs)), F.lit(0.0))
-        p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-        err = p - F.col("y")
-        row = features.agg(
-            F.count(F.lit(1)).alias("n"),
-            *[F.sum(err * xj).alias(f"g{j}") for j, xj in enumerate(xs)],
-        ).collect()[0]
-        n = float(row["n"])
-        if n == 0.0:  # empty feature table: nothing to fit
-            return w
-        w = [wj - lr * float(row[f"g{j}"]) / n for j, wj in enumerate(w)]
-    return w
 
 
 def train_logreg_newton(
@@ -164,16 +137,15 @@ def q_logreg_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality filter without MLlib" demonstration.
 
     Rows-only by declared design (partition-order float sums make
-    weights ulp-variable); tests/test_logreg.py verifies the descent
+    weights ulp-variable); tests/test_logreg.py verifies the Newton steps
     against an independent numpy implementation."""
     from lexam_data_pipeline_spark.operators.caching import persist_slot
 
     docs = load_table(spark, sf_dir, "documents")
-    # Load-bearing persist: the GD loop aggregates the SAME feature
+    # Load-bearing persist: the Newton loop aggregates the SAME feature
     # table n_iter times — without it every iteration re-tokenizes the
-    # corpus (30 full scans; measured 13.6 s → 4 s at sf0.01).  At
-    # cluster scale this is the standard "materialize the training
-    # matrix once" step.
+    # corpus.  At cluster scale this is the standard "materialize the
+    # training matrix once" step.
     feats = persist_slot(featurize_documents(docs), "logreg_features")
     w = train_logreg_newton(feats, n_iter=6)
     scored = score(feats, w)

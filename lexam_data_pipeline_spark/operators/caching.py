@@ -9,31 +9,22 @@ loops, a REPL) accumulates one orphaned cache per call (ADVICE r1).
 ``persist_slot`` keeps at most ONE live cache per named slot: the next
 call through the same slot releases the previous handle.  If a caller
 still holds frames over an evicted handle, Spark silently recomputes —
-a perf cost only, never a correctness one (these persists are cache
-hints, not lineage cuts; the lineage-cut persist in ``ml/dedup`` keeps
-its own reuse-keyed slot for exactly that reason).
+a perf cost only, never a correctness one.  :func:`keyed_slot` is the
+reuse-keyed variant for a persist that must be shared across calls (the
+lineage-cut persist in ``ml/dedup``).  :func:`release_all` frees every
+slot, so no cache outlives a release boundary (the bench releases
+between timed runs).
 """
 
 from __future__ import annotations
 
 import os
-from typing import Callable
+from collections.abc import Callable, Hashable
 
 from pyspark.sql import DataFrame
 
-_SLOTS: dict[str, DataFrame] = {}
-
-#: extra teardown hooks run by :func:`release_all` — for module-local
-#: caches that cannot live in ``_SLOTS`` (e.g. ``ml/dedup``'s
-#: lineage-cut persist, which is reuse-keyed rather than slot-keyed).
-#: Registering here guarantees no cache outlives a ``release_all()``
-#: boundary, so nothing persists between bench runs.
-_RELEASE_HOOKS: list[Callable[[], None]] = []
-
-
-def register_release_hook(fn: Callable[[], None]) -> None:
-    if fn not in _RELEASE_HOOKS:
-        _RELEASE_HOOKS.append(fn)
+#: slot -> (reuse key or None, persisted frame)
+_SLOTS: dict[str, tuple[Hashable, DataFrame]] = {}
 
 
 #: Analyzed-DataFrame memo for ACTION-FREE query constructions, keyed on
@@ -43,12 +34,15 @@ def register_release_hook(fn: Callable[[], None]) -> None:
 #: (asserted by tests/test_plan_memo.py), so the memo caches a PLAN and
 #: nothing else: no persisted data, no collected values — every
 #: execution still computes from parquet, which is why release_all()
-#: deliberately does NOT clear it.  Motivation (r11 VERDICT item 3):
-#: several keys spend 1-5 s per call on Catalyst analysis of large
-#: deterministic expression trees (q_random_projection ~4.6 s,
-#: q_experiment_stats ~1.8 s); re-planning an identical tree per call is
-#: pure driver waste at any scale.
-_PLAN_MEMO: dict[tuple, DataFrame] = {}
+#: deliberately does NOT clear it.  A build that fills persist slots has
+#: them recorded with its plan, and a memo hit puts those frames back
+#: into their slots, so the shared subtrees of the returned plan are
+#: cached again after a release_all() or after another key took a slot.
+#: Motivation (r11 VERDICT item 3): several keys spend 1-5 s per call on
+#: Catalyst analysis of large deterministic expression trees
+#: (q_random_projection ~4.6 s, q_experiment_stats ~1.8 s); re-planning
+#: an identical tree per call is pure driver waste at any scale.
+_PLAN_MEMO: dict[tuple, tuple[DataFrame, dict[str, tuple[Hashable, DataFrame]]]] = {}
 
 
 def memoize_plan(name: str, fn):
@@ -57,10 +51,17 @@ def memoize_plan(name: str, fn):
 
     def wrapped(spark, sf_dir):
         key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
-        df = _PLAN_MEMO.get(key)
-        if df is None:
-            df = fn(spark, sf_dir)
-            _PLAN_MEMO[key] = df
+        hit = _PLAN_MEMO.get(key)
+        if hit is not None:
+            df, slots = hit
+            for slot, (reuse, frame) in slots.items():
+                _fill(slot, frame, reuse)
+            return df
+        before = dict(_SLOTS)
+        df = fn(spark, sf_dir)
+        # the slots this build filled: each fill stores a fresh entry
+        filled = {s: e for s, e in _SLOTS.items() if before.get(s) is not e}
+        _PLAN_MEMO[key] = (df, filled)
         return df
 
     wrapped.__name__ = getattr(fn, "__name__", name)
@@ -69,19 +70,32 @@ def memoize_plan(name: str, fn):
     return wrapped
 
 
-def persist_slot(df: DataFrame, slot: str) -> DataFrame:
+def _fill(slot: str, df: DataFrame, reuse: Hashable) -> DataFrame:
     prev = _SLOTS.get(slot)
-    if prev is not None:
-        prev.unpersist()
+    if prev is not None and prev[1] is not df:
+        prev[1].unpersist()
     out = df.persist()
-    _SLOTS[slot] = out
+    _SLOTS[slot] = (reuse, out)
     return out
+
+
+def persist_slot(df: DataFrame, slot: str) -> DataFrame:
+    """Persist ``df`` in ``slot``, releasing the frame it held before."""
+    return _fill(slot, df, None)
+
+
+def keyed_slot(slot: str, key: Hashable, build: Callable[[], DataFrame]) -> DataFrame:
+    """The frame ``slot`` holds for ``key``, or ``build()`` persisted in
+    the slot (releasing the frame it held before) when it holds another
+    key or nothing."""
+    prev = _SLOTS.get(slot)
+    if prev is not None and prev[0] == key:
+        return prev[1]
+    return _fill(slot, build(), key)
 
 
 def release_all() -> None:
     """Drop every slot's cache (e.g. at session teardown)."""
-    for df in _SLOTS.values():
+    for _, df in _SLOTS.values():
         df.unpersist()
     _SLOTS.clear()
-    for fn in _RELEASE_HOOKS:
-        fn()

@@ -24,20 +24,19 @@ sample-trained build), not here.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, functions as F
 
 from lexam_data_pipeline_spark.ml.ivf import _assign
+from lexam_data_pipeline_spark.streaming.state import ReadState, WriteState, start_fold
+
+STATE_TABLES = ("assignments",)
 
 
 def start_streaming_ivf_ingest(
     stream: DataFrame,
     centroids: list[list[float]],
-    read_state: Callable[[], DataFrame | None],
-    write_state: Callable[[DataFrame], None],
-    *,
-    available_now: bool = True,
+    read_state: ReadState,
+    write_state: WriteState,
 ):
     """Maintain the IVF assignment table under a vector stream.
 
@@ -45,11 +44,11 @@ def start_streaming_ivf_ingest(
     ``(vec_id, cluster)``.  Returns the StreamingQuery.
     """
 
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
+    def fold(state, batch: DataFrame) -> dict[str, DataFrame]:
         # dedup inside the batch too (at-least-once sources can repeat a
         # vec_id within one trigger)
         batch = batch.dropDuplicates(["vec_id"])
-        prev = read_state()
+        prev = state["assignments"]
         if prev is not None:
             seen = prev.select("vec_id").distinct()
             batch = batch.join(seen, "vec_id", "left_anti")
@@ -57,9 +56,6 @@ def start_streaming_ivf_ingest(
             "vec_id", F.col("embedding").cast("array<double>").alias("e")
         )
         delta = _assign(base, centroids).select("vec_id", "cluster")
-        write_state(delta if prev is None else prev.unionByName(delta))
+        return {"assignments": delta if prev is None else prev.unionByName(delta)}
 
-    writer = stream.writeStream.foreachBatch(process_batch)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_fold(stream, fold, STATE_TABLES, read_state, write_state)

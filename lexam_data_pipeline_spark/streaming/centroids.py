@@ -18,13 +18,10 @@ approximate agreement).
 
 Per-trigger cost: one posexplode aggregate over the batch (output
 ≤ k·d rows) plus a (k·d)-row state merge — independent of corpus size.
-State store contract matches the other foreachBatch maintainers
-(streaming/retrieval.parquet_state_store: atomic versioned swap).
+State contract: streaming/state.py.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -33,10 +30,12 @@ from lexam_data_pipeline_spark.functions.embeddings import (
     label_dim_sums,
     quantized_components,
 )
+from lexam_data_pipeline_spark.streaming.state import ReadState, WriteState, start_fold
 
 STATE_COLUMNS = ("label", "pos", "s", "nl")
+STATE_TABLES = ("sums",)
 
-__all__ = ["QUANT_SCALE", "STATE_COLUMNS", "batch_sums", "centroid_merge",
+__all__ = ["QUANT_SCALE", "STATE_COLUMNS", "STATE_TABLES", "batch_sums", "centroid_merge",
            "centroid_cosines", "start_streaming_centroids"]
 
 
@@ -95,21 +94,14 @@ def centroid_cosines(state: DataFrame) -> DataFrame:
 
 
 def start_streaming_centroids(
-    stream: DataFrame,
-    read_state: Callable[[], DataFrame | None],
-    write_state: Callable[[DataFrame], None],
-    *,
-    available_now: bool = True,
+    stream: DataFrame, read_state: ReadState, write_state: WriteState
 ):
     """Maintain the centroid-sum state under a micro-batched embedding
-    stream.  Same lazy-read callback contract as the other maintainers:
-    use ``parquet_state_store`` (atomic versioned swap) or a
-    materializing holder.  Returns the StreamingQuery."""
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        write_state(centroid_merge(read_state(), batch))
-
-    writer = stream.writeStream.foreachBatch(process_batch)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    stream.  Returns the StreamingQuery."""
+    return start_fold(
+        stream,
+        lambda st, batch: {"sums": centroid_merge(st["sums"], batch)},
+        STATE_TABLES,
+        read_state,
+        write_state,
+    )

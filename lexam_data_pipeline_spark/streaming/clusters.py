@@ -37,7 +37,7 @@ micro-batch split (tests/test_streaming_clusters.py proves it,
 including the cross-batch chain-merge path a naive append-only fold
 gets wrong).
 
-Production notes (100 TB): back ``read_state``/``write_state`` with a
+Production notes (100 TB): back the ``labels`` table with a
 cluster-partitioned table (Delta/Iceberg MERGE on the remap keys) so
 step 4 rewrites only the merged clusters' partitions; the broadcast
 sides are O(batch) by construction.
@@ -48,18 +48,18 @@ are harmless (they contract to self-loops and drop out).
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from pyspark.sql import DataFrame, functions as F
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from lexam_data_pipeline_spark.catalog import local_rows
 from lexam_data_pipeline_spark.operators.caching import persist_slot
+from lexam_data_pipeline_spark.streaming.state import (
+    ReadState,
+    WriteState,
+    or_empty,
+    start_fold,
+)
 
 LABELS_SCHEMA = "node long, cluster long"
-
-
-def _empty_labels(spark: SparkSession) -> DataFrame:
-    return local_rows(spark, [], LABELS_SCHEMA)
+STATE_TABLES = ("labels",)
 
 
 def clusters_merge(
@@ -71,8 +71,7 @@ def clusters_merge(
     the NEW labels frame without mutating the inputs."""
     from lexam_data_pipeline_spark.ml.dedup import connected_components
 
-    spark = batch_edges.sparkSession
-    labels0 = labels0 if labels0 is not None else _empty_labels(spark)
+    labels0 = or_empty(batch_edges.sparkSession, labels0, LABELS_SCHEMA)
     e = (
         batch_edges.select(
             F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
@@ -135,23 +134,17 @@ def clusters_report(labels: DataFrame | None) -> DataFrame:
 
 def start_streaming_clusters(
     stream: DataFrame,
-    read_state: Callable[[], DataFrame | None],
-    write_state: Callable[[DataFrame], None],
+    read_state: ReadState,
+    write_state: WriteState,
     *,
     src: str = "doc_id_a",
     dst: str = "doc_id_b",
-    available_now: bool = True,
 ):
-    """Maintain cluster labels under a micro-batched pair stream —
-    the single-table callback contract of the other maintainers
-    (``read_state()``/``write_state(df)`` backed by a parquet state
-    store path in production).  Returns the StreamingQuery."""
+    """Maintain cluster labels under a micro-batched pair stream.
+    Returns the StreamingQuery."""
 
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
+    def fold(state, batch: DataFrame) -> dict[str, DataFrame]:
         batch = persist_slot(batch, "cc.batch")  # read once per fold
-        write_state(clusters_merge(read_state(), batch, src=src, dst=dst))
+        return {"labels": clusters_merge(state["labels"], batch, src=src, dst=dst)}
 
-    writer = stream.writeStream.foreachBatch(process_batch)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_fold(stream, fold, STATE_TABLES, read_state, write_state)

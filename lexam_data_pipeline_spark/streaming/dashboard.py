@@ -39,10 +39,16 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from lexam_data_pipeline_spark.catalog import local_rows
 from lexam_data_pipeline_spark.operators.caching import persist_slot
+from lexam_data_pipeline_spark.streaming.state import (
+    ReadState,
+    WriteState,
+    or_empty,
+    start_fold,
+)
 
 STATE_TABLES = ("q_cells", "split_counts", "split_total", "wc_hist")
 
@@ -55,10 +61,6 @@ _SCHEMAS = {
     "split_total": "n long",
     "wc_hist": "area string, wc int, n long",
 }
-
-
-def _empty(spark: SparkSession, name: str) -> DataFrame:
-    return local_rows(spark, [], _SCHEMAS[name])
 
 
 def _merge_sum(state: DataFrame, delta: DataFrame, keys: list[str]) -> DataFrame:
@@ -87,10 +89,7 @@ def dashboard_merge(
     q = persist_slot(q, "stream_dashboard.q")
     v = persist_slot(v, "stream_dashboard.v")
 
-    cells0 = state.get("q_cells") or _empty(spark, "q_cells")
-    splits0 = state.get("split_counts") or _empty(spark, "split_counts")
-    total0 = state.get("split_total") or _empty(spark, "split_total")
-    hist0 = state.get("wc_hist") or _empty(spark, "wc_hist")
+    st = {t: or_empty(spark, state.get(t), s) for t, s in _SCHEMAS.items()}
 
     cells_d = q.groupBy("course", "area", "jurisdiction", "language", "year").agg(
         F.count(F.lit(1)).alias("n")
@@ -115,11 +114,11 @@ def dashboard_merge(
     )
     return {
         "q_cells": _merge_sum(
-            cells0, cells_d, ["course", "area", "jurisdiction", "language", "year"]
+            st["q_cells"], cells_d, ["course", "area", "jurisdiction", "language", "year"]
         ),
-        "split_counts": _merge_sum(splits0, splits_d, ["split"]),
-        "split_total": total0.unionByName(total_d).agg(F.sum("n").alias("n")),
-        "wc_hist": _merge_sum(hist0, hist_d, ["area", "wc"]),
+        "split_counts": _merge_sum(st["split_counts"], splits_d, ["split"]),
+        "split_total": st["split_total"].unionByName(total_d).agg(F.sum("n").alias("n")),
+        "wc_hist": _merge_sum(st["wc_hist"], hist_d, ["area", "wc"]),
     }
 
 
@@ -293,31 +292,19 @@ def dashboard_report(state: dict[str, DataFrame]) -> DataFrame:
 def start_streaming_dashboard(
     stream: DataFrame,
     derive: Callable[[DataFrame], tuple[DataFrame, DataFrame]],
-    read_state: Callable[[str], DataFrame | None],
-    write_state: Callable[[str, DataFrame], None],
+    read_state: ReadState,
+    write_state: WriteState,
     *,
     configs: list[str] | None = None,
-    available_now: bool = True,
 ):
     """Maintain the dashboard state under a micro-batched ingest stream;
     ``derive(batch)`` maps each raw payload batch to its (questions,
     variants) frames — a question's variants must arrive atomically with
-    it (the maintainer contract).  Named-table state contract as
-    streaming/dedup_rates.py."""
+    it (the maintainer contract).  Returns the StreamingQuery."""
 
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
+    def fold(state, batch: DataFrame) -> dict[str, DataFrame]:
         batch = persist_slot(batch, "stream_dashboard.batch")
         questions, variants = derive(batch)
-        new_state = dashboard_merge(
-            {t: read_state(t) for t in STATE_TABLES},
-            questions,
-            variants,
-            configs=configs,
-        )
-        for t in STATE_TABLES:
-            write_state(t, new_state[t])
+        return dashboard_merge(state, questions, variants, configs=configs)
 
-    writer = stream.writeStream.foreachBatch(process_batch)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_fold(stream, fold, STATE_TABLES, read_state, write_state)

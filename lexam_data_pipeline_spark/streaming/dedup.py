@@ -128,7 +128,6 @@ def start_streaming_decontamination(
     sink,
     *,
     n: int = 4,
-    available_now: bool = True,
 ):
     """Decontaminate ON ARRIVAL: each micro-batch runs the batch
     :func:`lexam_data_pipeline_spark.ml.decontam.decontaminate` operator
@@ -141,7 +140,9 @@ def start_streaming_decontamination(
     (a doc is clean only when NONE of its grams hit), so the per-batch
     anti-join is the correct streaming shape; the benchmark gram set is
     broadcast once per batch and the batch is bounded by the trigger,
-    exactly like the 100 TB batch posture.  Returns the StreamingQuery.
+    exactly like the 100 TB batch posture.  Drains the available input
+    and stops (streaming/state.py, Triggers).  Returns the
+    StreamingQuery.
     """
     from lexam_data_pipeline_spark.ml.decontam import decontaminate
 
@@ -149,7 +150,8 @@ def start_streaming_decontamination(
         dirty = decontaminate(batch_docs, benchmark, n=n).select("doc_id")
         sink(batch_docs.join(dirty, "doc_id", "left_anti"))
 
-    writer = docs_stream.writeStream.foreachBatch(process_batch)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (
+        docs_stream.writeStream.foreachBatch(process_batch)
+        .trigger(availableNow=True)
+        .start()
+    )

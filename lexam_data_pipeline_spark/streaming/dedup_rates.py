@@ -39,12 +39,15 @@ the composed pipeline).
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from pyspark.sql import DataFrame, functions as F
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from lexam_data_pipeline_spark.catalog import local_rows
 from lexam_data_pipeline_spark.operators.caching import persist_slot
+from lexam_data_pipeline_spark.streaming.state import (
+    ReadState,
+    WriteState,
+    or_empty,
+    start_fold,
+)
 
 #: must equal the batch twin's df cap (ml/dedup.q_dedup_rate_by_source)
 MAX_DF = 50
@@ -61,10 +64,6 @@ _SCHEMAS = {
 }
 
 
-def _empty(spark: SparkSession, name: str) -> DataFrame:
-    return local_rows(spark, [], _SCHEMAS[name])
-
-
 def dedup_rates_merge(
     state: dict[str, DataFrame | None], batch: DataFrame
 ) -> dict[str, DataFrame]:
@@ -74,11 +73,9 @@ def dedup_rates_merge(
     the NEW state dict without mutating the inputs."""
     from lexam_data_pipeline_spark.ml.dedup import _doc_shingles
 
-    spark = batch.sparkSession
-    df0 = state.get("shingle_df") or _empty(spark, "shingle_df")
-    post0 = state.get("postings") or _empty(spark, "postings")
-    docs0 = state.get("docs") or _empty(spark, "docs")
-    pairs0 = state.get("pairs") or _empty(spark, "pairs")
+    df0, post0, docs0, pairs0 = (
+        or_empty(batch.sparkSession, state.get(t), _SCHEMAS[t]) for t in STATE_TABLES
+    )
 
     # (doc_id, s) — distinct per doc by construction (shingle_set)
     b_post = persist_slot(_doc_shingles(batch), "dedup_rates.b_post")
@@ -202,27 +199,13 @@ def dedup_rates_report(state: dict[str, DataFrame | None]) -> DataFrame:
 
 
 def start_streaming_dedup_rates(
-    stream: DataFrame,
-    read_state: Callable[[str], DataFrame | None],
-    write_state: Callable[[str, DataFrame], None],
-    *,
-    available_now: bool = True,
+    stream: DataFrame, read_state: ReadState, write_state: WriteState
 ):
     """Maintain the four-table state under a micro-batched document
-    stream.  ``read_state(name)`` / ``write_state(name, df)`` extend the
-    single-table callback contract of the other maintainers to named
-    tables (back each name with its own parquet_state_store path in
-    production).  Returns the StreamingQuery."""
+    stream.  Returns the StreamingQuery."""
 
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
+    def fold(state, batch: DataFrame) -> dict[str, DataFrame]:
         batch = persist_slot(batch, "dedup_rates.batch")  # read once per fold
-        new_state = dedup_rates_merge(
-            {t: read_state(t) for t in STATE_TABLES}, batch
-        )
-        for t in STATE_TABLES:
-            write_state(t, new_state[t])
+        return dedup_rates_merge(state, batch)
 
-    writer = stream.writeStream.foreachBatch(process_batch)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_fold(stream, fold, STATE_TABLES, read_state, write_state)

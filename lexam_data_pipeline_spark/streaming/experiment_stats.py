@@ -48,15 +48,19 @@ slowly-changing lookups passed at fold time.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from lexam_data_pipeline_spark.catalog import local_rows
 from lexam_data_pipeline_spark.operators.caching import persist_slot
 from lexam_data_pipeline_spark.serving.stats import (
     SCORE_BUCKETS,
     flatten_experiment_stats,
+)
+from lexam_data_pipeline_spark.streaming.state import (
+    ReadState,
+    WriteState,
+    or_empty,
+    start_fold,
 )
 
 STATE_TABLES = (
@@ -100,19 +104,6 @@ _SCHEMAS = {
 }
 
 
-def _empty(spark: SparkSession, name: str) -> DataFrame:
-    return local_rows(spark, [], _SCHEMAS[name])
-
-
-def _state(
-    spark: SparkSession, state: dict[str, DataFrame | None]
-) -> dict[str, DataFrame]:
-    return {
-        t: (state.get(t) if state.get(t) is not None else _empty(spark, t))
-        for t in STATE_TABLES
-    }
-
-
 def experiment_stats_fold_answers(
     state: dict[str, DataFrame | None],
     batch: DataFrame,
@@ -124,8 +115,7 @@ def experiment_stats_fold_answers(
     model_name: str | None = None,
 ) -> dict[str, DataFrame]:
     """Fold one micro-batch of new answers into the state cells."""
-    spark = batch.sparkSession
-    st = _state(spark, state)
+    st = {t: or_empty(batch.sparkSession, state.get(t), s) for t, s in _SCHEMAS.items()}
     b = batch.filter(F.col("experiment_id") == experiment_id).filter(
         F.col("error").isNull()
     )
@@ -230,8 +220,7 @@ def experiment_stats_fold_judgments(
     """Fold one micro-batch of new judgments: only judgments of known
     OPEN answers count (the batch semantics' semi-join — the contract
     guarantees the answer arrived first)."""
-    spark = batch.sparkSession
-    st = _state(spark, state)
+    st = {t: or_empty(batch.sparkSession, state.get(t), s) for t, s in _SCHEMAS.items()}
     b = batch
     if judge_model:
         b = b.filter(F.col("judge_model") == judge_model)
@@ -412,23 +401,21 @@ def start_streaming_experiment_stats(
     judgments_source: DataFrame,
     variants: DataFrame,
     questions: DataFrame,
-    read_state: Callable[[str], DataFrame | None],
-    write_state: Callable[[str, DataFrame], None],
+    read_state: ReadState,
+    write_state: WriteState,
     *,
     experiment_id: int,
     fields: tuple[str, ...] = ("area", "course"),
-    available_now: bool = True,
 ):
     """Maintain the cells under a micro-batched ANSWER stream; each
     trigger also folds the judgments of that batch's answers from
     ``judgments_source`` (the generate→judge ordering: judgments land
-    with or after their answers).  Named-table callback contract like
-    streaming/dedup_rates.py.  Returns the StreamingQuery."""
+    with or after their answers).  Returns the StreamingQuery."""
 
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
+    def fold(state, batch: DataFrame) -> dict[str, DataFrame]:
         batch = persist_slot(batch, "xstats.batch")
         st = experiment_stats_fold_answers(
-            {t: read_state(t) for t in STATE_TABLES},
+            state,
             batch,
             variants,
             questions,
@@ -438,11 +425,6 @@ def start_streaming_experiment_stats(
         jbatch = judgments_source.join(
             batch.select(F.col("id").alias("answer_id")), "answer_id", "left_semi"
         )
-        st = experiment_stats_fold_judgments(st, jbatch)
-        for t in STATE_TABLES:
-            write_state(t, st[t])
+        return experiment_stats_fold_judgments(st, jbatch)
 
-    writer = answers_stream.writeStream.foreachBatch(process_batch)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_fold(answers_stream, fold, STATE_TABLES, read_state, write_state)

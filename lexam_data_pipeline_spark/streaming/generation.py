@@ -48,12 +48,11 @@ def start_streaming_generation(
     parallelism: int | None = None,
     completed_acc=None,
     failed_acc=None,
-    available_now: bool = True,
 ):
-    """Run generation continuously over a variants stream, appending new
-    answer rows through the idempotent sink.  Returns the
-    StreamingQuery; with ``available_now`` it drains current input and
-    stops (batch-like run of the streaming plan)."""
+    """Run generation over a variants stream, appending new answer rows
+    through the idempotent sink.  Drains the available input and stops
+    (a batch-like run of the streaming plan; streaming/state.py,
+    Triggers).  Returns the StreamingQuery."""
 
     def process_batch(batch_variants: DataFrame, batch_id: int) -> None:
         new_rows = run_generation(
@@ -68,10 +67,11 @@ def start_streaming_generation(
         )
         store.append_answers(new_rows)
 
-    writer = variants_stream.writeStream.foreachBatch(process_batch)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (
+        variants_stream.writeStream.foreachBatch(process_batch)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def start_streaming_judging(
@@ -84,12 +84,12 @@ def start_streaming_judging(
     *,
     client_spec: dict,
     parallelism: int | None = None,
-    available_now: bool = True,
 ):
     """Judging over a stream of answer rows (e.g. the generation sink's
     output directory watched as a file stream): each micro-batch anti-joins
     the LIVE judgments sink per judge, so re-delivered answers or restarts
-    never double-judge — the same ST3 shape as streaming generation."""
+    never double-judge — the same ST3 shape as streaming generation.
+    Drains the available input and stops.  Returns the StreamingQuery."""
     from lexam_data_pipeline_spark.pipeline.judging import run_judging
 
     def process_batch(batch_answers: DataFrame, batch_id: int) -> None:
@@ -105,7 +105,8 @@ def start_streaming_judging(
         )
         store.append_judgments(new_rows)
 
-    writer = answers_stream.writeStream.foreachBatch(process_batch)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (
+        answers_stream.writeStream.foreachBatch(process_batch)
+        .trigger(availableNow=True)
+        .start()
+    )

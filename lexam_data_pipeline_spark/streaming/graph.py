@@ -48,18 +48,20 @@ split (the decomposition lemma; proven including cross-batch component
 merges in tests/test_streaming_graph.py).
 
 Contract: edges arrive append-only; duplicates are harmless (both folds
-de-duplicate).  State backs onto the same named-table callback contract
-as the other maintainers (parquet state store in production).
+de-duplicate).  State contract: streaming/state.py.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from pyspark.sql import DataFrame, functions as F
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from lexam_data_pipeline_spark.catalog import local_rows
 from lexam_data_pipeline_spark.operators.caching import persist_slot
+from lexam_data_pipeline_spark.streaming.state import (
+    ReadState,
+    WriteState,
+    or_empty,
+    start_fold,
+)
 
 PR_STATE_TABLES = ("edges", "ranks")
 LPA_STATE_TABLES = ("edges", "labels", "comps")
@@ -81,15 +83,6 @@ PR_MAX_ITER = 200
 PR_TOL = 1e-9
 
 
-def _empty(spark: SparkSession, name: str) -> DataFrame:
-    return local_rows(spark, [], _SCHEMAS[name])
-
-
-def _get(spark, state: dict[str, DataFrame | None], name: str) -> DataFrame:
-    df = state.get(name)
-    return df if df is not None else _empty(spark, name)
-
-
 # ── PageRank ────────────────────────────────────────────────────────────────
 
 
@@ -108,8 +101,7 @@ def pagerank_merge(
     stored fixed point (see module docstring)."""
     from lexam_data_pipeline_spark.ml.graph import pagerank
 
-    spark = batch_edges.sparkSession
-    edges0 = _get(spark, state, "edges")
+    edges0 = or_empty(batch_edges.sparkSession, state.get("edges"), _SCHEMAS["edges"])
     ranks0 = state.get("ranks")
     b = (
         batch_edges.select(
@@ -144,33 +136,21 @@ def pagerank_report(state: dict[str, DataFrame | None], top_k: int = 20) -> Data
 
 def start_streaming_pagerank(
     stream: DataFrame,
-    read_state: Callable[[str], DataFrame | None],
-    write_state: Callable[[str, DataFrame], None],
+    read_state: ReadState,
+    write_state: WriteState,
     *,
     damping: float = 0.85,
     src: str = "u",
     dst: str = "v",
-    available_now: bool = True,
 ):
-    """Maintain warm-started PageRank under a micro-batched edge stream
-    (named-table callback contract).  Returns the StreamingQuery."""
+    """Maintain warm-started PageRank under a micro-batched edge stream.
+    Returns the StreamingQuery."""
 
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
+    def fold(state, batch: DataFrame) -> dict[str, DataFrame]:
         batch = persist_slot(batch, "prm.batch")
-        st = pagerank_merge(
-            {t: read_state(t) for t in PR_STATE_TABLES},
-            batch,
-            damping=damping,
-            src=src,
-            dst=dst,
-        )
-        for t in PR_STATE_TABLES:
-            write_state(t, st[t])
+        return pagerank_merge(state, batch, damping=damping, src=src, dst=dst)
 
-    writer = stream.writeStream.foreachBatch(process_batch)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_fold(stream, fold, PR_STATE_TABLES, read_state, write_state)
 
 
 # ── Label propagation ───────────────────────────────────────────────────────
@@ -222,15 +202,11 @@ def lpa_merge(
         .distinct(),
         "lpam.batch",
     )
-    edges0 = _get(spark, state, "edges")
-    labels0 = _get(spark, state, "labels")
+    st = {t: or_empty(spark, state.get(t), _SCHEMAS[t]) for t in LPA_STATE_TABLES}
+    edges0, labels0 = st["edges"], st["labels"]
     if b.isEmpty() and state.get("labels") is not None:
         # empty trigger: no component touched, every table carries over
-        return {
-            "edges": edges0,
-            "labels": labels0,
-            "comps": _get(spark, state, "comps"),
-        }
+        return st
     edges1 = persist_slot(edges0.unionByName(b).distinct(), "lpam.edges")
     # (1) incremental CC — O(batch) contracted graph, round-9 operator
     comps1 = persist_slot(
@@ -273,30 +249,18 @@ def lpa_report(state: dict[str, DataFrame | None], top_k: int = 20) -> DataFrame
 
 def start_streaming_lpa(
     stream: DataFrame,
-    read_state: Callable[[str], DataFrame | None],
-    write_state: Callable[[str, DataFrame], None],
+    read_state: ReadState,
+    write_state: WriteState,
     *,
     n_iter: int | None = None,
     src: str = "u",
     dst: str = "v",
-    available_now: bool = True,
 ):
     """Maintain component-scoped LPA labels under a micro-batched pair
-    stream (named-table callback contract).  Returns the StreamingQuery."""
+    stream.  Returns the StreamingQuery."""
 
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
+    def fold(state, batch: DataFrame) -> dict[str, DataFrame]:
         batch = persist_slot(batch, "lpam.raw_batch")
-        st = lpa_merge(
-            {t: read_state(t) for t in LPA_STATE_TABLES},
-            batch,
-            n_iter=n_iter,
-            src=src,
-            dst=dst,
-        )
-        for t in LPA_STATE_TABLES:
-            write_state(t, st[t])
+        return lpa_merge(state, batch, n_iter=n_iter, src=src, dst=dst)
 
-    writer = stream.writeStream.foreachBatch(process_batch)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_fold(stream, fold, LPA_STATE_TABLES, read_state, write_state)

@@ -22,37 +22,30 @@ swappable for readers.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
 from lexam_data_pipeline_spark.operators.incremental import merge_state, partial_state
+from lexam_data_pipeline_spark.streaming.state import ReadState, WriteState, start_fold
+
+STATE_TABLES = ("agg",)
 
 
 def start_streaming_aggregate(
     stream: DataFrame,
     keys: Sequence[str],
     measure: str,
-    read_state: Callable[[], DataFrame | None],
-    write_state: Callable[[DataFrame], None],
-    *,
-    available_now: bool = True,
+    read_state: ReadState,
+    write_state: WriteState,
 ):
-    """Maintain (keys, n, sum_dec) state under a micro-batch stream.
-
-    ``read_state``/``write_state`` abstract the state table (a parquet
-    path with atomic swap in production — see ``pipeline.experiment``'s
-    swap-snapshot writer — or an in-memory holder in tests).  Returns
-    the StreamingQuery.
+    """Maintain (keys, n, sum_dec) state in the ``agg`` table under a
+    micro-batch stream.  Returns the StreamingQuery.
     """
 
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
+    def fold(state, batch: DataFrame) -> dict[str, DataFrame]:
         delta = partial_state(batch, keys, measure)
-        state = read_state()
-        merged = delta if state is None else merge_state(state, delta, keys)
-        write_state(merged)
+        prev = state["agg"]
+        return {"agg": delta if prev is None else merge_state(prev, delta, keys)}
 
-    writer = stream.writeStream.foreachBatch(process_batch)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_fold(stream, fold, STATE_TABLES, read_state, write_state)

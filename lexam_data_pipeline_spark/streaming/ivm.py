@@ -30,6 +30,8 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
 
+from lexam_data_pipeline_spark.streaming.state import ReadState, WriteState
+
 
 def join_view_delta(
     a_state: DataFrame | None,
@@ -62,33 +64,25 @@ def start_streaming_join_view(
     stream: DataFrame,
     split: Callable[[DataFrame], tuple[DataFrame, DataFrame]],
     on: Sequence[str],
-    read_a: Callable[[], DataFrame | None],
-    write_a: Callable[[DataFrame], None],
-    read_b: Callable[[], DataFrame | None],
-    write_b: Callable[[DataFrame], None],
+    read_state: ReadState,
+    write_state: WriteState,
     append_view: Callable[[DataFrame | None], None],
-    *,
-    available_now: bool = True,
 ):
     """Maintain ``A ⋈ B`` under one interleaved stream whose rows are
     routed to the A/B legs by ``split`` (e.g. by event_type).
 
-    Callback contract matches the other maintainers: ``read_*`` results
-    are lazily referenced by the delta plan, so stores must be
-    atomic-swap (``streaming.retrieval.parquet_state_store``) or
-    materializing.  ``append_view`` receives the delta (or None when
-    the trigger produced no matches); the view is append-only.  Order
-    matters inside the trigger: the delta is computed against the OLD
-    state, then the state legs are appended."""
+    The legs are the state tables ``a`` and ``b`` (streaming/state.py).
+    ``append_view`` receives the delta (or None when the trigger
+    produced no matches); the view is append-only.  Order matters
+    inside the trigger: the delta is computed against the OLD state,
+    then the state legs are appended.  Drains the available input and
+    stops.  Returns the StreamingQuery."""
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         da, db = split(batch)
-        a_old, b_old = read_a(), read_b()
+        a_old, b_old = read_state("a"), read_state("b")
         append_view(join_view_delta(a_old, b_old, da, db, on))
-        write_a(da if a_old is None else a_old.unionByName(da))
-        write_b(db if b_old is None else b_old.unionByName(db))
+        write_state("a", da if a_old is None else a_old.unionByName(da))
+        write_state("b", db if b_old is None else b_old.unionByName(db))
 
-    writer = stream.writeStream.foreachBatch(process_batch)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return stream.writeStream.foreachBatch(process_batch).trigger(availableNow=True).start()

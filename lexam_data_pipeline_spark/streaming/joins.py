@@ -79,20 +79,19 @@ def start_attribution_stream(
     sink_table: str,
     max_lag: str = DEFAULT_MAX_LAG,
     watermark: str = DEFAULT_WATERMARK,
-    *,
-    available_now: bool = True,
 ):
     """Split one raw event stream into view/purchase legs, join them,
     and append matches to an in-memory sink table (tests) — swap the
-    format for a lake sink in production.  Returns the StreamingQuery."""
+    format for a lake sink in production.  Drains the available input
+    and stops (streaming/state.py, Triggers).  Returns the
+    StreamingQuery."""
     views = events.filter(F.col("event_type") == "view")
     purchases = events.filter(F.col("event_type") == "purchase")
     joined = attribution_join(views, purchases, max_lag, watermark)
-    writer = (
+    return (
         joined.writeStream.outputMode("append")
         .format("memory")
         .queryName(sink_table)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

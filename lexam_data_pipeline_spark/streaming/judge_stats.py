@@ -41,13 +41,17 @@ earlier than its answer (generate→judge ordering).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from lexam_data_pipeline_spark.catalog import local_rows
 from lexam_data_pipeline_spark.operators.caching import persist_slot
 from lexam_data_pipeline_spark.serving.stats import flatten_compare_judges
+from lexam_data_pipeline_spark.streaming.state import (
+    ReadState,
+    WriteState,
+    or_empty,
+    start_fold,
+)
 
 STATE_TABLES = ("exp_ids", "judge_cells", "q_map", "byq_cells")
 
@@ -61,19 +65,6 @@ _SCHEMAS = {
         "judgment_count long, score_sum double"
     ),
 }
-
-
-def _empty(spark: SparkSession, name: str) -> DataFrame:
-    return local_rows(spark, [], _SCHEMAS[name])
-
-
-def _state(
-    spark: SparkSession, state: dict[str, DataFrame | None]
-) -> dict[str, DataFrame]:
-    return {
-        t: (state.get(t) if state.get(t) is not None else _empty(spark, t))
-        for t in STATE_TABLES
-    }
 
 
 def _merge_byq(cells: DataFrame) -> DataFrame:
@@ -104,8 +95,7 @@ def judge_stats_fold_answers(
     model_name: str | None = None,
 ) -> dict[str, DataFrame]:
     """Fold one micro-batch of new answers into the state cells."""
-    spark = batch.sparkSession
-    st = _state(spark, state)
+    st = {t: or_empty(batch.sparkSession, state.get(t), s) for t, s in _SCHEMAS.items()}
     exp = batch.filter(F.col("experiment_id") == experiment_id)
     exp_ids1 = st["exp_ids"].unionByName(exp.select(F.col("id").alias("answer_id")))
 
@@ -150,8 +140,7 @@ def judge_stats_fold_judgments(
     judge_model: str | None = None,
 ) -> dict[str, DataFrame]:
     """Fold one micro-batch of new judgments."""
-    spark = batch.sparkSession
-    st = _state(spark, state)
+    st = {t: or_empty(batch.sparkSession, state.get(t), s) for t, s in _SCHEMAS.items()}
     scored = persist_slot(
         batch.filter(F.col("score").isNotNull()), "jstats.scored"
     )
@@ -271,21 +260,20 @@ def start_streaming_judge_stats(
     judgments_source: DataFrame,
     variants: DataFrame,
     questions: DataFrame,
-    read_state: Callable[[str], DataFrame | None],
-    write_state: Callable[[str, DataFrame], None],
+    read_state: ReadState,
+    write_state: WriteState,
     *,
     experiment_id: int,
     model_name: str | None = None,
-    available_now: bool = True,
 ):
     """Maintain the cells under a micro-batched ANSWER stream; each
     trigger folds that batch's judgments from ``judgments_source`` (the
     generate→judge ordering).  Returns the StreamingQuery."""
 
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
+    def fold(state, batch: DataFrame) -> dict[str, DataFrame]:
         batch = persist_slot(batch, "jstats.batch")
         st = judge_stats_fold_answers(
-            {t: read_state(t) for t in STATE_TABLES},
+            state,
             batch,
             variants,
             questions,
@@ -295,11 +283,6 @@ def start_streaming_judge_stats(
         jbatch = judgments_source.join(
             batch.select(F.col("id").alias("answer_id")), "answer_id", "left_semi"
         )
-        st = judge_stats_fold_judgments(st, jbatch)
-        for t in STATE_TABLES:
-            write_state(t, st[t])
+        return judge_stats_fold_judgments(st, jbatch)
 
-    writer = answers_stream.writeStream.foreachBatch(process_batch)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_fold(answers_stream, fold, STATE_TABLES, read_state, write_state)

@@ -38,12 +38,15 @@ Contract: documents arrive append-only with unique doc_ids.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from pyspark.sql import DataFrame, functions as F
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from lexam_data_pipeline_spark.catalog import local_rows
 from lexam_data_pipeline_spark.operators.caching import persist_slot
+from lexam_data_pipeline_spark.streaming.state import (
+    ReadState,
+    WriteState,
+    or_empty,
+    start_fold,
+)
 
 STATE_TABLES = ("signatures", "postings", "pairs")
 
@@ -58,10 +61,6 @@ def _schemas(k: int) -> dict[str, str]:
         "postings": "band int, bucket int, doc_id long",
         "pairs": "doc_id_a long, doc_id_b long, est_jaccard double",
     }
-
-
-def _empty(spark: SparkSession, name: str, k: int) -> DataFrame:
-    return local_rows(spark, [], _schemas(k)[name])
 
 
 def minhash_merge(
@@ -79,14 +78,10 @@ def minhash_merge(
         minhash_signatures,
     )
 
-    spark = batch_docs.sparkSession
     initialized = state.get("signatures") is not None
-    sig0 = state.get("signatures")
-    sig0 = sig0 if sig0 is not None else _empty(spark, "signatures", k)
-    post0 = state.get("postings")
-    post0 = post0 if post0 is not None else _empty(spark, "postings", k)
-    pairs0 = state.get("pairs")
-    pairs0 = pairs0 if pairs0 is not None else _empty(spark, "pairs", k)
+    sig0, post0, pairs0 = (
+        or_empty(batch_docs.sparkSession, state.get(t), s) for t, s in _schemas(k).items()
+    )
 
     # Empty-trigger short-circuit (mirrors pagerank_merge/lpa_merge): an
     # empty batch against initialized state must not rewrite the three
@@ -153,31 +148,18 @@ def minhash_report(state: dict[str, DataFrame | None]) -> DataFrame:
 
 def start_streaming_minhash(
     stream: DataFrame,
-    read_state: Callable[[str], DataFrame | None],
-    write_state: Callable[[str, DataFrame], None],
+    read_state: ReadState,
+    write_state: WriteState,
     *,
     k: int = MINHASH_K,
     bands: int = LSH_BANDS,
     r: int = LSH_R,
-    available_now: bool = True,
 ):
     """Maintain the LSH index + candidate pairs under a micro-batched
-    document stream (named-table callback contract).  Returns the
-    StreamingQuery."""
+    document stream.  Returns the StreamingQuery."""
 
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
+    def fold(state, batch: DataFrame) -> dict[str, DataFrame]:
         batch = persist_slot(batch, "mhm.batch")
-        st = minhash_merge(
-            {t: read_state(t) for t in STATE_TABLES},
-            batch,
-            k=k,
-            bands=bands,
-            r=r,
-        )
-        for t in STATE_TABLES:
-            write_state(t, st[t])
+        return minhash_merge(state, batch, k=k, bands=bands, r=r)
 
-    writer = stream.writeStream.foreachBatch(process_batch)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_fold(stream, fold, STATE_TABLES, read_state, write_state)

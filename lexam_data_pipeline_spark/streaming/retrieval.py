@@ -29,87 +29,31 @@ the per-trigger merge joins only the delta against state doc_ids.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, functions as F
 
 from lexam_data_pipeline_spark.ml.retrieval import corpus_stats, doc_postings
+from lexam_data_pipeline_spark.streaming.state import ReadState, WriteState, start_fold
 
-
-def parquet_state_store(
-    spark, path: str
-) -> tuple[Callable[[], DataFrame | None], Callable[[DataFrame], None]]:
-    """Versioned parquet state with an atomic pointer swap — the safe
-    implementation of the read/write callback contract below.
-
-    Layout: each write lands in a fresh ``v{n}`` subdirectory; a
-    ``_CURRENT`` marker file names the live version and is flipped with
-    ``os.replace`` (atomic on POSIX) only AFTER the new version is fully
-    written.  A writer therefore never touches the directory a
-    still-lazy reader plan points at, old versions stay readable for
-    plans in flight, and a crash mid-write leaves ``_CURRENT`` on the
-    previous good version.  (On an object store, replace the marker flip
-    with the store's conditional-put equivalent.)
-    """
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    marker = os.path.join(path, "_CURRENT")
-
-    def _current() -> str | None:
-        try:
-            with open(marker) as fh:
-                return fh.read().strip() or None
-        except FileNotFoundError:
-            return None
-
-    def read() -> DataFrame | None:
-        v = _current()
-        if v is None:
-            return None
-        return spark.read.parquet(os.path.join(path, v))
-
-    def write(df: DataFrame) -> None:
-        v = _current()
-        nxt = "v0" if v is None else f"v{int(v[1:]) + 1}"
-        df.write.mode("overwrite").parquet(os.path.join(path, nxt))
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(nxt)
-        os.replace(tmp, marker)
-
-    return read, write
+STATE_TABLES = ("postings", "stats")
 
 
 def start_streaming_index(
     stream: DataFrame,
-    read_postings: Callable[[], DataFrame | None],
-    write_postings: Callable[[DataFrame], None],
-    read_stats: Callable[[], DataFrame | None],
-    write_stats: Callable[[DataFrame], None],
+    read_state: ReadState,
+    write_state: WriteState,
     *,
     text_col: str = "text",
-    available_now: bool = True,
 ):
-    """Maintain the BM25 index under a micro-batched document stream.
+    """Maintain the BM25 index under a micro-batched document stream —
+    the state contract of streaming/state.py.  Returns the
+    StreamingQuery."""
 
-    The read/write callbacks abstract the two state tables.  CALLBACK
-    CONTRACT: the DataFrame passed to a write callback is LAZY and still
-    references the files the matching read callback returned this batch —
-    a write implementation must never overwrite the location it just
-    read from (Spark would read the inputs while deleting them).  Use
-    :func:`parquet_state_store`, which satisfies the contract with
-    versioned directories and an atomic pointer swap; in-memory test
-    holders satisfy it trivially by materializing.  Returns the
-    StreamingQuery.
-    """
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
+    def fold(state, batch: DataFrame) -> dict[str, DataFrame]:
         # first-sight-wins INSIDE the batch too: an at-least-once source
         # may deliver the same doc twice within one trigger, which would
         # double tf and n_docs
         batch = batch.dropDuplicates(["doc_id"])
-        prev_postings = read_postings()
+        prev_postings = state["postings"]
         if prev_postings is not None:
             # first-sight wins: an already-indexed doc re-delivered by a
             # replayed trigger must not double-count (idempotent resume)
@@ -122,7 +66,7 @@ def start_streaming_index(
             if prev_postings is None
             else prev_postings.unionByName(delta_postings)
         )
-        prev_stats = read_stats()
+        prev_stats = state["stats"]
         if prev_stats is not None:
             merged_stats = (
                 prev_stats.unionByName(delta_stats)
@@ -133,10 +77,6 @@ def start_streaming_index(
             )
         else:
             merged_stats = delta_stats
-        write_postings(merged_postings)
-        write_stats(merged_stats)
+        return {"postings": merged_postings, "stats": merged_stats}
 
-    writer = stream.writeStream.foreachBatch(process_batch)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_fold(stream, fold, STATE_TABLES, read_state, write_state)

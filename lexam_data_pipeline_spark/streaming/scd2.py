@@ -19,21 +19,20 @@ state table is row-identical to the from-scratch batch build
 Delivery contract: events must arrive in (ts, event_id) order per user
 across triggers (the foreachBatch checkpoint guarantees each batch is
 processed once; an out-of-order source needs a watermark+sort stage
-first).  This matches the other foreachBatch maintainers
-(streaming/incremental.py, streaming/retrieval.py).
+first).  State contract: streaming/state.py.
 
 100 TB: per-trigger work is one window over (state current rows ∪ batch
 events) partitioned by user — the state side contributes ONE row per
 active user, so the shuffle is the batch plus a current-pointer table;
 closed history never moves.  State lives bucketed by user in the lake
-and swaps atomically (streaming/retrieval.parquet_state_store).
+and swaps atomically (streaming/state.parquet_state_store).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, Window, functions as F
+
+from lexam_data_pipeline_spark.streaming.state import ReadState, WriteState, start_fold
 
 #: interval-table schema (matches q_scd2_intervals output)
 STATE_COLUMNS = (
@@ -45,6 +44,7 @@ STATE_COLUMNS = (
     "n_events",
     "is_current",
 )
+STATE_TABLES = ("intervals",)
 
 
 def scd2_merge(state: DataFrame | None, batch: DataFrame) -> DataFrame:
@@ -123,23 +123,14 @@ def scd2_merge(state: DataFrame | None, batch: DataFrame) -> DataFrame:
 
 
 def start_streaming_scd2(
-    stream: DataFrame,
-    read_state: Callable[[], DataFrame | None],
-    write_state: Callable[[DataFrame], None],
-    *,
-    available_now: bool = True,
+    stream: DataFrame, read_state: ReadState, write_state: WriteState
 ):
     """Maintain the SCD2 interval table under a micro-batched event
-    stream.  Same callback contract as streaming/retrieval.py: the
-    merged DataFrame passed to ``write_state`` lazily references what
-    ``read_state`` returned — use ``parquet_state_store`` (atomic
-    versioned swap) or a materializing holder.  Returns the
-    StreamingQuery."""
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        write_state(scd2_merge(read_state(), batch))
-
-    writer = stream.writeStream.foreachBatch(process_batch)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    stream.  Returns the StreamingQuery."""
+    return start_fold(
+        stream,
+        lambda st, batch: {"intervals": scd2_merge(st["intervals"], batch)},
+        STATE_TABLES,
+        read_state,
+        write_state,
+    )

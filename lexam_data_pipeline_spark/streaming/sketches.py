@@ -17,19 +17,18 @@ only over-count, so ``est ≥ T`` has no false negatives; the exact
 confirm pass of :func:`ml.cms.heavy_hitters` needs the raw occurrence
 table and therefore stays a batch/lakehouse job over candidates only.
 
-State store contract matches the other foreachBatch maintainers
-(streaming/retrieval.parquet_state_store: atomic versioned swap).
+State contract: streaming/state.py.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, functions as F
 
 from lexam_data_pipeline_spark.ml.cms import DEFAULT_D, DEFAULT_W, cms_build
+from lexam_data_pipeline_spark.streaming.state import ReadState, WriteState, start_fold
 
 STATE_COLUMNS = ("depth", "bucket", "c")
+CMS_STATE_TABLES = ("cms",)
 
 
 def cms_merge(
@@ -58,25 +57,21 @@ def cms_merge(
 def start_streaming_cms(
     stream: DataFrame,
     key: Column,
-    read_state: Callable[[], DataFrame | None],
-    write_state: Callable[[DataFrame], None],
+    read_state: ReadState,
+    write_state: WriteState,
     *,
     w: int = DEFAULT_W,
     d: int = DEFAULT_D,
-    available_now: bool = True,
 ):
     """Maintain a CMS frequency sketch under a micro-batched occurrence
-    stream.  Same lazy-read callback contract as the other maintainers:
-    use ``parquet_state_store`` (atomic versioned swap) or a
-    materializing holder.  Returns the StreamingQuery."""
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        write_state(cms_merge(read_state(), batch, key, w, d))
-
-    writer = stream.writeStream.foreachBatch(process_batch)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    stream.  Returns the StreamingQuery."""
+    return start_fold(
+        stream,
+        lambda st, batch: {"cms": cms_merge(st["cms"], batch, key, w, d)},
+        CMS_STATE_TABLES,
+        read_state,
+        write_state,
+    )
 
 
 # ── HLL distinct-rollup maintenance ─────────────────────────────────────
@@ -92,6 +87,7 @@ def start_streaming_cms(
 # against exact distincts).
 
 HLL_STATE_COLUMNS = ("day", "sk")
+HLL_STATE_TABLES = ("hll",)
 
 #: lgConfigK for the per-day sketches (matches q_hll_merge_windows).
 HLL_LG_K = 14
@@ -136,24 +132,20 @@ def hll_window_estimates(state: DataFrame, window: str = "week") -> DataFrame:
 def start_streaming_hll(
     stream: DataFrame,
     key: Column,
-    read_state: Callable[[], DataFrame | None],
-    write_state: Callable[[DataFrame], None],
+    read_state: ReadState,
+    write_state: WriteState,
     *,
     time_col: str = "ts",
     lg_k: int = HLL_LG_K,
-    available_now: bool = True,
 ):
     """Maintain the per-day HLL distinct sketches under a micro-batched
-    event stream.  Same lazy-read callback contract as the other
-    maintainers (parquet_state_store or a materializing holder).
-    Returns the StreamingQuery."""
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        write_state(
-            hll_merge(read_state(), batch, key, time_col=time_col, lg_k=lg_k)
-        )
-
-    writer = stream.writeStream.foreachBatch(process_batch)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    event stream.  Returns the StreamingQuery."""
+    return start_fold(
+        stream,
+        lambda st, batch: {
+            "hll": hll_merge(st["hll"], batch, key, time_col=time_col, lg_k=lg_k)
+        },
+        HLL_STATE_TABLES,
+        read_state,
+        write_state,
+    )

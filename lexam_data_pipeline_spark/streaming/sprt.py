@@ -16,19 +16,18 @@ alerts the moment ``decision`` leaves ``continue`` — the always-valid
 sequential A/B semantics that fixed-horizon q_ab_test cannot give
 mid-experiment.
 
-State store contract matches the other foreachBatch maintainers
-(streaming/retrieval.parquet_state_store: atomic versioned swap).
+State contract: streaming/state.py.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, functions as F
 
 from lexam_data_pipeline_spark.plans.fixture_queries import sprt_decide
+from lexam_data_pipeline_spark.streaming.state import ReadState, WriteState, start_fold
 
 STATE_COLUMNS = ("day", "n", "conv")
+STATE_TABLES = ("daily",)
 
 
 def daily_conversion_counts(batch: DataFrame) -> DataFrame:
@@ -67,20 +66,14 @@ def sprt_from_state(state: DataFrame) -> DataFrame:
 
 
 def start_streaming_sprt(
-    stream: DataFrame,
-    read_state: Callable[[], DataFrame | None],
-    write_state: Callable[[DataFrame], None],
-    *,
-    available_now: bool = True,
+    stream: DataFrame, read_state: ReadState, write_state: WriteState
 ):
     """Maintain the SPRT sufficient statistic under a micro-batched
-    event stream.  Same lazy-read callback contract as the other
-    maintainers; returns the StreamingQuery."""
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        write_state(sprt_merge(read_state(), batch))
-
-    writer = stream.writeStream.foreachBatch(process_batch)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    event stream.  Returns the StreamingQuery."""
+    return start_fold(
+        stream,
+        lambda st, batch: {"daily": sprt_merge(st["daily"], batch)},
+        STATE_TABLES,
+        read_state,
+        write_state,
+    )

@@ -14,17 +14,17 @@ rows EQUAL q_readability's batch output row-for-row
 
 Per-trigger cost: one regexp-count aggregate over the batch (output
 ≤ |sources| rows) plus a |sources|-row state merge — independent of
-corpus volume.  State store contract matches the other foreachBatch
-maintainers (streaming/retrieval.parquet_state_store).
+corpus volume.  State contract: streaming/state.py.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, functions as F
 
+from lexam_data_pipeline_spark.streaming.state import ReadState, WriteState, start_fold
+
 STATE_COLUMNS = ("source", "n_docs", "words", "sentences", "syllables")
+STATE_TABLES = ("counts",)
 
 
 def batch_counts(batch: DataFrame) -> DataFrame:
@@ -76,20 +76,14 @@ def readability_report(state: DataFrame) -> DataFrame:
 
 
 def start_streaming_readability(
-    stream: DataFrame,
-    read_state: Callable[[], DataFrame | None],
-    write_state: Callable[[DataFrame], None],
-    *,
-    available_now: bool = True,
+    stream: DataFrame, read_state: ReadState, write_state: WriteState
 ):
     """Maintain the per-source count state under a micro-batched
-    document stream.  Same lazy-read callback contract as the other
-    maintainers.  Returns the StreamingQuery."""
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        write_state(readability_merge(read_state(), batch))
-
-    writer = stream.writeStream.foreachBatch(process_batch)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    document stream.  Returns the StreamingQuery."""
+    return start_fold(
+        stream,
+        lambda st, batch: {"counts": readability_merge(st["counts"], batch)},
+        STATE_TABLES,
+        read_state,
+        write_state,
+    )

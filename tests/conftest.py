@@ -51,3 +51,32 @@ def sf_small() -> str:
 @pytest.fixture(scope="session")
 def sf_oracle() -> str:
     return SF_ORACLE
+
+
+class MemoryStateStore:
+    """In-memory named-table state store for the streaming maintainers
+    (state contract: ``streaming/state.py``).  ``write`` materializes the
+    frame's rows and captures its schema, so a later ``read`` never
+    touches the plan that produced them.  It lives here, not in the
+    engine: the engine builds no frame with ``createDataFrame``
+    (tests/test_local_rows.py)."""
+
+    def __init__(self, spark):
+        self.spark, self.rows, self.schemas = spark, {}, {}
+
+    def read(self, name: str):
+        if name not in self.rows:
+            return None
+        return self.spark.createDataFrame(self.rows[name], self.schemas[name])
+
+    def write(self, name: str, df) -> None:
+        self.rows[name], self.schemas[name] = df.collect(), df.schema
+
+    def state(self, tables) -> dict:
+        return {t: self.read(t) for t in tables}
+
+
+@pytest.fixture
+def state_store(spark):
+    """Factory of fresh :class:`MemoryStateStore` instances."""
+    return lambda: MemoryStateStore(spark)

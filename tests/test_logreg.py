@@ -19,7 +19,6 @@ from lexam_data_pipeline_spark.ml.logreg import (
     featurize_documents,
     q_logreg_quality,
     score,
-    train_logreg,
     train_logreg_newton,
 )
 
@@ -55,30 +54,11 @@ def _numpy_newton(X, y, n_iter=6):
     return w
 
 
-def _numpy_gd(X, y, n_iter=20, lr=0.5):
-    w = np.zeros(X.shape[1])
-    n = len(y)
-    for _ in range(n_iter):
-        p = _sigmoid(X @ w)
-        w = w - lr * (X.T @ (p - y)) / n
-    return w
-
-
 def test_newton_matches_numpy_reference(feats, xy):
     X, y = xy
     w_spark = np.array(train_logreg_newton(feats, n_iter=6))
     w_ref = _numpy_newton(X, y, n_iter=6)
     assert np.allclose(w_spark, w_ref, rtol=1e-3, atol=1e-6), (
-        w_spark,
-        w_ref,
-    )
-
-
-def test_gd_matches_numpy_reference(feats, xy):
-    X, y = xy
-    w_spark = np.array(train_logreg(feats, n_iter=20, lr=0.5))
-    w_ref = _numpy_gd(X, y, n_iter=20, lr=0.5)
-    assert np.allclose(w_spark, w_ref, rtol=1e-4, atol=1e-8), (
         w_spark,
         w_ref,
     )

@@ -12,7 +12,7 @@ from __future__ import annotations
 import pytest
 
 from lexam_data_pipeline_spark.catalog import FIXTURE_TABLES, load_table
-from lexam_data_pipeline_spark.operators.caching import _PLAN_MEMO
+from lexam_data_pipeline_spark.operators.caching import _PLAN_MEMO, release_all
 from lexam_data_pipeline_spark.plans.registry import MEMO_SAFE_KEYS, build_queries
 
 
@@ -67,3 +67,32 @@ def test_memoized_results_match_fresh_construction(spark, sf_small, warm_queries
     fresh_pd = warm_queries[key].__wrapped__(spark, sf_small).toPandas()
     assert memo_pd.equals(fresh_pd)
     _PLAN_MEMO.clear()
+
+
+def _inmemory_relations(df) -> int:
+    """InMemoryRelation nodes in the cache-substituted plan of a fresh
+    QueryExecution (``select("*")`` builds one and runs no job)."""
+
+    def count(node) -> int:
+        kids = node.children()
+        return int(node.getClass().getSimpleName() == "InMemoryRelation") + sum(
+            count(kids.apply(i)) for i in range(kids.size())
+        )
+
+    return count(df.select("*")._jdf.queryExecution().withCachedData())
+
+
+def test_memo_hit_restores_construction_persists(spark, sf_small, warm_queries):
+    # A key that fills persist slots while being built must get them back
+    # on a memo hit: after release_all(), and after other keys took the
+    # slots, the hit's plan reads the same cached subtrees as the build.
+    _PLAN_MEMO.clear()
+    built = {}
+    for key in MEMO_SAFE_KEYS:
+        built[key] = _inmemory_relations(warm_queries[key](spark, sf_small))
+    assert any(built.values()), "no memo-safe key persists at construction"
+    release_all()
+    hit = {key: _inmemory_relations(warm_queries[key](spark, sf_small)) for key in MEMO_SAFE_KEYS}
+    assert hit == built
+    _PLAN_MEMO.clear()
+    release_all()

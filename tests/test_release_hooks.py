@@ -1,44 +1,43 @@
-"""release_all() must clear EVERY cache, including module-local ones.
+"""release_all() frees the dedup flat projection like any other slot.
 
-r11 VERDICT item 4: ``ml/dedup._FLAT_CACHE`` (the lineage-cut persist of
-the normalized-embedding projection) survived across bench runs because
-it was not registered with ``operators.caching.release_all``.  The bench
-calls ``release_all()`` between timed runs; any cache it misses lets the
-second pass reuse the first pass's materialization, which is exactly the
-cross-run caching the bench's min-of-2 must not see.
+``ml/dedup._normalized_flat`` persists the normalized-embedding
+projection (a lineage cut) in the ``dedup.flat`` slot, keyed by
+``(sf_dir, dim)``.  The bench calls ``release_all()`` between timed runs;
+a cache it missed would let the second pass reuse the first pass's
+materialization, which is exactly the cross-run caching the bench's
+min-of-2 must not see.
 """
 
 from __future__ import annotations
 
-from lexam_data_pipeline_spark.catalog import load_table
 from lexam_data_pipeline_spark.ml import dedup
+from lexam_data_pipeline_spark.operators import caching
 from lexam_data_pipeline_spark.operators.caching import release_all
 
 
 def test_release_all_clears_flat_cache(spark, sf_small):
-    emb = load_table(spark, sf_small, "embeddings")
-    flat = dedup._normalized_flat(emb, dim=4, cache_key=sf_small)
-    assert dedup._FLAT_CACHE.get("key") == (sf_small, 4)
+    flat = dedup._normalized_flat(spark, sf_small, 4)
+    key, held = caching._SLOTS["dedup.flat"]
+    assert key == (sf_small, 4) and held is flat
     assert flat.storageLevel.useMemory  # persisted
 
-    # same key → same persisted object (within-run reuse intact)
-    assert dedup._normalized_flat(emb, dim=4, cache_key=sf_small) is flat
+    # same key → same persisted object, no rebuild
+    assert dedup._normalized_flat(spark, sf_small, 4) is flat
 
     release_all()
-    assert dedup._FLAT_CACHE == {}
+    assert "dedup.flat" not in caching._SLOTS
     assert not flat.storageLevel.useMemory  # unpersisted
 
     # next call rebuilds from scratch instead of reusing a stale handle
-    rebuilt = dedup._normalized_flat(emb, dim=4, cache_key=sf_small)
+    rebuilt = dedup._normalized_flat(spark, sf_small, 4)
     assert rebuilt is not flat
     release_all()
 
 
-def test_release_hook_registered_once(spark):
-    from lexam_data_pipeline_spark.operators import caching
-
-    # importing dedup again must not duplicate the hook
-    import importlib
-
-    importlib.import_module("lexam_data_pipeline_spark.ml.dedup")
-    assert caching._RELEASE_HOOKS.count(dedup._release_flat_cache) == 1
+def test_new_corpus_replaces_flat_slot(spark, sf_small, sf_oracle):
+    small = dedup._normalized_flat(spark, sf_small, 4)
+    other = dedup._normalized_flat(spark, sf_oracle, 4)
+    assert other is not small
+    assert not small.storageLevel.useMemory  # the old entry is released
+    assert caching._SLOTS["dedup.flat"][0] == (sf_oracle, 4)
+    release_all()

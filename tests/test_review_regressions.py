@@ -106,7 +106,7 @@ class TestSnapshotSemantics:
 
 
 class TestStreamingIntraBatchDuplicates:
-    def test_bm25_index_single_trigger_duplicates(self, spark, sf_small, tmp_path_factory):
+    def test_bm25_index_single_trigger_duplicates(self, spark, sf_small, tmp_path_factory, state_store):
         from lexam_data_pipeline_spark.catalog import load_table
         from tests.test_streaming_retrieval import _drain
 
@@ -115,12 +115,13 @@ class TestStreamingIntraBatchDuplicates:
         # both copies land in ONE parquet dir; with maxFilesPerTrigger=1
         # per file, write them as one file so a single trigger sees dups
         docs.unionAll(docs).coalesce(1).write.mode("append").parquet(chunk_dir)
-        postings, stats = _drain(spark, chunk_dir)
-        assert stats.read().collect()[0]["n_docs"] == 20  # not 40
-        tf = postings.read().groupBy("doc_id", "term").count()
+        index = state_store()
+        _drain(spark, chunk_dir, index.read, index.write)
+        assert index.read("stats").collect()[0]["n_docs"] == 20  # not 40
+        tf = index.read("postings").groupBy("doc_id", "term").count()
         assert tf.filter(F.col("count") > 1).count() == 0
 
-    def test_ivf_ingest_single_trigger_duplicates(self, spark, sf_small, tmp_path_factory):
+    def test_ivf_ingest_single_trigger_duplicates(self, spark, sf_small, tmp_path_factory, state_store):
         from lexam_data_pipeline_spark.catalog import load_table
         from lexam_data_pipeline_spark.ml.ivf import build_ivf_index
         from tests.test_streaming_ann import _drain
@@ -129,8 +130,8 @@ class TestStreamingIntraBatchDuplicates:
         _, centroids = build_ivf_index(emb, k=4, iterations=1)
         chunk_dir = str(tmp_path_factory.mktemp("vec_dup_trigger"))
         emb.unionAll(emb).coalesce(1).write.mode("append").parquet(chunk_dir)
-        holder = _drain(spark, chunk_dir, centroids)
-        vec_ids = [r["vec_id"] for r in holder.rows]
+        holder = _drain(spark, chunk_dir, centroids, state_store())
+        vec_ids = [r["vec_id"] for r in holder.rows["assignments"]]
         assert len(vec_ids) == len(set(vec_ids)) == 20
 
 

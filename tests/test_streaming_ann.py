@@ -3,31 +3,16 @@ including under re-delivered vectors (idempotent resume)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import functions as F
 
 from lexam_data_pipeline_spark.catalog import load_table
 from lexam_data_pipeline_spark.ml.ivf import _assign, build_ivf_index
 from lexam_data_pipeline_spark.streaming.ann import start_streaming_ivf_ingest
 
 EMB_SCHEMA = "vec_id long, embedding array<float>, label int"
-STATE_SCHEMA = "vec_id long, cluster int"
 
 
-class _Holder:
-    def __init__(self, spark):
-        self.spark, self.rows = spark, None
-
-    def read(self) -> DataFrame | None:
-        if self.rows is None:
-            return None
-        return self.spark.createDataFrame(self.rows, STATE_SCHEMA)
-
-    def write(self, df: DataFrame) -> None:
-        self.rows = df.collect()
-
-
-def _drain(spark, chunk_dir, centroids):
-    holder = _Holder(spark)
+def _drain(spark, chunk_dir, centroids, holder):
     stream = (
         spark.readStream.schema(EMB_SCHEMA)
         .option("maxFilesPerTrigger", 1)
@@ -38,7 +23,7 @@ def _drain(spark, chunk_dir, centroids):
     return holder
 
 
-def test_streamed_assignment_equals_batch(spark, sf_small, tmp_path_factory):
+def test_streamed_assignment_equals_batch(spark, sf_small, tmp_path_factory, state_store):
     emb = load_table(spark, sf_small, "embeddings")
     _, centroids = build_ivf_index(emb, k=8, iterations=2)
 
@@ -47,9 +32,9 @@ def test_streamed_assignment_equals_batch(spark, sf_small, tmp_path_factory):
         emb.filter(F.col("vec_id") % 3 == i).coalesce(1).write.mode("append").parquet(
             chunk_dir
         )
-    holder = _drain(spark, chunk_dir, centroids)
+    holder = _drain(spark, chunk_dir, centroids, state_store())
 
-    got = {(r["vec_id"], r["cluster"]) for r in holder.rows}
+    got = {(r["vec_id"], r["cluster"]) for r in holder.rows["assignments"]}
     base = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
     want = {
         (r["vec_id"], r["cluster"])
@@ -59,7 +44,7 @@ def test_streamed_assignment_equals_batch(spark, sf_small, tmp_path_factory):
     assert len(got) == emb.count()
 
 
-def test_redelivered_vectors_assign_once(spark, sf_small, tmp_path_factory):
+def test_redelivered_vectors_assign_once(spark, sf_small, tmp_path_factory, state_store):
     emb = load_table(spark, sf_small, "embeddings")
     _, centroids = build_ivf_index(emb, k=8, iterations=2)
 
@@ -68,7 +53,7 @@ def test_redelivered_vectors_assign_once(spark, sf_small, tmp_path_factory):
         chunk_dir
     )
     emb.coalesce(1).write.mode("append").parquet(chunk_dir)  # replay + rest
-    holder = _drain(spark, chunk_dir, centroids)
+    holder = _drain(spark, chunk_dir, centroids, state_store())
 
-    vec_ids = [r["vec_id"] for r in holder.rows]
+    vec_ids = [r["vec_id"] for r in holder.rows["assignments"]]
     assert len(vec_ids) == len(set(vec_ids)) == emb.count()  # exactly once

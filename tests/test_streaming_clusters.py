@@ -15,119 +15,109 @@ from lexam_data_pipeline_spark.ml.dedup import (
     q_dedup_ngram_jaccard,
 )
 from lexam_data_pipeline_spark.streaming.clusters import (
-    LABELS_SCHEMA,
     clusters_merge,
     clusters_report,
     start_streaming_clusters,
 )
 
 
-class _Holder:
-    def __init__(self, spark):
-        self.spark, self.rows = spark, None
-
-    def read(self) -> DataFrame | None:
-        if self.rows is None:
-            return None
-        return self.spark.createDataFrame(self.rows, LABELS_SCHEMA)
-
-    def write(self, df: DataFrame) -> None:
-        self.rows = df.collect()
-
-
 def _rows(df: DataFrame) -> list:
     return sorted(tuple(r) for r in df.collect())
 
 
-def _drain_chunks(spark, edges: DataFrame, k: int, order=None) -> _Holder:
-    holder = _Holder(spark)
+def _drain_chunks(holder, edges: DataFrame, k: int, order=None):
     key = F.pmod(F.xxhash64("doc_id_a", "doc_id_b"), F.lit(k))
     for i in order if order is not None else range(k):
         chunk = edges.filter(key == i)
-        holder.write(clusters_merge(holder.read(), chunk))
+        holder.write("labels", clusters_merge(holder.read("labels"), chunk))
     return holder
 
 
 @pytest.mark.parametrize("k", [1, 3])
 @pytest.mark.slowsuite
-def test_drained_labels_equal_batch_key(spark, sf_small, k):
+def test_drained_labels_equal_batch_key(spark, sf_small, k, state_store):
     edges = q_dedup_ngram_jaccard(spark, sf_small).select(
         "doc_id_a", "doc_id_b"
     )
-    holder = _drain_chunks(spark, edges, k)
-    got = _rows(clusters_report(holder.read()))
+    holder = _drain_chunks(state_store(), edges, k)
+    got = _rows(clusters_report(holder.read("labels")))
     want = _rows(q_dedup_clusters(spark, sf_small))
     assert got == want
 
 
 @pytest.mark.slowsuite
-def test_split_order_invariance(spark, sf_small):
+def test_split_order_invariance(spark, sf_small, state_store):
     """Reversed chunk order converges to the same cells — the fold is
     not merely append-order-lucky."""
     edges = q_dedup_ngram_jaccard(spark, sf_small).select(
         "doc_id_a", "doc_id_b"
     )
-    holder = _drain_chunks(spark, edges, 3, order=(2, 0, 1))
-    got = _rows(clusters_report(holder.read()))
+    holder = _drain_chunks(state_store(), edges, 3, order=(2, 0, 1))
+    got = _rows(clusters_report(holder.read("labels")))
     want = _rows(q_dedup_clusters(spark, sf_small))
     assert got == want
 
 
-def test_chain_merge_relabels_losing_cluster(spark):
+def test_chain_merge_relabels_losing_cluster(spark, state_store):
     """Two clusters grown in separate batches, then one bridging edge:
     every member of BOTH must land on the global min — touched-only
     relabeling must still reach members the bridge never named."""
     schema = "doc_id_a long, doc_id_b long"
-    holder = _Holder(spark)
+    holder = state_store()
     holder.write(
+        "labels",
         clusters_merge(
-            holder.read(),
+            holder.read("labels"),
             spark.createDataFrame([(1, 2), (5, 6), (6, 7)], schema),
         )
     )
-    assert _rows(clusters_report(holder.read())) == [
+    assert _rows(clusters_report(holder.read("labels"))) == [
         (1, 1), (2, 1), (5, 5), (6, 5), (7, 5),
     ]
     # bridge 2-5: the {5,6,7} cluster must fully relabel to 1, including
     # node 7 which shares no edge with the bridge
     holder.write(
-        clusters_merge(holder.read(), spark.createDataFrame([(2, 5)], schema))
+        "labels",
+        clusters_merge(holder.read("labels"), spark.createDataFrame([(2, 5)], schema))
     )
-    assert _rows(clusters_report(holder.read())) == [
+    assert _rows(clusters_report(holder.read("labels"))) == [
         (1, 1), (2, 1), (5, 1), (6, 1), (7, 1),
     ]
     # a within-cluster duplicate edge is a no-op
     holder.write(
-        clusters_merge(holder.read(), spark.createDataFrame([(6, 7)], schema))
+        "labels",
+        clusters_merge(holder.read("labels"), spark.createDataFrame([(6, 7)], schema))
     )
-    assert _rows(clusters_report(holder.read())) == [
+    assert _rows(clusters_report(holder.read("labels"))) == [
         (1, 1), (2, 1), (5, 1), (6, 1), (7, 1),
     ]
 
 
-def test_transitive_merge_within_one_batch(spark):
+def test_transitive_merge_within_one_batch(spark, state_store):
     """A batch whose delta edges chain THROUGH existing clusters: the
     contracted graph itself needs transitive closure (one union-find
     pass per edge would miss it)."""
     schema = "doc_id_a long, doc_id_b long"
-    holder = _Holder(spark)
+    holder = state_store()
     holder.write(
+        "labels",
         clusters_merge(
-            holder.read(),
+            holder.read("labels"),
             spark.createDataFrame([(10, 11), (20, 21), (30, 31)], schema),
         )
     )
     # one batch bridges 11-20 AND 21-30: all three clusters collapse
     holder.write(
+        "labels",
         clusters_merge(
-            holder.read(), spark.createDataFrame([(11, 20), (21, 30)], schema)
+            holder.read("labels"), spark.createDataFrame([(11, 20), (21, 30)], schema)
         )
     )
-    got = _rows(clusters_report(holder.read()))
+    got = _rows(clusters_report(holder.read("labels")))
     assert got == [(n, 10) for n in (10, 11, 20, 21, 30, 31)]
 
 
-def test_streaming_drain_equals_batch(spark, sf_small, tmp_path):
+def test_streaming_drain_equals_batch(spark, sf_small, tmp_path, state_store):
     """End-to-end through foreachBatch: 3 files → micro-batches under
     maxFilesPerTrigger=1; drained labels equal the batch operator."""
     edges = q_dedup_ngram_jaccard(spark, sf_small).select(
@@ -143,10 +133,10 @@ def test_streaming_drain_equals_batch(spark, sf_small, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(chunk_dir)
     )
-    holder = _Holder(spark)
+    holder = state_store()
     q = start_streaming_clusters(stream, holder.read, holder.write)
     q.awaitTermination(120)
-    got = _rows(clusters_report(holder.read()))
+    got = _rows(clusters_report(holder.read("labels")))
     want = _rows(
         connected_components(edges, "doc_id_a", "doc_id_b").select(
             F.col("node").alias("doc_id"), F.col("cluster").alias("cluster_id")

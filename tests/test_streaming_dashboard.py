@@ -15,7 +15,6 @@ from lexam_data_pipeline_spark.plans.fixture_queries import (
 )
 from lexam_data_pipeline_spark.streaming.dashboard import (
     STATE_TABLES,
-    _SCHEMAS,
     dashboard_merge,
     dashboard_report,
     start_streaming_dashboard,
@@ -24,46 +23,30 @@ from lexam_data_pipeline_spark.streaming.dashboard import (
 CONFIGS = ["mcq_4_choices", "open_question"]
 
 
-class _Holder:
-    def __init__(self, spark):
-        self.spark, self.rows = spark, {}
-
-    def read(self, name: str) -> DataFrame | None:
-        if name not in self.rows:
-            return None
-        return self.spark.createDataFrame(self.rows[name], _SCHEMAS[name])
-
-    def write(self, name: str, df: DataFrame) -> None:
-        self.rows[name] = df.collect()
-
-    def state(self):
-        return {t: self.read(t) for t in STATE_TABLES}
-
-
 def _rows(df: DataFrame) -> list:
     return sorted(tuple(r) for r in df.collect())
 
 
 @pytest.mark.parametrize("k", [1, 3])
 @pytest.mark.slowsuite
-def test_drained_report_equals_batch_key(spark, sf_small, k):
+def test_drained_report_equals_batch_key(spark, sf_small, k, state_store):
     questions, variants = _lexam_projection(spark, sf_small)
-    holder = _Holder(spark)
+    holder = state_store()
     for i in range(k):
         cond = F.pmod(F.col("id").cast("bigint"), F.lit(k)) == i
         qb = questions.filter(cond)
         vb = variants.filter(
             F.pmod(F.col("question_id").cast("bigint"), F.lit(k)) == i
         )
-        new_state = dashboard_merge(holder.state(), qb, vb, configs=CONFIGS)
+        new_state = dashboard_merge(holder.state(STATE_TABLES), qb, vb, configs=CONFIGS)
         for t in STATE_TABLES:
             holder.write(t, new_state[t])
-    got = _rows(dashboard_report(holder.state()))
+    got = _rows(dashboard_report(holder.state(STATE_TABLES)))
     want = _rows(q_dashboard_suite(spark, sf_small))
     assert got == want
 
 
-def test_streaming_drain_equals_batch_key(spark, sf_small, tmp_path):
+def test_streaming_drain_equals_batch_key(spark, sf_small, tmp_path, state_store):
     """End-to-end through foreachBatch: the documents stream in 3 files;
     each batch derives its questions+variants via the same projection
     (a question's variants arrive atomically with it — the maintainer
@@ -79,7 +62,7 @@ def test_streaming_drain_equals_batch_key(spark, sf_small, tmp_path):
         _lexam_projection_from,
     )
 
-    holder = _Holder(spark)
+    holder = state_store()
     stream = (
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
@@ -94,6 +77,6 @@ def test_streaming_drain_equals_batch_key(spark, sf_small, tmp_path):
         configs=CONFIGS,
     )
     query.awaitTermination(180)
-    got = _rows(dashboard_report(holder.state()))
+    got = _rows(dashboard_report(holder.state(STATE_TABLES)))
     want = _rows(q_dashboard_suite(spark, sf_small))
     assert got == want

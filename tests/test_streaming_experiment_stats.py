@@ -16,7 +16,6 @@ from lexam_data_pipeline_spark.plans.fixture_queries import (
 )
 from lexam_data_pipeline_spark.streaming.experiment_stats import (
     STATE_TABLES,
-    _SCHEMAS,
     _median_from_cells,
     experiment_stats_fold_answers,
     experiment_stats_fold_judgments,
@@ -25,33 +24,16 @@ from lexam_data_pipeline_spark.streaming.experiment_stats import (
 )
 
 
-class _Holder:
-    def __init__(self, spark):
-        self.spark, self.rows = spark, {}
-
-    def read(self, name: str) -> DataFrame | None:
-        if name not in self.rows:
-            return None
-        return self.spark.createDataFrame(self.rows[name], _SCHEMAS[name])
-
-    def write(self, name: str, df: DataFrame) -> None:
-        self.rows[name] = df.collect()
-
-    def state(self):
-        return {t: self.read(t) for t in STATE_TABLES}
-
-
 def _rows(df: DataFrame) -> list:
     return sorted(tuple(r) for r in df.collect())
 
 
-def _drain(spark, proj, k: int, order=None) -> _Holder:
+def _drain(holder, proj, k: int, order=None):
     questions, variants, answers, judgments = proj
-    holder = _Holder(spark)
     for i in order if order is not None else range(k):
         a_chunk = answers.filter(F.pmod(F.col("id"), F.lit(k)) == i)
         st = experiment_stats_fold_answers(
-            holder.state(), a_chunk, variants, questions, experiment_id=1
+            holder.state(STATE_TABLES), a_chunk, variants, questions, experiment_id=1
         )
         # the generate→judge ordering: this trigger's judgments are the
         # ones referencing this trigger's answers
@@ -72,27 +54,27 @@ def proj(spark, sf_small):
 
 @pytest.mark.parametrize("k", [1, 3])
 @pytest.mark.slowsuite
-def test_drained_report_equals_batch_key(spark, sf_small, proj, k):
-    holder = _drain(spark, proj, k)
-    got = _rows(experiment_stats_report(holder.state()))
+def test_drained_report_equals_batch_key(spark, sf_small, proj, k, state_store):
+    holder = _drain(state_store(), proj, k)
+    got = _rows(experiment_stats_report(holder.state(STATE_TABLES)))
     want = _rows(q_experiment_stats(spark, sf_small))
     assert got == want
 
 
 @pytest.mark.slowsuite
-def test_split_order_invariance(spark, sf_small, proj):
-    holder = _drain(spark, proj, 3, order=(2, 0, 1))
-    got = _rows(experiment_stats_report(holder.state()))
+def test_split_order_invariance(spark, sf_small, proj, state_store):
+    holder = _drain(state_store(), proj, 3, order=(2, 0, 1))
+    got = _rows(experiment_stats_report(holder.state(STATE_TABLES)))
     want = _rows(q_experiment_stats(spark, sf_small))
     assert got == want
 
 
 @pytest.mark.slowsuite
-def test_judgment_lags_answer_by_a_trigger(spark, sf_small, proj):
+def test_judgment_lags_answer_by_a_trigger(spark, sf_small, proj, state_store):
     """Judgments folded one trigger AFTER their answers (the other legal
     ordering under the contract) must converge to the same cells."""
     questions, variants, answers, judgments = proj
-    holder = _Holder(spark)
+    holder = state_store()
     k = 3
     prev_ids = None
     for i in range(k + 1):
@@ -101,7 +83,7 @@ def test_judgment_lags_answer_by_a_trigger(spark, sf_small, proj):
         else:
             a_chunk = answers.filter(F.lit(False))  # drain trigger
         st = experiment_stats_fold_answers(
-            holder.state(), a_chunk, variants, questions, experiment_id=1
+            holder.state(STATE_TABLES), a_chunk, variants, questions, experiment_id=1
         )
         if prev_ids is not None:
             j_chunk = judgments.join(prev_ids, "answer_id", "left_semi")
@@ -109,7 +91,7 @@ def test_judgment_lags_answer_by_a_trigger(spark, sf_small, proj):
         for t in STATE_TABLES:
             holder.write(t, st[t])
         prev_ids = a_chunk.select(F.col("id").alias("answer_id"))
-    got = _rows(experiment_stats_report(holder.state()))
+    got = _rows(experiment_stats_report(holder.state(STATE_TABLES)))
     want = _rows(q_experiment_stats(spark, sf_small))
     assert got == want
 
@@ -133,7 +115,7 @@ def test_score_cell_quantization_is_identity_in_contract(spark):
 
 
 @pytest.mark.slowsuite
-def test_adversarial_scores_state_hard_bounded(spark):
+def test_adversarial_scores_state_hard_bounded(spark, state_store):
     """Round-9 verdict item 5: a stream of arbitrary-precision float
     scores must NOT grow one cell per distinct float — the quantized key
     bounds cells at the 1e-5 grid, and the report still serves (no
@@ -171,11 +153,11 @@ def test_adversarial_scores_state_hard_bounded(spark):
     questions = spark.createDataFrame(
         [("q", "A", "C")], "id string, area string, course string"
     )
-    holder = _Holder(spark)
+    holder = state_store()
     for i in range(2):
         a_chunk = answers.filter(F.pmod(F.col("id"), F.lit(2)) == i)
         st = experiment_stats_fold_answers(
-            holder.state(), a_chunk, variants, questions, experiment_id=1
+            holder.state(STATE_TABLES), a_chunk, variants, questions, experiment_id=1
         )
         j_chunk = judgments.join(
             a_chunk.select(F.col("id").alias("answer_id")), "answer_id", "left_semi"
@@ -186,7 +168,7 @@ def test_adversarial_scores_state_hard_bounded(spark):
     n_cells = len(holder.rows["jscore_cells"])
     assert n_cells <= 201, n_cells  # 1e-5 grid over [0, 0.002]
     assert sum(r["n"] for r in holder.rows["jscore_cells"]) == n
-    flat = experiment_stats_report(holder.state(), n_answers=1).collect()
+    flat = experiment_stats_report(holder.state(STATE_TABLES), n_answers=1).collect()
     avg = next(
         r["value_num"] for r in flat
         if r["section"] == "open" and r["metric"] == "avg_score"
@@ -205,7 +187,7 @@ def test_median_interpolation_formula():
     assert _median_from_cells([(0.0, 1), (0.25, 1), (0.75, 1), (1.0, 1)]) == 0.5
 
 
-def test_zero_scores_report_equals_batch_empty_key(spark, sf_small, proj):
+def test_zero_scores_report_equals_batch_empty_key(spark, sf_small, proj, state_store):
     """The zero-scores edge streams too (round-9 verdict item 2):
     experiment 2 under a judge that never ran ('judge-z'), n_answers=1 —
     the served report must equal q_experiment_stats_empty exactly, i.e.
@@ -217,11 +199,11 @@ def test_zero_scores_report_equals_batch_empty_key(spark, sf_small, proj):
     )
 
     questions, variants, answers, judgments = proj
-    holder = _Holder(spark)
+    holder = state_store()
     for i in range(2):
         a_chunk = answers.filter(F.pmod(F.col("id"), F.lit(2)) == i)
         st = experiment_stats_fold_answers(
-            holder.state(), a_chunk, variants, questions, experiment_id=2
+            holder.state(STATE_TABLES), a_chunk, variants, questions, experiment_id=2
         )
         j_chunk = judgments.join(
             a_chunk.select(F.col("id").alias("answer_id")), "answer_id", "left_semi"
@@ -229,7 +211,7 @@ def test_zero_scores_report_equals_batch_empty_key(spark, sf_small, proj):
         st = experiment_stats_fold_judgments(st, j_chunk, judge_model="judge-z")
         for t in STATE_TABLES:
             holder.write(t, st[t])
-    got = _rows(experiment_stats_report(holder.state(), n_answers=1))
+    got = _rows(experiment_stats_report(holder.state(STATE_TABLES), n_answers=1))
     want = _rows(q_experiment_stats_empty(spark, sf_small))
     assert got == want
     sections = {r[0] for r in got}
@@ -238,7 +220,7 @@ def test_zero_scores_report_equals_batch_empty_key(spark, sf_small, proj):
     assert "overall" in sections and "tokens" in sections
 
 
-def test_streaming_drain_equals_batch(spark, sf_small, proj, tmp_path):
+def test_streaming_drain_equals_batch(spark, sf_small, proj, tmp_path, state_store):
     """End-to-end through foreachBatch: answer files arrive one per
     trigger; each trigger folds that batch's judgments from the
     judgment source (generate→judge ordering)."""
@@ -253,12 +235,12 @@ def test_streaming_drain_equals_batch(spark, sf_small, proj, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(chunk_dir)
     )
-    holder = _Holder(spark)
+    holder = state_store()
     q = start_streaming_experiment_stats(
         stream, judgments, variants, questions,
         holder.read, holder.write, experiment_id=1,
     )
     q.awaitTermination(120)
-    got = _rows(experiment_stats_report(holder.state()))
+    got = _rows(experiment_stats_report(holder.state(STATE_TABLES)))
     want = _rows(q_experiment_stats(spark, sf_small))
     assert got == want

@@ -20,7 +20,6 @@ from lexam_data_pipeline_spark.ml.graph import label_propagation, pagerank
 from lexam_data_pipeline_spark.streaming.graph import (
     LPA_STATE_TABLES,
     PR_STATE_TABLES,
-    _SCHEMAS,
     lpa_affected_edges,
     lpa_merge,
     lpa_report,
@@ -29,22 +28,6 @@ from lexam_data_pipeline_spark.streaming.graph import (
     start_streaming_lpa,
     start_streaming_pagerank,
 )
-
-
-class _Holder:
-    def __init__(self, spark, tables):
-        self.spark, self.tables, self.rows = spark, tables, {}
-
-    def read(self, name: str) -> DataFrame | None:
-        if name not in self.rows:
-            return None
-        return self.spark.createDataFrame(self.rows[name], _SCHEMAS[name])
-
-    def write(self, name: str, df: DataFrame) -> None:
-        self.rows[name] = df.collect()
-
-    def state(self):
-        return {t: self.read(t) for t in self.tables}
 
 
 def _pairs_df(spark, pairs):
@@ -65,10 +48,9 @@ BRIDGE = [(4, 10)]
 ALL_PAIRS = CLIQ_A + CLIQ_B + CHAIN + BRIDGE
 
 
-def _drain_lpa(spark, batches) -> _Holder:
-    holder = _Holder(spark, LPA_STATE_TABLES)
+def _drain_lpa(holder, spark, batches):
     for batch in batches:
-        st = lpa_merge(holder.state(), _pairs_df(spark, batch))
+        st = lpa_merge(holder.state(LPA_STATE_TABLES), _pairs_df(spark, batch))
         for t in LPA_STATE_TABLES:
             holder.write(t, st[t])
     return holder
@@ -84,17 +66,17 @@ def _drain_lpa(spark, batches) -> _Holder:
     ],
 )
 @pytest.mark.slowsuite
-def test_lpa_drained_equals_batch(spark, batches):
-    holder = _drain_lpa(spark, batches)
+def test_lpa_drained_equals_batch(spark, batches, state_store):
+    holder = _drain_lpa(state_store(), spark, batches)
     got = _labels_of(holder.read("labels"))
     want = _labels_of(label_propagation(_pairs_df(spark, ALL_PAIRS)))
     assert got == want
 
 
-def test_lpa_touches_only_affected_component(spark):
+def test_lpa_touches_only_affected_component(spark, state_store):
     """A batch landing inside one component must recompute exactly that
     component's edges — the chain and clique B are never rescanned."""
-    holder = _drain_lpa(spark, [ALL_PAIRS])
+    holder = _drain_lpa(state_store(), spark, [ALL_PAIRS])
     comps = holder.read("comps")
     edges = holder.read("edges")
     batch_nodes = spark.createDataFrame([(1,), (3,)], "node long")
@@ -105,7 +87,7 @@ def test_lpa_touches_only_affected_component(spark):
     assert got == want
 
 
-def test_lpa_report_equals_batch_key(spark, sf_small):
+def test_lpa_report_equals_batch_key(spark, sf_small, state_store):
     """End-to-end against the driver-oracled batch key: feed the
     co-purchase mutual-top-K pairs in two batches; the served community
     rollup must equal q_label_propagation row-for-row."""
@@ -116,43 +98,43 @@ def test_lpa_report_equals_batch_key(spark, sf_small):
     )
 
     pairs = copurchase_mutual_topk(spark, sf_small, TRIANGLE_TOP_K).cache()
-    holder = _Holder(spark, LPA_STATE_TABLES)
+    holder = state_store()
     for i in range(2):
         chunk = pairs.filter(F.pmod(F.col("u") + F.col("v"), F.lit(2)) == i)
-        st = lpa_merge(holder.state(), chunk)
+        st = lpa_merge(holder.state(LPA_STATE_TABLES), chunk)
         for t in LPA_STATE_TABLES:
             holder.write(t, st[t])
-    got = [tuple(r) for r in lpa_report(holder.state()).collect()]
+    got = [tuple(r) for r in lpa_report(holder.state(LPA_STATE_TABLES)).collect()]
     want = [tuple(r) for r in q_label_propagation(spark, sf_small).collect()]
     assert got == want
 
 
-def test_empty_batches_are_noops(spark):
+def test_empty_batches_are_noops(spark, state_store):
     """foreachBatch can deliver empty triggers; both folds must carry
     state over untouched (PageRank must NOT pay a re-converge)."""
     import time
 
-    holder = _drain_lpa(spark, [CLIQ_A])
+    holder = _drain_lpa(state_store(), spark, [CLIQ_A])
     before = {t: sorted(map(tuple, holder.rows[t])) for t in LPA_STATE_TABLES}
-    st = lpa_merge(holder.state(), _pairs_df(spark, []).limit(0))
+    st = lpa_merge(holder.state(LPA_STATE_TABLES), _pairs_df(spark, []).limit(0))
     for t in LPA_STATE_TABLES:
         holder.write(t, st[t])
     assert {t: sorted(map(tuple, holder.rows[t])) for t in LPA_STATE_TABLES} == before
 
-    pr = _Holder(spark, PR_STATE_TABLES)
-    st = pagerank_merge(pr.state(), _pairs_df(spark, _sym([(1, 2), (2, 3)])), damping=0.5)
+    pr = state_store()
+    st = pagerank_merge(pr.state(PR_STATE_TABLES), _pairs_df(spark, _sym([(1, 2), (2, 3)])), damping=0.5)
     for t in PR_STATE_TABLES:
         pr.write(t, st[t])
     before_pr = {t: sorted(map(tuple, pr.rows[t])) for t in PR_STATE_TABLES}
     t0 = time.perf_counter()
-    st = pagerank_merge(pr.state(), _pairs_df(spark, []).limit(0), damping=0.5)
+    st = pagerank_merge(pr.state(PR_STATE_TABLES), _pairs_df(spark, []).limit(0), damping=0.5)
     for t in PR_STATE_TABLES:
         pr.write(t, st[t])
     assert {t: sorted(map(tuple, pr.rows[t])) for t in PR_STATE_TABLES} == before_pr
     assert time.perf_counter() - t0 < 5  # skip path, not a re-converge
 
 
-def test_lpa_streaming_drain(spark, tmp_path):
+def test_lpa_streaming_drain(spark, tmp_path, state_store):
     """End-to-end through foreachBatch with maxFilesPerTrigger=1."""
     chunk_dir = str(tmp_path / "pair_chunks")
     for batch in (CLIQ_A, CLIQ_B + CHAIN, BRIDGE):
@@ -162,7 +144,7 @@ def test_lpa_streaming_drain(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(chunk_dir)
     )
-    holder = _Holder(spark, LPA_STATE_TABLES)
+    holder = state_store()
     q = start_streaming_lpa(stream, holder.read, holder.write)
     q.awaitTermination(120)
     got = _labels_of(holder.read("labels"))
@@ -204,16 +186,16 @@ def _ranks_of(df: DataFrame) -> dict[int, float]:
 
 
 @pytest.mark.slowsuite
-def test_pagerank_drained_converges_to_batch_fixed_point(spark):
+def test_pagerank_drained_converges_to_batch_fixed_point(spark, state_store):
     """Drained warm-started ranks equal the from-scratch converged run:
     the iteration map has ONE fixed point, so any split converges to it."""
     base = _ring_hub()
     extra = _sym([(3, 17), (5, 11)])
     batches = [base[: len(base) // 2], base[len(base) // 2:], extra]
-    holder = _Holder(spark, PR_STATE_TABLES)
+    holder = state_store()
     for batch in batches:
         st = pagerank_merge(
-            holder.state(),
+            holder.state(PR_STATE_TABLES),
             _pairs_df(spark, batch),
             damping=0.5,          # contraction 0.5 → tol reached in ~40 rounds
             tol=1e-12,
@@ -272,7 +254,7 @@ def test_warm_start_noop_batch_costs_nothing(spark):
     assert _l1(again5, fixed_map) < 1e-11
 
 
-def test_pagerank_streaming_drain_and_report(spark, tmp_path):
+def test_pagerank_streaming_drain_and_report(spark, tmp_path, state_store):
     chunk_dir = str(tmp_path / "edge_chunks")
     base = _ring_hub(12)
     for i in range(2):
@@ -284,10 +266,10 @@ def test_pagerank_streaming_drain_and_report(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(chunk_dir)
     )
-    holder = _Holder(spark, PR_STATE_TABLES)
+    holder = state_store()
     q = start_streaming_pagerank(stream, holder.read, holder.write, damping=0.5)
     q.awaitTermination(120)
-    top = pagerank_report(holder.state(), top_k=1).collect()
+    top = pagerank_report(holder.state(PR_STATE_TABLES), top_k=1).collect()
     assert top[0]["node"] == 0  # the hub dominates
     want = _ranks_of(
         pagerank(

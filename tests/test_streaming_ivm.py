@@ -16,19 +16,6 @@ from lexam_data_pipeline_spark.streaming.ivm import (
 )
 
 
-class _Holder:
-    def __init__(self, spark, schema):
-        self.spark, self.schema, self.rows = spark, schema, None
-
-    def read(self) -> DataFrame | None:
-        if self.rows is None:
-            return None
-        return self.spark.createDataFrame(self.rows, self.schema)
-
-    def write(self, df: DataFrame) -> None:
-        self.rows = df.collect()
-
-
 def _split(batch: DataFrame) -> tuple[DataFrame, DataFrame]:
     left = batch.filter(F.col("event_type") == "signup").select(
         "user_id", F.col("event_id").alias("signup_id")
@@ -49,7 +36,7 @@ def _batch_expected(spark, sf_dir: str) -> Counter:
     )
 
 
-def test_drained_view_equals_batch_join(spark, sf_small, tmp_path):
+def test_drained_view_equals_batch_join(spark, sf_small, tmp_path, state_store):
     ev = load_table(spark, sf_small, "events")
     ranked = ev.withColumn("rk", F.row_number().over(Window.orderBy("ts", "event_id")))
     n = ranked.count()
@@ -60,8 +47,7 @@ def test_drained_view_equals_batch_join(spark, sf_small, tmp_path):
             (F.col("rk") > i * per) & (F.col("rk") <= (i + 1) * per)
         ).drop("rk").coalesce(1).write.mode("append").parquet(chunk_dir)
 
-    a = _Holder(spark, "user_id long, signup_id long")
-    b = _Holder(spark, "user_id long, purchase_id long, amount double")
+    legs = state_store()
     view: Counter = Counter()
 
     def append_view(delta):
@@ -73,7 +59,7 @@ def test_drained_view_equals_batch_join(spark, sf_small, tmp_path):
 
     stream = read_events_stream(spark, chunk_dir, max_files_per_trigger=1)
     q = start_streaming_join_view(
-        stream, _split, ["user_id"], a.read, a.write, b.read, b.write, append_view
+        stream, _split, ["user_id"], legs.read, legs.write, append_view
     )
     q.awaitTermination(180)
     expected = _batch_expected(spark, sf_small)

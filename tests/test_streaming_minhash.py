@@ -12,31 +12,11 @@ from pyspark.sql import DataFrame, functions as F
 from lexam_data_pipeline_spark.catalog import load_table
 from lexam_data_pipeline_spark.ml.dedup import q_minhash_lsh_pairs
 from lexam_data_pipeline_spark.streaming.minhash import (
-    MINHASH_K,
     STATE_TABLES,
-    _schemas,
     minhash_merge,
     minhash_report,
     start_streaming_minhash,
 )
-
-
-class _Holder:
-    def __init__(self, spark):
-        self.spark, self.rows = spark, {}
-
-    def read(self, name: str) -> DataFrame | None:
-        if name not in self.rows:
-            return None
-        return self.spark.createDataFrame(
-            self.rows[name], _schemas(MINHASH_K)[name]
-        )
-
-    def write(self, name: str, df: DataFrame) -> None:
-        self.rows[name] = df.collect()
-
-    def state(self):
-        return {t: self.read(t) for t in STATE_TABLES}
 
 
 def _rows(df: DataFrame) -> list:
@@ -45,21 +25,21 @@ def _rows(df: DataFrame) -> list:
 
 @pytest.mark.parametrize("k", [1, 3])
 @pytest.mark.slowsuite
-def test_drained_pairs_equal_batch_key(spark, sf_small, k):
+def test_drained_pairs_equal_batch_key(spark, sf_small, k, state_store):
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-    holder = _Holder(spark)
+    holder = state_store()
     for i in range(k):
         chunk = docs.filter(F.pmod(F.col("doc_id"), F.lit(k)) == i)
-        st = minhash_merge(holder.state(), chunk)
+        st = minhash_merge(holder.state(STATE_TABLES), chunk)
         for t in STATE_TABLES:
             holder.write(t, st[t])
-    got = _rows(minhash_report(holder.state()))
+    got = _rows(minhash_report(holder.state(STATE_TABLES)))
     want = _rows(q_minhash_lsh_pairs(spark, sf_small))
     assert got == want
     assert got, "fixture must produce at least one candidate pair"
 
 
-def test_cross_batch_collision(spark):
+def test_cross_batch_collision(spark, state_store):
     """A near-identical pair split across triggers is found when the
     SECOND doc arrives — against the maintained index, not a rescan."""
     base = "the quick brown fox jumps over the lazy dog again and again " * 5
@@ -68,12 +48,12 @@ def test_cross_batch_collision(spark):
         [(2, base + "tail"), (3, "completely different words entirely " * 8)],
         "doc_id long, text string",
     )
-    holder = _Holder(spark)
-    st = minhash_merge(holder.state(), d1)
+    holder = state_store()
+    st = minhash_merge(holder.state(STATE_TABLES), d1)
     for t in STATE_TABLES:
         holder.write(t, st[t])
     assert holder.rows["pairs"] == []
-    st = minhash_merge(holder.state(), d2)
+    st = minhash_merge(holder.state(STATE_TABLES), d2)
     for t in STATE_TABLES:
         holder.write(t, st[t])
     pairs = {(r["doc_id_a"], r["doc_id_b"]): r["est_jaccard"] for r in holder.rows["pairs"]}
@@ -82,39 +62,39 @@ def test_cross_batch_collision(spark):
     assert (1, 3) not in pairs and (2, 3) not in pairs
 
 
-def test_empty_batch_is_noop(spark, sf_small):
+def test_empty_batch_is_noop(spark, sf_small, state_store):
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-    holder = _Holder(spark)
-    st = minhash_merge(holder.state(), docs.limit(50))
+    holder = state_store()
+    st = minhash_merge(holder.state(STATE_TABLES), docs.limit(50))
     for t in STATE_TABLES:
         holder.write(t, st[t])
     before = {t: sorted(map(tuple, holder.rows[t])) for t in STATE_TABLES}
-    st = minhash_merge(holder.state(), docs.filter(F.lit(False)))
+    st = minhash_merge(holder.state(STATE_TABLES), docs.filter(F.lit(False)))
     for t in STATE_TABLES:
         holder.write(t, st[t])
     after = {t: sorted(map(tuple, holder.rows[t])) for t in STATE_TABLES}
     assert before == after
 
 
-def test_replayed_batch_is_idempotent(spark, sf_small):
+def test_replayed_batch_is_idempotent(spark, sf_small, state_store):
     """foreachBatch is at-least-once: re-delivering the SAME micro-batch
     must leave all three state tables unchanged (no duplicated signature
     rows skewing later est_jaccard joins)."""
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
     batch = docs.limit(50)
-    holder = _Holder(spark)
-    st = minhash_merge(holder.state(), batch)
+    holder = state_store()
+    st = minhash_merge(holder.state(STATE_TABLES), batch)
     for t in STATE_TABLES:
         holder.write(t, st[t])
     before = {t: sorted(map(tuple, holder.rows[t])) for t in STATE_TABLES}
-    st = minhash_merge(holder.state(), batch)  # replay, verbatim
+    st = minhash_merge(holder.state(STATE_TABLES), batch)  # replay, verbatim
     for t in STATE_TABLES:
         holder.write(t, st[t])
     after = {t: sorted(map(tuple, holder.rows[t])) for t in STATE_TABLES}
     assert before == after
 
 
-def test_streaming_drain_equals_batch(spark, sf_small, tmp_path):
+def test_streaming_drain_equals_batch(spark, sf_small, tmp_path, state_store):
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
     chunk_dir = str(tmp_path / "doc_chunks")
     for i in range(2):
@@ -126,9 +106,9 @@ def test_streaming_drain_equals_batch(spark, sf_small, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(chunk_dir)
     )
-    holder = _Holder(spark)
+    holder = state_store()
     q = start_streaming_minhash(stream, holder.read, holder.write)
     q.awaitTermination(120)
-    got = _rows(minhash_report(holder.state()))
+    got = _rows(minhash_report(holder.state(STATE_TABLES)))
     want = _rows(q_minhash_lsh_pairs(spark, sf_small))
     assert got == want

@@ -4,6 +4,9 @@ scoring after draining the stream — including under re-delivered docs
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import DataFrame, functions as F
 
 from lexam_data_pipeline_spark.catalog import load_table
@@ -15,38 +18,18 @@ from lexam_data_pipeline_spark.ml.retrieval import (
     score_postings,
 )
 from lexam_data_pipeline_spark.streaming.retrieval import start_streaming_index
+from lexam_data_pipeline_spark.streaming.state import parquet_state_store
 
 DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
-POSTINGS_SCHEMA = "doc_id long, dl long, term string, tf bigint"
-STATS_SCHEMA = "n_docs bigint, total_dl bigint"
 
 
-class _Holder:
-    def __init__(self, spark, schema: str):
-        self.spark, self.schema, self.rows = spark, schema, None
-
-    def read(self) -> DataFrame | None:
-        if self.rows is None:
-            return None
-        return self.spark.createDataFrame(self.rows, self.schema)
-
-    def write(self, df: DataFrame) -> None:
-        self.rows = df.collect()
-
-
-def _drain(spark, chunk_dir: str):
-    postings = _Holder(spark, POSTINGS_SCHEMA)
-    stats = _Holder(spark, STATS_SCHEMA)
+def _drain(spark, chunk_dir: str, read_state, write_state) -> None:
     stream = (
         spark.readStream.schema(DOC_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(chunk_dir)
     )
-    q = start_streaming_index(
-        stream, postings.read, postings.write, stats.read, stats.write
-    )
-    q.awaitTermination(120)
-    return postings, stats
+    start_streaming_index(stream, read_state, write_state).awaitTermination(120)
 
 
 def _write_chunks(spark, sf_small: str, chunk_dir: str, n_chunks: int = 3) -> DataFrame:
@@ -58,14 +41,15 @@ def _write_chunks(spark, sf_small: str, chunk_dir: str, n_chunks: int = 3) -> Da
     return docs
 
 
-def test_index_scoring_equals_batch_scoring(spark, sf_small, tmp_path_factory):
+def test_index_scoring_equals_batch_scoring(spark, sf_small, tmp_path_factory, state_store):
     chunk_dir = str(tmp_path_factory.mktemp("docs_stream"))
     docs = _write_chunks(spark, sf_small, chunk_dir)
-    postings, stats = _drain(spark, chunk_dir)
+    index = state_store()
+    _drain(spark, chunk_dir, index.read, index.write)
 
     got = {
         r["doc_id"]: (r["n_terms"], r["score_scaled"])
-        for r in score_postings(postings.read(), stats.read(), QUERY_TERMS).collect()
+        for r in score_postings(index.read("postings"), index.read("stats"), QUERY_TERMS).collect()
     }
     want = {
         r["doc_id"]: (r["n_terms"], r["score_scaled"])
@@ -75,20 +59,21 @@ def test_index_scoring_equals_batch_scoring(spark, sf_small, tmp_path_factory):
     assert len(got) > 0
 
 
-def test_redelivered_docs_fold_in_idempotently(spark, sf_small, tmp_path_factory):
+def test_redelivered_docs_fold_in_idempotently(spark, sf_small, tmp_path_factory, state_store):
     chunk_dir = str(tmp_path_factory.mktemp("docs_replay"))
     docs = load_table(spark, sf_small, "documents")
     half = docs.filter(F.col("doc_id") % 2 == 0)
     half.coalesce(1).write.mode("append").parquet(chunk_dir)
     # replay: the same docs arrive again, plus the other half
     docs.coalesce(1).write.mode("append").parquet(chunk_dir)
-    postings, stats = _drain(spark, chunk_dir)
+    index = state_store()
+    _drain(spark, chunk_dir, index.read, index.write)
 
-    n_docs = stats.read().collect()[0]["n_docs"]
+    n_docs = index.read("stats").collect()[0]["n_docs"]
     assert n_docs == docs.count()  # no double count
     got = {
         r["doc_id"]: r["score_scaled"]
-        for r in score_postings(postings.read(), stats.read(), QUERY_TERMS).collect()
+        for r in score_postings(index.read("postings"), index.read("stats"), QUERY_TERMS).collect()
     }
     want = {
         r["doc_id"]: r["score_scaled"]
@@ -101,62 +86,57 @@ def test_parquet_state_store_atomic_swap(spark, sf_small, tmp_path_factory):
     """The production state store: lazy merged plans reference the
     version directory they were read from, writes land in a NEW version
     and flip the _CURRENT pointer — so folding many batches through the
-    same store path never reads-while-overwriting, and the final index
-    still equals from-scratch batch scoring."""
-    import os
-
-    from lexam_data_pipeline_spark.streaming.retrieval import parquet_state_store
-
+    same store never reads-while-overwriting, and the final index still
+    equals from-scratch batch scoring."""
     chunk_dir = str(tmp_path_factory.mktemp("docs_swap"))
     docs = _write_chunks(spark, sf_small, chunk_dir)
-    state_dir = str(tmp_path_factory.mktemp("index_state"))
-    read_p, write_p = parquet_state_store(spark, os.path.join(state_dir, "postings"))
-    read_s, write_s = parquet_state_store(spark, os.path.join(state_dir, "stats"))
-    stream = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunk_dir)
-    )
-    q = start_streaming_index(stream, read_p, write_p, read_s, write_s)
-    q.awaitTermination(120)
+    root = str(tmp_path_factory.mktemp("index_state"))
+    read, write = parquet_state_store(spark, root)
+    _drain(spark, chunk_dir, read, write)
 
     got = {
         r["doc_id"]: (r["n_terms"], r["score_scaled"])
-        for r in score_postings(read_p(), read_s(), QUERY_TERMS).collect()
+        for r in score_postings(read("postings"), read("stats"), QUERY_TERMS).collect()
     }
     want = {
         r["doc_id"]: (r["n_terms"], r["score_scaled"])
         for r in bm25_scores(docs, QUERY_TERMS).collect()
     }
     assert got == want and len(got) > 0
-    # three batches → versions v0..v2, pointer at the last; older versions
-    # still on disk for in-flight readers
-    with open(os.path.join(state_dir, "postings", "_CURRENT")) as fh:
-        assert fh.read().strip() == "v2"
-    assert os.path.isdir(os.path.join(state_dir, "postings", "v0"))
+    # three batches → versions v0..v2 of each table under its own
+    # directory, pointer at the last; older versions still on disk for
+    # in-flight readers
+    for name in ("postings", "stats"):
+        with open(os.path.join(root, name, "_CURRENT")) as fh:
+            assert fh.read().strip() == "v2"
+        assert os.path.isdir(os.path.join(root, name, "v0"))
 
 
 def test_parquet_state_store_crash_leaves_previous_version(spark, tmp_path):
-    """A write that fails mid-flight must leave _CURRENT on the last
-    good version (readers keep working)."""
-    import os
-
-    import pytest as _pytest
-
-    from lexam_data_pipeline_spark.streaming.retrieval import parquet_state_store
-
-    path = str(tmp_path / "state")
-    read, write = parquet_state_store(spark, path)
-    assert read() is None
-    write(spark.createDataFrame([(1, "a")], "id long, s string"))
-    assert [r["id"] for r in read().collect()] == [1]
+    """Two names under one root keep separate versions, and a write that
+    fails mid-flight leaves its table's _CURRENT on the last good
+    version (readers keep working)."""
+    root = str(tmp_path / "state")
+    read, write = parquet_state_store(spark, root)
+    assert read("a") is None
+    write("a", spark.createDataFrame([(1, "a")], "id long, s string"))
+    assert [r["id"] for r in read("a").collect()] == [1]
+    assert read("b") is None  # a's version is not b's
+    write("b", spark.createDataFrame([(7, "b")], "id long, s string"))
+    write("b", spark.createDataFrame([(8, "b")], "id long, s string"))
+    assert [r["id"] for r in read("a").collect()] == [1]
+    assert [r["id"] for r in read("b").collect()] == [8]
 
     # a df whose evaluation explodes: write dies before the pointer flip
     bad = spark.range(1).select(
         F.assert_true(F.lit(False), F.lit("boom")).alias("x")
     )
-    with _pytest.raises(Exception):
-        write(bad)
-    with open(os.path.join(path, "_CURRENT")) as fh:
-        assert fh.read().strip() == "v0"
-    assert [r["id"] for r in read().collect()] == [1]
+    with pytest.raises(Exception):
+        write("a", bad)
+    current = {}
+    for name in ("a", "b"):
+        with open(os.path.join(root, name, "_CURRENT")) as fh:
+            current[name] = fh.read().strip()
+    assert current == {"a": "v0", "b": "v1"}
+    assert [r["id"] for r in read("a").collect()] == [1]
+    assert [r["id"] for r in read("b").collect()] == [8]

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Window, functions as F
 
 from lexam_data_pipeline_spark.catalog import load_table
 from lexam_data_pipeline_spark.plans.fixture_queries import q_scd2_intervals
@@ -15,23 +15,6 @@ from lexam_data_pipeline_spark.streaming.scd2 import (
     scd2_merge,
     start_streaming_scd2,
 )
-
-
-class _Holder:
-    def __init__(self, spark):
-        self.spark, self.rows = spark, None
-        self.schema = (
-            "user_id long, version long, event_type string, valid_from_us long, "
-            "valid_to_us long, n_events long, is_current int"
-        )
-
-    def read(self) -> DataFrame | None:
-        if self.rows is None:
-            return None
-        return self.spark.createDataFrame(self.rows, self.schema)
-
-    def write(self, df: DataFrame) -> None:
-        self.rows = df.collect()
 
 
 def _rows(df) -> set:
@@ -59,17 +42,17 @@ def _write_ordered_chunks(spark, sf_dir: str, out_dir: str, n_chunks: int):
         )
 
 
-def test_drained_state_equals_batch_build(spark, sf_small, tmp_path):
+def test_drained_state_equals_batch_build(spark, sf_small, tmp_path, state_store):
     chunk_dir = str(tmp_path / "ev_chunks")
     _write_ordered_chunks(spark, sf_small, chunk_dir, 3)
-    holder = _Holder(spark)
+    holder = state_store()
     stream = read_events_stream(spark, chunk_dir, max_files_per_trigger=1)
     q = start_streaming_scd2(stream, holder.read, holder.write)
     q.awaitTermination(120)
-    assert _rows(holder.read()) == _rows(q_scd2_intervals(spark, sf_small))
+    assert _rows(holder.read("intervals")) == _rows(q_scd2_intervals(spark, sf_small))
 
 
-def test_merge_is_split_invariant(spark, sf_small):
+def test_merge_is_split_invariant(spark, sf_small, state_store):
     """Folding in 1 batch vs 4 sequential batches gives identical state
     (associativity of run collapse over ordered segments)."""
     ev = load_table(spark, sf_small, "events").orderBy("ts", "event_id")
@@ -79,17 +62,17 @@ def test_merge_is_split_invariant(spark, sf_small):
     per = (n + 3) // 4
     ranked = ev.withColumn("rk", F.row_number().over(Window.orderBy("ts", "event_id")))
     state = None
-    holder = _Holder(spark)
+    holder = state_store()
     for i in range(4):
         chunk = ranked.filter(
             (F.col("rk") > i * per) & (F.col("rk") <= (i + 1) * per)
         ).drop("rk")
-        holder.write(scd2_merge(state, chunk))
-        state = holder.read()  # materialize between folds like a real sink
+        holder.write("intervals", scd2_merge(state, chunk))
+        state = holder.read("intervals")  # materialize between folds like a real sink
     assert _rows(state) == _rows(one)
 
 
-def test_run_continues_across_boundary(spark):
+def test_run_continues_across_boundary(spark, state_store):
     """An unchanged event_type across the batch boundary must EXTEND the
     current interval (no phantom version), a changed type must close it."""
     import pandas as pd
@@ -106,9 +89,9 @@ def test_run_continues_across_boundary(spark):
     b1 = mk([(3, "2024-01-01 12:00", 7, "a", 1.0, "{}"),
              (4, "2024-01-01 13:00", 7, "b", 1.0, "{}")])
     s1 = scd2_merge(None, b0)
-    holder = _Holder(spark)
-    holder.write(s1)
-    s2 = scd2_merge(holder.read(), b1)
+    holder = state_store()
+    holder.write("intervals", s1)
+    s2 = scd2_merge(holder.read("intervals"), b1)
     got = sorted(
         (r["version"], r["event_type"], r["n_events"], r["is_current"])
         for r in s2.collect()

@@ -3,7 +3,7 @@ sketch after draining any micro-batch split (mergeability is exact)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import functions as F
 
 from lexam_data_pipeline_spark.catalog import load_table
 from lexam_data_pipeline_spark.ml.cms import cms_build, cms_estimate
@@ -17,63 +17,49 @@ from lexam_data_pipeline_spark.streaming.sketches import (
 W, D = 256, 4  # small sketch → plenty of collisions → merge bugs visible
 
 
-class _Holder:
-    def __init__(self, spark):
-        self.spark, self.rows = spark, None
-        self.schema = "depth int, bucket long, c long"
-
-    def read(self) -> DataFrame | None:
-        if self.rows is None:
-            return None
-        return self.spark.createDataFrame(self.rows, self.schema)
-
-    def write(self, df: DataFrame) -> None:
-        self.rows = df.collect()
-
-
 def _cells(df) -> dict:
     return {(r["depth"], r["bucket"]): r["c"] for r in df.collect()}
 
 
-def test_drained_state_equals_batch_sketch(spark, sf_small, tmp_path):
+def test_drained_state_equals_batch_sketch(spark, sf_small, tmp_path, state_store):
     ev = load_table(spark, sf_small, "events")
     chunk_dir = str(tmp_path / "ev_chunks")
     for i in range(3):  # 3 files → 3 micro-batches under maxFilesPerTrigger=1
         ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == i).coalesce(1).write.mode(
             "append"
         ).parquet(chunk_dir)
-    holder = _Holder(spark)
+    holder = state_store()
     stream = read_events_stream(spark, chunk_dir, max_files_per_trigger=1)
     q = start_streaming_cms(
         stream, F.col("event_type"), holder.read, holder.write, w=W, d=D
     )
     q.awaitTermination(120)
     batch = cms_build(ev, F.col("event_type"), w=W, d=D)
-    assert _cells(holder.read()) == _cells(batch)
+    assert _cells(holder.read("cms")) == _cells(batch)
 
 
-def test_merge_is_split_invariant(spark, sf_small):
+def test_merge_is_split_invariant(spark, sf_small, state_store):
     ev = load_table(spark, sf_small, "events")
     one = cms_merge(None, ev, F.col("event_type"), w=W, d=D)
-    holder = _Holder(spark)
+    holder = state_store()
     state = None
     for i in range(4):
         chunk = ev.filter(F.pmod(F.col("event_id"), F.lit(4)) == i)
-        holder.write(cms_merge(state, chunk, F.col("event_type"), w=W, d=D))
-        state = holder.read()  # materialize between folds like a real sink
+        holder.write("cms", cms_merge(state, chunk, F.col("event_type"), w=W, d=D))
+        state = holder.read("cms")  # materialize between folds like a real sink
     assert _cells(state) == _cells(one)
 
 
-def test_estimates_from_maintained_state_upper_bound_truth(spark, sf_small):
+def test_estimates_from_maintained_state_upper_bound_truth(spark, sf_small, state_store):
     """Serving path: estimates off the folded state can only OVER-count
     (the no-false-negative property heavy-hitter extraction relies on)."""
     ev = load_table(spark, sf_small, "events")
-    holder = _Holder(spark)
+    holder = state_store()
     state = None
     for i in range(2):
         chunk = ev.filter(F.pmod(F.col("event_id"), F.lit(2)) == i)
-        holder.write(cms_merge(state, chunk, F.col("event_type"), w=W, d=D))
-        state = holder.read()
+        holder.write("cms", cms_merge(state, chunk, F.col("event_type"), w=W, d=D))
+        state = holder.read("cms")
     truth = {
         r["event_type"]: r["n"]
         for r in ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -91,27 +77,11 @@ def test_state_columns_stable():
 # ── HLL distinct-rollup maintenance ─────────────────────────────────────
 
 
-class _BinaryHolder:
-    """Materializing state holder for the (day, sk binary) HLL table."""
-
-    def __init__(self, spark):
-        self.spark, self.rows = spark, None
-        self.schema = "day timestamp, sk binary"
-
-    def read(self) -> DataFrame | None:
-        if self.rows is None:
-            return None
-        return self.spark.createDataFrame(self.rows, self.schema)
-
-    def write(self, df: DataFrame) -> None:
-        self.rows = df.collect()
-
-
 def _weekly(df) -> dict:
     return {r[0]: r["approx_distinct_users"] for r in df.collect()}
 
 
-def test_drained_hll_state_weekly_equals_batch_build(spark, sf_small, tmp_path):
+def test_drained_hll_state_weekly_equals_batch_build(spark, sf_small, tmp_path, state_store):
     """Register-wise union is exact: after draining any micro-batch
     split, weekly estimates off the state EQUAL the batch
     q_hll_merge_windows output."""
@@ -129,16 +99,16 @@ def test_drained_hll_state_weekly_equals_batch_build(spark, sf_small, tmp_path):
         ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == i).coalesce(1).write.mode(
             "append"
         ).parquet(chunk_dir)
-    holder = _BinaryHolder(spark)
+    holder = state_store()
     stream = read_events_stream(spark, chunk_dir, max_files_per_trigger=1)
     q = start_streaming_hll(stream, F.col("user_id"), holder.read, holder.write)
     q.awaitTermination(120)
-    got = _weekly(hll_window_estimates(holder.read()))
+    got = _weekly(hll_window_estimates(holder.read("hll")))
     want = _weekly(q_hll_merge_windows(spark, sf_small))
     assert got == want
 
 
-def test_hll_merge_is_split_invariant_and_error_bounded(spark, sf_small):
+def test_hll_merge_is_split_invariant_and_error_bounded(spark, sf_small, state_store):
     """Folding in 4 splits equals one-shot state; weekly estimates land
     within the HLL error bound (3% at lgK=14) of exact distincts."""
     from lexam_data_pipeline_spark.streaming.sketches import (
@@ -148,12 +118,12 @@ def test_hll_merge_is_split_invariant_and_error_bounded(spark, sf_small):
 
     ev = load_table(spark, sf_small, "events")
     one = hll_merge(None, ev, F.col("user_id"))
-    holder = _BinaryHolder(spark)
+    holder = state_store()
     state = None
     for i in range(4):
         chunk = ev.filter(F.pmod(F.col("event_id"), F.lit(4)) == i)
-        holder.write(hll_merge(state, chunk, F.col("user_id")))
-        state = holder.read()
+        holder.write("hll", hll_merge(state, chunk, F.col("user_id")))
+        state = holder.read("hll")
     assert _weekly(hll_window_estimates(state)) == _weekly(
         hll_window_estimates(one)
     )

@@ -4,7 +4,7 @@ decision row bit-identical to q_ab_sequential's batch walk."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import functions as F
 
 from lexam_data_pipeline_spark.catalog import load_table
 from lexam_data_pipeline_spark.plans.fixture_queries import q_ab_sequential
@@ -18,53 +18,36 @@ from lexam_data_pipeline_spark.streaming.sprt import (
 )
 
 
-class _Holder:
-    def __init__(self, spark):
-        self.spark, self.rows = spark, None
-        self.schema = "day timestamp, n long, conv long"
-
-    def read(self) -> DataFrame | None:
-        if self.rows is None:
-            return None
-        return self.spark.createDataFrame(self.rows, self.schema)
-
-    def write(self, df: DataFrame) -> None:
-        self.rows = df.collect()
-
-
 def _days(df) -> dict:
     return {r["day"]: (r["n"], r["conv"]) for r in df.collect()}
 
 
-def test_drained_state_and_decision_equal_batch(spark, sf_small, tmp_path):
+def test_drained_state_and_decision_equal_batch(spark, sf_small, tmp_path, state_store):
     ev = load_table(spark, sf_small, "events")
     chunk_dir = str(tmp_path / "ev_chunks")
     for i in range(3):
         ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == i).coalesce(1).write.mode(
             "append"
         ).parquet(chunk_dir)
-    holder = _Holder(spark)
+    holder = state_store()
     stream = read_events_stream(spark, chunk_dir, max_files_per_trigger=1)
     q = start_streaming_sprt(stream, holder.read, holder.write)
     q.awaitTermination(120)
-    assert _days(holder.read()) == _days(daily_conversion_counts(ev))
-    got = sprt_from_state(holder.read()).collect()
+    assert _days(holder.read("daily")) == _days(daily_conversion_counts(ev))
+    got = sprt_from_state(holder.read("daily")).collect()
     want = q_ab_sequential(spark, sf_small).collect()
     assert got == want  # bit-identical decision, not approximate
 
 
-def test_merge_is_split_invariant(spark, sf_small):
+def test_merge_is_split_invariant(spark, sf_small, state_store):
     ev = load_table(spark, sf_small, "events")
     one = sprt_merge(None, ev)
     state = None
-    holder_spark = spark
+    holder = state_store()
     for i in range(4):
         chunk = ev.filter(F.pmod(F.col("event_id"), F.lit(4)) == i)
-        merged = sprt_merge(state, chunk)
-        rows = merged.collect()
-        state = holder_spark.createDataFrame(
-            rows, "day timestamp, n long, conv long"
-        )
+        holder.write("daily", sprt_merge(state, chunk))
+        state = holder.read("daily")
     assert _days(state.select(*STATE_COLUMNS)) == _days(one)
 
 

@@ -5,7 +5,7 @@ state must EQUAL q_readability's batch output row-for-row."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import functions as F
 
 from lexam_data_pipeline_spark.catalog import load_table
 from lexam_data_pipeline_spark.plans.fixture_queries import q_readability
@@ -17,23 +17,6 @@ from lexam_data_pipeline_spark.streaming.textstats import (
 )
 
 
-class _Holder:
-    def __init__(self, spark):
-        self.spark, self.rows = spark, None
-        self.schema = (
-            "source string, n_docs long, words long, sentences long, "
-            "syllables long"
-        )
-
-    def read(self) -> DataFrame | None:
-        if self.rows is None:
-            return None
-        return self.spark.createDataFrame(self.rows, self.schema)
-
-    def write(self, df: DataFrame) -> None:
-        self.rows = df.collect()
-
-
 def _cells(df) -> dict:
     return {
         r["source"]: (r["n_docs"], r["words"], r["sentences"], r["syllables"])
@@ -41,14 +24,14 @@ def _cells(df) -> dict:
     }
 
 
-def test_drained_state_equals_batch_counts(spark, sf_small, tmp_path):
+def test_drained_state_equals_batch_counts(spark, sf_small, tmp_path, state_store):
     docs = load_table(spark, sf_small, "documents")
     chunk_dir = str(tmp_path / "doc_chunks")
     for i in range(3):  # 3 files → 3 micro-batches under maxFilesPerTrigger=1
         docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i).coalesce(
             1
         ).write.mode("append").parquet(chunk_dir)
-    holder = _Holder(spark)
+    holder = state_store()
     stream = (
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
@@ -56,36 +39,37 @@ def test_drained_state_equals_batch_counts(spark, sf_small, tmp_path):
     )
     q = start_streaming_readability(stream, holder.read, holder.write)
     q.awaitTermination(120)
-    assert _cells(holder.read()) == _cells(batch_counts(docs))
+    assert _cells(holder.read("counts")) == _cells(batch_counts(docs))
 
 
-def test_merge_is_split_invariant(spark, sf_small):
+def test_merge_is_split_invariant(spark, sf_small, state_store):
     docs = load_table(spark, sf_small, "documents")
     one = readability_merge(None, docs)
     state = None
-    holder = _Holder(spark)
+    holder = state_store()
     for i in range(4):
         chunk = docs.filter(F.pmod(F.col("doc_id"), F.lit(4)) == i)
-        holder.write(readability_merge(state, chunk))
-        state = holder.read()  # materialize between folds like a real sink
+        holder.write("counts", readability_merge(state, chunk))
+        state = holder.read("counts")  # materialize between folds like a real sink
     assert _cells(state) == _cells(one)
 
 
-def test_report_off_state_equals_batch_query(spark, sf_small):
+def test_report_off_state_equals_batch_query(spark, sf_small, state_store):
     """End-to-end equality with the declared contract key: fold the
     corpus in 4 chunks, serve, and compare every column of every row
     against q_readability — bit-for-bit (same integer totals, same
     closing expression)."""
     docs = load_table(spark, sf_small, "documents")
     state = None
-    holder = _Holder(spark)
+    holder = state_store()
     for i in range(4):
         holder.write(
+            "counts",
             readability_merge(
                 state, docs.filter(F.pmod(F.col("doc_id"), F.lit(4)) == i)
             )
         )
-        state = holder.read()
+        state = holder.read("counts")
     served = [tuple(r) for r in readability_report(state).collect()]
     batch = [tuple(r) for r in q_readability(spark, sf_small).collect()]
     assert served == batch and served
