@@ -22,14 +22,12 @@ whole-stage codegen.
 
 from __future__ import annotations
 
-import time
-
-from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from lexam_data_pipeline_spark.catalog import load_table
 from lexam_data_pipeline_spark.functions.text import shingle_set, tokens
 from lexam_data_pipeline_spark.operators.caching import keyed_slot, persist_slot
-from lexam_data_pipeline_spark.operators.observe import observed_within
+from lexam_data_pipeline_spark.operators.iterate import checkpoint_observed, fixpoint
 
 
 def _doc_shingles(docs: DataFrame) -> DataFrame:
@@ -555,18 +553,19 @@ def _normalized_flat(spark: SparkSession, sf_dir: str, dim: int) -> DataFrame:
     corpus replaces it, and ``release_all()`` frees it.
     """
 
-    def build() -> DataFrame:
+    def build() -> tuple[DataFrame]:
         sq = [
             F.col("embedding")[i].cast("double") * F.col("embedding")[i].cast("double")
             for i in range(dim)
         ]
         norm = F.sqrt(_balanced_sum(sq))
-        return load_table(spark, sf_dir, "embeddings").select(
+        flat = load_table(spark, sf_dir, "embeddings").select(
             "vec_id",
             *[(F.col("embedding")[i].cast("double") / norm).alias(f"x{i}") for i in range(dim)],
         )
+        return (flat,)
 
-    return keyed_slot("dedup.flat", (sf_dir, dim), build)
+    return keyed_slot("dedup.flat", (sf_dir, dim), build)[0]
 
 
 def _pair_sides(flat: DataFrame, dim: int, shuffle_parts: int | None = None):
@@ -723,33 +722,6 @@ def q_dedup_embedding_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Seconds a connected-components round waits for its convergence
-#: metrics after the checkpoint job returned.  They normally land within
-#: milliseconds; past this bound the round recomputes them with an
-#: explicit aggregate instead of blocking forever.
-_OBSERVE_WAIT_S = 10.0
-
-
-def _checkpoint_observed(df: DataFrame, *metrics: Column) -> tuple[DataFrame, dict]:
-    """``localCheckpoint`` one round's state and return it with the
-    aggregate ``metrics`` over its rows — the solvers' convergence probe.
-
-    The metrics ride the checkpoint job as an ``Observation`` (guide §1
-    action fusion, r12): one job per round instead of checkpoint + a
-    separate aggregate job.  Observation metrics fire on
-    ``Dataset.localCheckpoint`` because it runs under ``withAction``.
-    The wait for them is bounded (:func:`observed_within`); when they do
-    not arrive, the same metrics are computed by ``agg(...).collect()``
-    over the checkpointed rows, so the round's result never depends on
-    which path delivered them."""
-    obs = Observation()
-    out = df.observe(obs, *metrics).localCheckpoint()
-    got = observed_within(obs, time.monotonic() + _OBSERVE_WAIT_S)
-    if got is None:
-        got = out.agg(*metrics).collect()[0].asDict()
-    return out, got
-
-
 def _two_phase_cc(
     edges: DataFrame, src: str, dst: str, max_rounds: int = 64
 ) -> tuple[DataFrame, int]:
@@ -775,10 +747,8 @@ def _two_phase_cc(
         .distinct()
         .localCheckpoint()
     )
-    rounds = 0
-    prev_sig = None
-    while rounds < max_rounds:
-        rounds += 1
+
+    def step(e: DataFrame) -> DataFrame:
         # large-star: symmetric adjacency, window-min per node
         sym = e.unionByName(
             e.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -795,22 +765,22 @@ def _two_phase_cc(
         ).distinct()
         mm = F.min("l").over(Window.partitionBy("h"))
         smalled = ss.withColumn("m", mm)
-        e_next = (
+        return (
             smalled.select(F.col("l").alias("a"), F.col("m").alias("b"))
             .unionByName(smalled.select(F.col("h").alias("a"), F.col("m").alias("b")))
             .filter(F.col("a") != F.col("b"))
             .distinct()
         )
-        e, got = _checkpoint_observed(
-            e_next,
-            F.count(F.lit(1)).alias("n"),
-            # bit_xor: order-independent set signature, can't overflow ANSI
-            F.coalesce(F.bit_xor(F.xxhash64("a", "b")), F.lit(0)).alias("h"),
-        )
-        sig = (got["n"], got["h"])
-        if sig == prev_sig:
-            break
-        prev_sig = sig
+
+    # the edge set's signature: at the fixpoint it stops changing
+    signature = [
+        F.count(F.lit(1)).alias("n"),
+        # bit_xor: order-independent set signature, can't overflow ANSI
+        F.coalesce(F.bit_xor(F.xxhash64("a", "b")), F.lit(0)).alias("h"),
+    ]
+    e, rounds = fixpoint(
+        e, step, every=1, bound=max_rounds, probe=lambda e, _: (e, signature)
+    )
     # stars: every non-root has an edge to its root; roots label themselves
     labels = (
         e.select(F.col("a").alias("node"), F.col("b").alias("cluster"))
@@ -884,13 +854,12 @@ def _label_propagation_cc(
     # min-labels decrease monotonically, so the exact-decimal label sum
     # is strictly decreasing until the fixpoint — sum equality IS
     # convergence, with no join-back.
-    _sum_expr = F.sum(F.col("cluster").cast("decimal(38,0)")).alias("s")
-    labels, prev = _checkpoint_observed(
-        nodes.withColumn("cluster", F.col("node")), _sum_expr
+    label_sum = F.sum(F.col("cluster").cast("decimal(38,0)")).alias("s")
+    labels, seen = checkpoint_observed(
+        nodes.withColumn("cluster", F.col("node")), label_sum
     )
-    rounds = 0
-    while True:
-        rounds += 1
+
+    def step(labels: DataFrame) -> DataFrame:
         # min(own ∪ neighbors' labels) as ONE aggregate: push each label
         # across its edges, union the nodes' own labels, take the group
         # min.  Equivalent to the neighbor-min + left-outer-join-back
@@ -900,15 +869,15 @@ def _label_propagation_cc(
         prop = sym.join(labels, sym.b == labels.node).select(
             F.col("a").alias("node"), "cluster"
         )
-        labels, new = _checkpoint_observed(
+        return (
             prop.unionByName(labels.select("node", "cluster"))
             .groupBy("node")
-            .agg(F.min("cluster").alias("cluster")),
-            _sum_expr,
+            .agg(F.min("cluster").alias("cluster"))
         )
-        if new["s"] == prev["s"]:
-            return labels, rounds
-        prev = new
+
+    return fixpoint(
+        labels, step, every=1, probe=lambda s, _: (s, [label_sum]), seen=seen
+    )
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -29,16 +29,19 @@ q_label_propagation pattern).
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from lexam_data_pipeline_spark.catalog import load_table
+from lexam_data_pipeline_spark.operators.iterate import fixpoint
 
 DAMPING = 0.85
 N_ITER = 3
 
 #: truncate the rank DataFrame's lineage every k iterations — without
 #: this the plan tree grows linearly with n_iter (fine at 3, a
-#: Catalyst-analysis blowup by ~20); same pattern as ml/dedup._two_phase_cc
+#: Catalyst-analysis blowup by ~20); see operators/iterate.fixpoint
 CHECKPOINT_EVERY = 5
 
 #: fixed-point PageRank scale: ranks are BIGINTs in units of 1e-12.
@@ -54,7 +57,6 @@ def pagerank(
     edges: DataFrame,
     n_iter: int = N_ITER,
     damping: float = DAMPING,
-    symmetric: bool = False,
     assume_distinct: bool = False,
     tol: float | None = None,
     init_ranks: DataFrame | None = None,
@@ -65,15 +67,6 @@ def pagerank(
     mass (callers wanting the classic dangling redistribution should
     symmetrize, as :func:`q_pagerank` does).
 
-    ``symmetric=True`` declares every node has ≥1 in-edge AND ≥1
-    out-edge (true for any symmetrized edge list).  Then the node table
-    and the per-iteration left join vanish: every node appears in the
-    contribution aggregate, so the teleport term fuses INTO that
-    aggregate and each iteration is exactly one broadcast join (the rank
-    table onto the cached edge list) + one groupBy shuffle — measured
-    ~40% faster at sf0.1, and one fewer shuffle per iteration at any
-    scale.
-
     ``assume_distinct=True`` skips the defensive edge dedup — correct
     whenever the caller's edge list is already distinct (e.g. the union
     of both directions of a distinct pair set over disjoint node
@@ -83,8 +76,9 @@ def pagerank(
     Long runs: every :data:`CHECKPOINT_EVERY` iterations the rank table
     is ``localCheckpoint``-ed, truncating lineage so plan depth stays
     O(CHECKPOINT_EVERY) regardless of ``n_iter``.  With ``tol`` set, the
-    checkpoint boundary also evaluates the L1 rank delta (one extra
-    narrow join per boundary, not per iteration) and stops early once
+    checkpoint boundary also observes the L1 rank delta against the
+    previous boundary (the checkpoint carries those ranks beside the new
+    ones, so the probe adds no job) and stops early once
     ``sum(|r_t - r_{t-k}|) < tol`` — geometric convergence makes the
     k-step delta a sound stand-in for the 1-step one.
 
@@ -104,15 +98,12 @@ def pagerank(
     # — the one persist that matters (the edge list feeds every round)
     out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
     edges_w = persist_slot(edges.join(out_deg, "src"), "graph.edges_w")
-    if symmetric:
-        nodes = edges_w.select(F.col("src").alias("node")).distinct()
-    else:
-        nodes = persist_slot(
-            edges.select(F.col("src").alias("node"))
-            .union(edges.select(F.col("dst").alias("node")))
-            .distinct(),
-            "graph.nodes",
-        )
+    nodes = persist_slot(
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
+        .distinct(),
+        "graph.nodes",
+    )
     n_nodes = nodes.count()  # O(1) driver scalar, not a data collect
     if n_nodes == 0:  # empty graph: empty ranking, schema preserved
         return nodes.select("node", F.lit(0.0).alias("rank"))
@@ -129,40 +120,46 @@ def pagerank(
         )
     else:
         ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
-    prev_ranks = None  # ranks at the last checkpoint boundary
-    for i in range(n_iter):
+
+    def step(ranks: DataFrame) -> DataFrame:
         contribs = edges_w.join(ranks, edges_w.src == ranks.node).select(
             F.col("dst").alias("node"), (F.col("rank") / F.col("out_deg")).alias("c")
         )
-        if symmetric:
-            ranks = contribs.groupBy("node").agg(
-                (F.lit(teleport) + F.lit(damping) * F.sum("c")).alias("rank")
-            )
-        else:
-            mass = contribs.groupBy("node").agg(F.sum("c").alias("mass"))
-            ranks = nodes.join(mass, "node", "left").select(
-                "node",
-                (
-                    F.lit(teleport)
-                    + F.lit(damping) * F.coalesce(F.col("mass"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        at_boundary = (i + 1) % CHECKPOINT_EVERY == 0 and (i + 1) < n_iter
-        if at_boundary:
-            ranks = ranks.localCheckpoint()  # truncate lineage
-            if tol is not None:
-                if prev_ranks is not None:
-                    delta = (
-                        ranks.join(
-                            prev_ranks.withColumnRenamed("rank", "prev"), "node"
-                        )
-                        .agg(F.sum(F.abs(F.col("rank") - F.col("prev"))))
-                        .collect()[0][0]
-                    )
-                    if delta is not None and delta < tol:
-                        break
-                prev_ranks = ranks
-    return ranks
+        mass = contribs.groupBy("node").agg(F.sum("c").alias("mass"))
+        return nodes.join(mass, "node", "left").select(
+            "node",
+            (
+                F.lit(teleport)
+                + F.lit(damping) * F.coalesce(F.col("mass"), F.lit(0.0))
+            ).alias("rank"),
+        )
+
+    delta = F.sum(F.abs(F.col("rank") - F.col("prev"))).alias("d")
+
+    def l1_delta(ranks: DataFrame, last: DataFrame | None):
+        # The checkpoint carries each node's rank at the previous boundary
+        # beside its new one (the first boundary has none: a null delta
+        # never stops).  A union + group, not a join: a checkpoint keeps
+        # its plan's size estimate, a join's estimate is the product of
+        # its sides', and joining each boundary to the last would square
+        # the estimate per boundary until computing it stalls the driver.
+        # Every node is in both sides, and r + 0.0 is exactly r.
+        if last is None:
+            return ranks.withColumn("prev", F.lit(None).cast("double")), [delta]
+        now = ranks.select("node", "rank", F.lit(0.0).alias("prev"))
+        before = last.select("node", F.lit(0.0).alias("rank"), F.col("rank").alias("prev"))
+        both = now.unionByName(before).groupBy("node")
+        return both.agg(F.sum("rank").alias("rank"), F.sum("prev").alias("prev")), [delta]
+
+    ranks, _ = fixpoint(
+        ranks,
+        step,
+        every=CHECKPOINT_EVERY,
+        bound=n_iter,
+        probe=None if tol is None else l1_delta,
+        stop=lambda got, _: got["d"] is not None and got["d"] < tol,
+    )
+    return ranks.select("node", "rank")
 
 
 def pagerank_fixed(
@@ -212,12 +209,13 @@ def pagerank_fixed(
     ranks = nodes.select(
         "node", F.lit(scale // n_nodes).cast("long").alias("rank_scaled")
     )
-    for i in range(n_iter):
+
+    def step(ranks: DataFrame) -> DataFrame:
         contribs = edges_w.join(ranks, edges_w.src == ranks.node).select(
             F.col("dst").alias("node"),
             F.expr("rank_scaled div out_deg").alias("c"),
         )
-        ranks = contribs.groupBy("node").agg(
+        return contribs.groupBy("node").agg(
             (
                 F.lit(teleport)
                 + F.expr(f"({damping_num} * sum(c)) div {damping_den}")
@@ -225,9 +223,8 @@ def pagerank_fixed(
             .cast("long")
             .alias("rank_scaled")
         )
-        if (i + 1) % CHECKPOINT_EVERY == 0 and (i + 1) < n_iter:
-            ranks = ranks.localCheckpoint()
-    return ranks
+
+    return fixpoint(ranks, step, every=CHECKPOINT_EVERY, bound=n_iter)[0]
 
 
 def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int) -> DataFrame:
@@ -249,18 +246,16 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int) -> DataFrame:
     AQE threshold (typical for seeded neighbourhood queries) and falls
     back to a shuffle join when a hop explodes.  Like
     :func:`pagerank`, lineage is truncated with ``localCheckpoint``
-    every :data:`CHECKPOINT_EVERY` hops, where an emptiness probe also
-    early-exits drained frontiers — so ``max_hops`` can be the graph
-    diameter without plan-depth blowup, and no per-hop driver action
-    exists on the fast path.
+    every :data:`CHECKPOINT_EVERY` hops (each hop references the previous
+    frontier AND the visited union, so uncheckpointed plan size doubles
+    per hop: a 30-hop run never left Catalyst analysis without it), where
+    the frontier checkpoint's observed row count also early-exits drained
+    frontiers — so ``max_hops`` can be the graph diameter without
+    plan-depth blowup, and no hop runs a driver action of its own.
     """
     from lexam_data_pipeline_spark.operators.caching import persist_slot
 
     edges = edges.select("src", "dst")
-    visited = (
-        seeds.select("node").distinct().withColumn("hop", F.lit(0).cast("int"))
-    )
-    frontier = visited.select("node")
     # Persist the edge list ONLY for deep runs: a shallow BFS (no
     # checkpoint boundary) is one job, where AQE ReusedExchange already
     # dedupes the repeated edge subplan and a persist just adds a
@@ -270,26 +265,36 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int) -> DataFrame:
     # span jobs, and the persist pays for itself.
     if max_hops > CHECKPOINT_EVERY:
         edges = persist_slot(edges, "graph.bfs_edges")
-    for h in range(1, max_hops + 1):
+
+    def settle(visited: DataFrame | None, frontier: DataFrame, h: int) -> DataFrame:
+        at = frontier.withColumn("hop", F.lit(h).cast("int"))
+        return at if visited is None else visited.unionByName(at)
+
+    hops = itertools.count()  # the hop of the frontier each step settles
+
+    # state: (frontier at hop h, visited up to hop h-1) — the frontier is
+    # checkpointed and probed before the visited set, and a drained
+    # frontier stops the loop before the visited set is checkpointed
+    def step(state: tuple) -> tuple:
+        frontier, visited = state
+        visited = settle(visited, frontier, next(hops))
         frontier = (
             frontier.join(edges, frontier.node == edges.src)
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
         )
-        if h % CHECKPOINT_EVERY == 0 and h < max_hops:
-            # truncate BOTH lineages: each hop references the previous
-            # frontier AND the visited union, so uncheckpointed plan
-            # size doubles per hop (measured: a 30-hop run never left
-            # Catalyst analysis without this)
-            frontier = frontier.localCheckpoint()
-            if frontier.isEmpty():
-                break
-            visited = visited.localCheckpoint()
-        visited = visited.unionByName(
-            frontier.withColumn("hop", F.lit(h).cast("int"))
-        )
-    return visited
+        return frontier, visited
+
+    (frontier, visited), h = fixpoint(
+        (seeds.select("node").distinct(), None),
+        step,
+        every=CHECKPOINT_EVERY,
+        bound=max_hops,
+        probe=lambda frontier, _: (frontier, [F.count(F.lit(1)).alias("n")]),
+        stop=lambda got, _: got["n"] == 0,
+    )
+    return settle(visited, frontier, h)
 
 
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -363,12 +368,13 @@ def label_propagation(pairs: DataFrame, n_iter: int = LPA_N_ITER) -> DataFrame:
     labels = und.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
-    for i in range(n_iter):
+
+    def step(labels: DataFrame) -> DataFrame:
         msgs = und.join(labels, und.v == labels.node).select(
             F.col("u").alias("node"), "label"
         )
         counts = msgs.groupBy("node", "label").agg(F.count(F.lit(1)).alias("c"))
-        labels = (
+        return (
             counts.groupBy("node")
             .agg(
                 F.min(
@@ -377,9 +383,8 @@ def label_propagation(pairs: DataFrame, n_iter: int = LPA_N_ITER) -> DataFrame:
             )
             .select("node", F.col("best.l").alias("label"))
         )
-        if (i + 1) % 2 == 0 and (i + 1) < n_iter:
-            labels = labels.localCheckpoint()
-    return labels
+
+    return fixpoint(labels, step, every=2, bound=n_iter)[0]
 
 
 def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from lexam_data_pipeline_spark.catalog import load_table, local_rows
 from lexam_data_pipeline_spark.ml.similarity import cosine
+from lexam_data_pipeline_spark.operators.caching import keyed_slot
 
 
 def _assign(base: DataFrame, centroids: list[list[float]]) -> DataFrame:
@@ -82,19 +83,42 @@ def build_ivf_index(
         .collect()
     )
     rows = sorted(sample, key=lambda r: r["vec_id"])
-    X = np.array([r["e"] for r in rows])
-    C = X[: min(k, len(rows))].copy()
-    if len(C) < k:  # degenerate corpus smaller than k: pad by repeating
+    C = lloyd(np.array([r["e"] for r in rows]), k, iterations)
+    centroids = [list(map(float, c)) for c in C]
+    return _assign(base, centroids), centroids
+
+
+def lloyd(X, k: int, iterations: int):
+    """Driver-side Lloyd k-means over the rows of ``X`` (a numpy
+    matrix); returns the k×d centroid matrix.  Deterministic: the seeds
+    are the first k rows (repeated when there are fewer), argmin ties
+    break to the lowest centroid id, updates are exact numpy means, and
+    an empty cluster keeps its previous centroid."""
+    import numpy as np
+
+    C = X[: min(k, len(X))].copy()
+    if len(C) < k:  # fewer rows than k: pad by repeating
         C = np.concatenate([C] * (k // len(C) + 1))[:k]
     for _ in range(iterations):
         d = (X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + (C * C).sum(axis=1)[None, :]
         lab = d.argmin(axis=1)
         for cid in range(k):
             members = lab == cid
-            if members.any():  # empty clusters keep their previous centroid
+            if members.any():
                 C[cid] = X[members].mean(axis=0)
-    centroids = [list(map(float, c)) for c in C]
-    return _assign(base, centroids), centroids
+    return C
+
+
+def nearest_clusters(
+    centroids: list[list[float]], query_vec: list[float], n_probe: int
+) -> list[int]:
+    """Ids of the ``n_probe`` centroids nearest ``query_vec`` by squared
+    distance, ties to the lower id — the clusters a search probes."""
+
+    def sq(c: list[float]) -> float:
+        return sum((x - y) * (x - y) for x, y in zip(c, query_vec))
+
+    return sorted(range(len(centroids)), key=lambda cid: sq(centroids[cid]))[:n_probe]
 
 
 def ivf_search(
@@ -106,12 +130,7 @@ def ivf_search(
     top_k: int = 10,
 ) -> DataFrame:
     """Rank only the n_probe nearest clusters' members by cosine."""
-
-    def sq(a: list[float], b: list[float]) -> float:
-        return sum((x - y) * (x - y) for x, y in zip(a, b))
-
-    probe = sorted(range(len(centroids)), key=lambda cid: sq(centroids[cid], query_vec))
-    probe_ids = probe[:n_probe]
+    probe_ids = nearest_clusters(centroids, query_vec, n_probe)
     q = F.array(*[F.lit(v) for v in query_vec])
     return (
         assigned.filter(F.col("cluster").isin(probe_ids))
@@ -122,14 +141,6 @@ def ivf_search(
     )
 
 
-#: session-scoped index cache: the IVF build is STATE (built once,
-#: probed many times — the production posture for any ANN index), so
-#: repeated probes against the same corpus reuse the cached assignment
-#: instead of re-running Lloyd iterations.  One slot: a new corpus
-#: releases the previous assignment's cache.
-_IVF_CACHE: dict = {}
-
-
 def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-10 for the lowest-vec_id query vector (rows-only check:
     recall is data-dependent; tests/test_dedup_sketches.py bounds its
@@ -138,16 +149,12 @@ def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     qhead = emb.orderBy("vec_id").limit(1).collect()
     if not qhead:  # empty corpus: no query vector, no index — empty result
         return local_rows(spark, [], "vec_id long, cluster int, cosine double")
-    key = (sf_dir, 16, 3)
-    if _IVF_CACHE.get("key") == key:
-        assigned, centroids = _IVF_CACHE["index"]
-    else:
-        assigned, centroids = build_ivf_index(emb, k=16, iterations=3)
-        assigned = assigned.cache()
-        if "index" in _IVF_CACHE:
-            _IVF_CACHE["index"][0].unpersist()
-        _IVF_CACHE["key"] = key
-        _IVF_CACHE["index"] = (assigned, centroids)
+    # the index is state, built once and probed many times: the
+    # ``ivf.index`` slot keeps the assigned corpus and its centroids for
+    # this corpus until a new corpus or release_all() replaces them
+    assigned, centroids = keyed_slot(
+        "ivf.index", (sf_dir, 16, 3), lambda: build_ivf_index(emb, k=16, iterations=3)
+    )
     qrow = qhead[0]
     query_vec = [float(x) for x in qrow["embedding"]]
     return ivf_search(

@@ -34,8 +34,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from lexam_data_pipeline_spark.catalog import load_table, local_rows
-from lexam_data_pipeline_spark.ml.ivf import build_ivf_index
+from lexam_data_pipeline_spark.ml.ivf import build_ivf_index, lloyd, nearest_clusters
 from lexam_data_pipeline_spark.ml.similarity import cosine
+from lexam_data_pipeline_spark.operators.caching import keyed_slot
 
 
 def train_pq_codebooks(
@@ -54,21 +55,7 @@ def train_pq_codebooks(
     sub = d // m
     books: list[list[list[float]]] = []
     for j in range(m):
-        Xj = X[:, j * sub : (j + 1) * sub]
-        C = Xj[: min(k_sub, len(Xj))].copy()
-        if len(C) < k_sub:
-            C = np.concatenate([C] * (k_sub // len(C) + 1))[:k_sub]
-        for _ in range(iterations):
-            dist = (
-                (Xj * Xj).sum(axis=1)[:, None]
-                - 2.0 * (Xj @ C.T)
-                + (C * C).sum(axis=1)[None, :]
-            )
-            lab = dist.argmin(axis=1)
-            for cid in range(k_sub):
-                members = lab == cid
-                if members.any():
-                    C[cid] = Xj[members].mean(axis=0)
+        C = lloyd(X[:, j * sub : (j + 1) * sub], k_sub, iterations)
         books.append([list(map(float, c)) for c in C])
     return books
 
@@ -145,11 +132,7 @@ def ivfpq_search(
     queries; ``refine`` survivors (ids only) join back to the raw
     embeddings for exact scoring, so the final ranking is float-exact."""
 
-    def sq(a: list[float], b: list[float]) -> float:
-        return sum((x - y) * (x - y) for x, y in zip(a, b))
-
-    probe = sorted(range(len(centroids)), key=lambda cid: sq(centroids[cid], query_vec))
-    probe_ids = probe[:n_probe]
+    probe_ids = nearest_clusters(centroids, query_vec, n_probe)
     books = [[list(map(float, c)) for c in book] for book in codebooks]
     qv = [float(x) for x in query_vec]
 
@@ -185,11 +168,6 @@ def ivfpq_search(
     )
 
 
-#: session index cache, same single-slot posture as ml/ivf._IVF_CACHE:
-#: an ANN index is built once and probed many times.
-_PQ_CACHE: dict = {}
-
-
 def q_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ top-10 for the lowest-vec_id query vector (rows-only;
     tests/test_pq.py bounds recall vs q_knn_bruteforce)."""
@@ -200,16 +178,11 @@ def q_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark,
             [], "vec_id long, cluster int, adc double, cosine double"
         )
-    key = (sf_dir, 16, 8, 16)
-    if _PQ_CACHE.get("key") == key:
-        encoded, centroids, books = _PQ_CACHE["index"]
-    else:
-        encoded, centroids, books = build_ivfpq_index(emb)
-        encoded = encoded.cache()
-        if "index" in _PQ_CACHE:
-            _PQ_CACHE["index"][0].unpersist()
-        _PQ_CACHE["key"] = key
-        _PQ_CACHE["index"] = (encoded, centroids, books)
+    # same slot lifecycle as ml/ivf's index: built once per corpus,
+    # freed by release_all()
+    encoded, centroids, books = keyed_slot(
+        "pq.index", (sf_dir, 16, 8, 16), lambda: build_ivfpq_index(emb)
+    )
     qrow = qhead[0]
     query_vec = [float(x) for x in qrow["embedding"]]
     return ivfpq_search(

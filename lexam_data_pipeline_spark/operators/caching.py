@@ -10,10 +10,13 @@ loops, a REPL) accumulates one orphaned cache per call (ADVICE r1).
 call through the same slot releases the previous handle.  If a caller
 still holds frames over an evicted handle, Spark silently recomputes —
 a perf cost only, never a correctness one.  :func:`keyed_slot` is the
-reuse-keyed variant for a persist that must be shared across calls (the
-lineage-cut persist in ``ml/dedup``).  :func:`release_all` frees every
-slot, so no cache outlives a release boundary (the bench releases
-between timed runs).
+reuse-keyed variant for a persist that must be shared across calls —
+the lineage-cut persist in ``ml/dedup`` and the IVF and IVF-PQ indexes,
+whose driver-side centroids and codebooks live in the same slot entry
+as the persisted frame.  :func:`release_all` frees every slot, so no
+cache outlives a release boundary (the bench releases between timed
+runs).  The slots and the plan memo below are the engine's only
+process-global caches besides ``catalog``'s table-handle cache.
 """
 
 from __future__ import annotations
@@ -23,8 +26,9 @@ from collections.abc import Callable, Hashable
 
 from pyspark.sql import DataFrame
 
-#: slot -> (reuse key or None, persisted frame)
-_SLOTS: dict[str, tuple[Hashable, DataFrame]] = {}
+#: slot -> (reuse key or None, persisted frame, driver-side values built
+#: with it)
+_SLOTS: dict[str, tuple[Hashable, DataFrame, list]] = {}
 
 
 #: Analyzed-DataFrame memo for ACTION-FREE query constructions, keyed on
@@ -42,7 +46,7 @@ _SLOTS: dict[str, tuple[Hashable, DataFrame]] = {}
 #: Catalyst analysis of large deterministic expression trees
 #: (q_random_projection ~4.6 s, q_experiment_stats ~1.8 s); re-planning
 #: an identical tree per call is pure driver waste at any scale.
-_PLAN_MEMO: dict[tuple, tuple[DataFrame, dict[str, tuple[Hashable, DataFrame]]]] = {}
+_PLAN_MEMO: dict[tuple, tuple[DataFrame, dict[str, tuple[Hashable, DataFrame, list]]]] = {}
 
 
 def memoize_plan(name: str, fn):
@@ -54,8 +58,8 @@ def memoize_plan(name: str, fn):
         hit = _PLAN_MEMO.get(key)
         if hit is not None:
             df, slots = hit
-            for slot, (reuse, frame) in slots.items():
-                _fill(slot, frame, reuse)
+            for slot, (reuse, frame, values) in slots.items():
+                _fill(slot, frame, reuse, values)
             return df
         before = dict(_SLOTS)
         df = fn(spark, sf_dir)
@@ -70,32 +74,34 @@ def memoize_plan(name: str, fn):
     return wrapped
 
 
-def _fill(slot: str, df: DataFrame, reuse: Hashable) -> DataFrame:
+def _fill(slot: str, df: DataFrame, reuse: Hashable, values: list) -> DataFrame:
     prev = _SLOTS.get(slot)
     if prev is not None and prev[1] is not df:
         prev[1].unpersist()
     out = df.persist()
-    _SLOTS[slot] = (reuse, out)
+    _SLOTS[slot] = (reuse, out, values)
     return out
 
 
 def persist_slot(df: DataFrame, slot: str) -> DataFrame:
     """Persist ``df`` in ``slot``, releasing the frame it held before."""
-    return _fill(slot, df, None)
+    return _fill(slot, df, None, [])
 
 
-def keyed_slot(slot: str, key: Hashable, build: Callable[[], DataFrame]) -> DataFrame:
-    """The frame ``slot`` holds for ``key``, or ``build()`` persisted in
-    the slot (releasing the frame it held before) when it holds another
-    key or nothing."""
+def keyed_slot(slot: str, key: Hashable, build: Callable[[], tuple]) -> tuple:
+    """The ``(frame, *driver-side values)`` tuple ``slot`` holds for
+    ``key``; when it holds another key or nothing, ``build()``'s tuple,
+    its frame persisted in the slot (releasing the frame it held
+    before)."""
     prev = _SLOTS.get(slot)
     if prev is not None and prev[0] == key:
-        return prev[1]
-    return _fill(slot, build(), key)
+        return prev[1], *prev[2]
+    df, *values = build()
+    return _fill(slot, df, key, values), *values
 
 
 def release_all() -> None:
     """Drop every slot's cache (e.g. at session teardown)."""
-    for _, df in _SLOTS.values():
+    for _, df, _ in _SLOTS.values():
         df.unpersist()
     _SLOTS.clear()

@@ -256,11 +256,7 @@ def test_two_phase_cc_matches_label_propagation(spark):
     assert lp == tp
 
 
-def test_cc_solvers_fall_back_when_round_metrics_never_arrive(spark, monkeypatch):
-    """Each CC round reads its convergence metrics from an Observation on
-    the checkpoint job.  When they never arrive, the round must not
-    block: both solvers recompute the metrics with an explicit aggregate
-    and end with the same labels after the same number of rounds."""
+def _cc_case(spark):
     from lexam_data_pipeline_spark.ml import dedup
 
     edges = spark.createDataFrame(
@@ -269,31 +265,85 @@ def test_cc_solvers_fall_back_when_round_metrics_never_arrive(spark, monkeypatch
         + [(30, 31), (31, 32), (32, 30)],
         ["src", "dst"],
     )
+    out = {}
+    for solver in (dedup._label_propagation_cc, dedup._two_phase_cc):
+        labels, rounds = solver(edges, "src", "dst")
+        out[solver.__name__] = (
+            sorted((r["node"], r["cluster"]) for r in labels.collect()),
+            rounds,
+        )
+    return out
 
-    def solve():
-        out = {}
-        for solver in (dedup._label_propagation_cc, dedup._two_phase_cc):
-            labels, rounds = solver(edges, "src", "dst")
-            out[solver.__name__] = (
-                sorted((r["node"], r["cluster"]) for r in labels.collect()),
-                rounds,
-            )
-        return out
 
-    observed = solve()
+def _pagerank_tol_case(spark):
+    from lexam_data_pipeline_spark.ml.graph import pagerank
+
+    n = 12
+    edges = [(i, (i + 1) % n) for i in range(n)] + [(i, (i + 5) % n) for i in range(0, n, 3)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    return sorted(
+        (r["node"], round(r["rank"], 12))
+        for r in pagerank(df, n_iter=50, tol=1e-6).collect()
+    )
+
+
+def _bfs_30_hops_case(spark):
+    from lexam_data_pipeline_spark.ml.graph import bfs_hops
+
+    n = 12
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(n)] + [(i + 1, i) for i in range(n)],
+        "src long, dst long",
+    )
+    seeds = spark.createDataFrame([(0,)], "node long")
+    return sorted((r["node"], r["hop"]) for r in bfs_hops(edges, seeds, 30).collect())
+
+
+@pytest.mark.parametrize(
+    "solve",
+    [
+        pytest.param(_cc_case, id="cc"),
+        pytest.param(_pagerank_tol_case, id="pagerank_tol"),
+        # three boundaries, each solved twice: ~45 s, so with the deep runs
+        pytest.param(_bfs_30_hops_case, id="bfs_30_hops", marks=pytest.mark.slowsuite),
+    ],
+)
+def test_solvers_fall_back_when_round_metrics_never_arrive(spark, monkeypatch, solve):
+    """Each probed boundary reads its convergence metrics from an
+    Observation on the checkpoint job (operators/iterate).  When they
+    never arrive, the boundary must not block: the solver recomputes the
+    metrics with an explicit aggregate and ends with the same result
+    after the same number of boundaries."""
+    from lexam_data_pipeline_spark.operators import iterate
+
+    real = iterate.observed_within
     waits = []
+
+    def arrives(obs, deadline):
+        waits.append(deadline)
+        return real(obs, deadline)
+
+    monkeypatch.setattr(iterate, "observed_within", arrives)
+    observed = solve(spark)
+    observed_waits = len(waits)
+    waits.clear()
 
     def never_arrives(obs, deadline):
         waits.append(deadline)
         return None
 
-    monkeypatch.setattr(dedup, "observed_within", never_arrives)
-    assert solve() == observed
-    # every checkpoint took the fallback: LPA's initial labelling plus
-    # one per round, and one per two-phase round
-    lp_rounds = observed["_label_propagation_cc"][1]
-    tp_rounds = observed["_two_phase_cc"][1]
-    assert len(waits) == lp_rounds + 1 + tp_rounds
+    monkeypatch.setattr(iterate, "observed_within", never_arrives)
+    assert solve(spark) == observed
+    assert len(waits) == observed_waits > 0
+    if solve is _cc_case:
+        # every checkpoint took the fallback: LPA's initial labelling
+        # plus one per round, and one per two-phase round
+        lp_rounds = observed["_label_propagation_cc"][1]
+        tp_rounds = observed["_two_phase_cc"][1]
+        assert len(waits) == lp_rounds + 1 + tp_rounds
+    if solve is _bfs_30_hops_case:
+        # hop 13 drains the frontier: boundaries at hops 5, 10 and 15
+        assert observed == [(i, i) for i in range(13)] and len(waits) == 3
 
 
 def test_minhash_estimates_jaccard_within_bound(spark):
