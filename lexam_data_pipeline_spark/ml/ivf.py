@@ -74,6 +74,15 @@ def build_ivf_index(
     ``xxhash64(vec_id)`` values (one TakeOrdered pass, no full sort),
     seeds are the k lowest-vec_id sample vectors, updates are exact
     numpy means, argmin ties break to the lowest centroid id."""
+    base, X = training_sample(emb, sample_cap)
+    return coarse_index(base, X, k, iterations)
+
+
+def training_sample(emb: DataFrame, sample_cap: int):
+    """``(base, X)``: the ``(vec_id, e)`` corpus projection and, as a
+    numpy matrix in vec_id order, the ``sample_cap`` vectors with the
+    lowest ``xxhash64(vec_id)`` buckets — one TakeOrdered collect, the
+    one sample both the IVF and the PQ builds train on."""
     import numpy as np
 
     base = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
@@ -83,8 +92,15 @@ def build_ivf_index(
         .collect()
     )
     rows = sorted(sample, key=lambda r: r["vec_id"])
-    C = lloyd(np.array([r["e"] for r in rows]), k, iterations)
-    centroids = [list(map(float, c)) for c in C]
+    return base, np.array([r["e"] for r in rows])
+
+
+def coarse_index(
+    base: DataFrame, X, k: int, iterations: int
+) -> tuple[DataFrame, list[list[float]]]:
+    """(assigned corpus, centroids): Lloyd over the sample ``X``, then
+    the one assignment pass over ``base``."""
+    centroids = [list(map(float, c)) for c in lloyd(X, k, iterations)]
     return _assign(base, centroids), centroids
 
 

@@ -34,7 +34,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from lexam_data_pipeline_spark.catalog import load_table, local_rows
-from lexam_data_pipeline_spark.ml.ivf import build_ivf_index, lloyd, nearest_clusters
+from lexam_data_pipeline_spark.ml.ivf import (
+    coarse_index,
+    lloyd,
+    nearest_clusters,
+    training_sample,
+)
 from lexam_data_pipeline_spark.ml.similarity import cosine
 from lexam_data_pipeline_spark.operators.caching import keyed_slot
 
@@ -98,19 +103,12 @@ def build_ivfpq_index(
 ) -> tuple[DataFrame, list[list[float]], list[list[list[float]]]]:
     """(encoded corpus, coarse centroids, codebooks).  Reuses the IVF
     coarse build (train-on-sample, one assignment pass), then PQ-trains
-    on the residual-free vectors (flat PQ — simpler than residual PQ and
-    recall-equivalent at these dims once the refine stage re-ranks) and
-    encodes in a second single pass."""
-    assigned, centroids = build_ivf_index(emb, k=k_coarse, sample_cap=sample_cap)
-    sample = (
-        emb.select(F.col("embedding").cast("array<double>").alias("e"), "vec_id")
-        .orderBy(F.pmod(F.xxhash64("vec_id"), F.lit(997)).asc(), F.col("vec_id").asc())
-        .limit(sample_cap)
-        .collect()
-    )
-    books = train_pq_codebooks(
-        [r["e"] for r in sorted(sample, key=lambda r: r["vec_id"])], m=m, k_sub=k_sub
-    )
+    on the residual-free vectors of the SAME collected sample (flat PQ —
+    simpler than residual PQ and recall-equivalent at these dims once
+    the refine stage re-ranks) and encodes in a second single pass."""
+    base, X = training_sample(emb, sample_cap)
+    assigned, centroids = coarse_index(base, X, k_coarse, iterations=3)
+    books = train_pq_codebooks(X, m=m, k_sub=k_sub)
     return encode_pq(assigned, books), centroids, books
 
 

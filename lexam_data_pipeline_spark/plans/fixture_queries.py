@@ -8717,8 +8717,9 @@ def q_dashboard_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty bins (A8), and per-area word-count stats with the exact
     median (A7).
 
-    Every aggregate is a job off ONE persisted filtered base (the
-    reference runs ~9 separate Postgres round-trips); the flatten is a
+    Every aggregate is a rollup of two persisted cell tables, the
+    question counts and the word-count histogram (the reference runs ~9
+    separate Postgres round-trips); the flatten is a
     union of constant-width projections, so the long format adds no
     shuffle beyond each section's own group keys."""
     from lexam_data_pipeline_spark.serving.dashboard import dashboard

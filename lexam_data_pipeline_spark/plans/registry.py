@@ -47,9 +47,12 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     # partition (operators/partitioning.narrow), and again when their
     # driver-built spec frames (length bins, score buckets) became
     # LocalRelations (catalog.local_rows).  Changed plans earn
-    # fresh external oracle rows.  q_dashboard_suite's ``courses``
-    # section reads ``first(area)``, which is row-order dependent in
-    # general but exact here: area is a function of course.
+    # fresh external oracle rows.  q_dashboard_suite's plan changed once
+    # more when its sections became rollups of persisted cell tables
+    # (serving.dashboard.dashboard_cells, shared with the streaming
+    # maintainer); it already sits in this window, so nothing rotated.
+    # Its ``courses`` section reads ``first(area)``, which is row-order
+    # dependent in general but exact here: area is a function of course.
     "q_questions_page",
     "q_search_top_courses",
     "q_dashboard_suite",

@@ -3,26 +3,32 @@ backend/app/main.py:311-459) and the course summary (main.py:225-308).
 
 The reference issues ~9 independent Postgres round-trips and reshapes the
 results in Python (pivot dicts, fixed-bin histogram, statistics.mean/
-median).  Here every aggregate is a job off ONE persisted filtered base
-DataFrame, and the Python reshape layer becomes plan operators:
-``groupBy().pivot()``, ``F.when`` bucketing, built-in ``percentile``.
+median).  Here the restricted rows are counted ONCE into small cell
+tables (:func:`dashboard_cells`) and every section is a rollup of those
+cells (:func:`dashboard_sections`): the pivots are conditional sums
+over enumerated value lists, the histogram is ``F.when`` bucketing, the
+median is built-in ``percentile`` weighted by the cell counts.
 
 All outputs are DataFrames (lazy); ``dashboard()`` returns them in a dict
-keyed like the reference's JSON response.
+keyed like the reference's JSON response.  The streaming maintainer
+(streaming/dashboard.py) keeps the same cells as state and serves the
+same sections, so the batch endpoint and its streaming twin share one
+definition of each section.
 
-Scale notes: the base persists once and each aggregate shuffles only its
-tiny group keys; pivots enumerate their value lists explicitly (no extra
-distinct pass); the histogram densifies empty bins by unioning the bin
-spec, not by a join.
+Scale notes: the question cells and the word-count histogram persist
+once per request and each section shuffles only its tiny group keys;
+the histogram densifies empty bins by joining the bin spec.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from lexam_data_pipeline_spark.catalog import local_rows
+from lexam_data_pipeline_spark.functions.text import word_count
 from lexam_data_pipeline_spark.operators.caching import persist_slot
 from lexam_data_pipeline_spark.operators.partitioning import narrow
+from lexam_data_pipeline_spark.serving.stats import flat_section
 
 AREAS = ("Private", "Public", "Criminal", "Interdisciplinary")
 JURISDICTIONS = ("Swiss", "International", "Generic")
@@ -39,12 +45,6 @@ ANSWER_LENGTH_BINS = (
     (400, 600, "400–600"),
     (600, None, "600+"),
 )
-
-
-def word_count(col: F.Column) -> F.Column:
-    """Python ``len(s.split())`` parity (F2): count of non-space runs,
-    NULL → 0 (see functions.text.word_count for the trim pitfall)."""
-    return F.coalesce(F.regexp_count(col, F.lit(r"\S+")), F.lit(0))
 
 
 def _restrict(
@@ -72,27 +72,138 @@ def _restrict(
     return q, v
 
 
-def answer_length_histogram(open_answers: DataFrame) -> DataFrame:
+def dashboard_cells(q: DataFrame, v: DataFrame) -> dict[str, DataFrame]:
+    """The cell tables every dashboard section reads, counted from
+    restricted questions ``q`` and variants ``v`` (see :func:`_restrict`):
+
+    * ``q_cells (course, area, jurisdiction, language, year, n)`` —
+      question counts; the seven question-side sections roll it up
+    * ``split_counts (split, n)`` and ``split_total (n)`` — distinct
+      questions per split and overall
+    * ``wc_hist (area, wc, n)`` — open-answer word counts at value
+      grain; the length histogram and the per-area stats read it
+
+    The batch endpoint counts its whole restricted input; the streaming
+    maintainer (streaming/dashboard.py) counts each micro-batch and sums
+    the cells into its state."""
+    open_answers = (
+        v.filter((F.col("config") == "open_question") & F.col("answer").isNotNull())
+        .select("question_id", "answer")
+        .join(
+            F.broadcast(q.select(F.col("id").alias("question_id"), "area")),
+            "question_id",
+            "inner",
+        )
+    )
+    return {
+        "q_cells": q.groupBy("course", "area", "jurisdiction", "language", "year").agg(
+            F.count(F.lit(1)).alias("n")
+        ),
+        "split_counts": v.groupBy("split").agg(F.countDistinct("question_id").alias("n")),
+        "split_total": v.agg(F.countDistinct("question_id").alias("n")),
+        "wc_hist": open_answers.select("area", word_count(F.col("answer")).alias("wc"))
+        .groupBy("area", "wc")
+        .agg(F.count(F.lit(1)).alias("n")),
+    }
+
+
+def answer_length_histogram(wc_hist: DataFrame) -> DataFrame:
     """A8: fixed-bin histogram of answer word counts, empty bins densified
-    to 0 (ref main.py:419-429).  Column ``range``, ``count``."""
-    wc = open_answers.select(word_count(F.col("answer")).alias("wc"))
-    bucket = F.lit(None).cast("string")
+    to 0 (ref main.py:419-429), summed from the ``wc_hist (area, wc, n)``
+    cells of :func:`dashboard_cells`.  Column ``range``, ``count``."""
     expr = None
     for lo, hi, label in ANSWER_LENGTH_BINS:
         cond = (F.col("wc") >= lo) if hi is None else ((F.col("wc") >= lo) & (F.col("wc") < hi))
         expr = F.when(cond, label) if expr is None else expr.when(cond, label)
-    counted = wc.select(expr.alias("range")).groupBy("range").agg(
-        F.count(F.lit(1)).alias("count")
-    )
-    spark = open_answers.sparkSession
+    counted = wc_hist.groupBy(expr.alias("range")).agg(F.sum("n").alias("count"))
     spec = local_rows(
-        spark,
+        wc_hist.sparkSession,
         [(label,) for _, _, label in ANSWER_LENGTH_BINS], "range string"
     )
     return (
         spec.join(counted, "range", "left_outer")
         .withColumn("count", F.coalesce(F.col("count"), F.lit(0)).cast("long"))
     )
+
+
+def dashboard_sections(cells: dict[str, DataFrame]) -> dict[str, DataFrame]:
+    """The ten dashboard sections, reference-shaped, off the
+    :func:`dashboard_cells` tables — of one request's restricted rows or
+    of the streaming maintainer's summed state."""
+    q, hist = cells["q_cells"], cells["wc_hist"]
+
+    def n_where(cond) -> F.Column:
+        return F.sum(F.when(cond, F.col("n")).otherwise(0))
+
+    def cross_tab(row: str, col: str, values: tuple[str, ...]) -> DataFrame:
+        # the reference's pivots over an enumerated value list (A9,
+        # main.py:369-379): one conditional sum per value, 0 when absent
+        return q.groupBy(row).agg(*[n_where(F.col(col) == x).alias(x) for x in values])
+
+    # courses: per-course count + conditional language counts (A10,
+    # main.py:342-355), sorted by count desc (course tiebreak for
+    # determinism — the reference's Python sort is stable on dict order)
+    courses = (
+        q.groupBy("course")
+        .agg(
+            F.first("area").alias("area"),
+            F.sum("n").alias("count"),
+            n_where(F.col("language") == "de").alias("lang_de"),
+            n_where(F.col("language") != "de").alias("lang_en"),
+        )
+        .orderBy(F.desc("count"), F.asc("course"))
+    )
+    # year × area with the row total over the four enumerated areas
+    years = (
+        cross_tab("year", "area", AREAS)
+        .withColumn("total", sum(F.col(a) for a in AREAS))
+        .orderBy("year")
+    )
+
+    # splits: distinct questions per split + share of the distinct total
+    # (A4 + A15/W2, main.py:382-385), joined as one broadcast row
+    total_split = cells["split_total"].select(F.col("n").alias("__total"))
+    splits = (
+        cells["split_counts"]
+        .crossJoin(F.broadcast(total_split))
+        .select(
+            F.col("split").alias("name"),
+            F.col("n").alias("value"),
+            F.when(F.col("__total") > 0, F.concat(
+                F.round(F.col("n") / F.col("__total") * 100).cast("int").cast("string"),
+                F.lit("%"),
+            )).otherwise(F.lit("0%")).alias("pct"),
+        )
+    )
+
+    # A7: mean/median/min/max per area; the exact median is Spark's
+    # percentile with the cell count as frequency (percentile_approx is
+    # the documented 100 TB switch)
+    answer_stats = hist.groupBy("area").agg(
+        F.round(F.sum(F.col("wc").cast("double") * F.col("n")) / F.sum("n"))
+        .cast("int")
+        .alias("avgWords"),
+        F.round(F.percentile("wc", F.lit(0.5), F.col("n"))).cast("int").alias("medianWords"),
+        F.min("wc").alias("minWords"),
+        F.max("wc").alias("maxWords"),
+    )
+
+    return {
+        "total_questions": q.agg(
+            F.coalesce(F.sum("n"), F.lit(0)).alias("total_questions")
+        ),
+        "courses": courses,
+        "areas": q.groupBy(F.col("area").alias("name")).agg(F.sum("n").alias("value")),
+        "jurisdictions": q.groupBy(F.col("jurisdiction").alias("name")).agg(
+            F.sum("n").alias("value")
+        ),
+        "years": years,
+        "splits": splits,
+        "area_jurisdiction": cross_tab("area", "jurisdiction", JURISDICTIONS),
+        "lang_area": cross_tab("area", "language", LANGUAGES),
+        "answer_lengths": answer_length_histogram(hist),
+        "answer_stats": answer_stats,
+    }
 
 
 def dashboard(
@@ -104,111 +215,13 @@ def dashboard(
 ) -> dict[str, DataFrame]:
     """Every dashboard aggregate as a lazy DataFrame, reference-shaped."""
     questions, variants = narrow(questions), narrow(variants)
-    q, v = _restrict(questions, variants, configs, languages)
-    # slot-bounded cache: released when the next dashboard call replaces
-    # the slot (the returned frames are lazy — ADVICE r1 leak fix)
-    q = persist_slot(q, "dashboard.questions")
-
-    # courses: per-course count + conditional language counts (A10,
-    # main.py:342-355), sorted by count desc (course tiebreak for
-    # determinism — the reference's Python sort is stable on dict order)
-    courses = (
-        q.groupBy("course")
-        .agg(
-            F.first("area").alias("area"),
-            F.count(F.lit(1)).alias("count"),
-            F.sum(F.when(F.col("language") == "de", 1).otherwise(0)).alias("lang_de"),
-            F.sum(F.when(F.col("language") != "de", 1).otherwise(0)).alias("lang_en"),
-        )
-        .orderBy(F.desc("count"), F.asc("course"))
-    )
-
-    areas = q.groupBy(F.col("area").alias("name")).agg(F.count(F.lit(1)).alias("value"))
-    jurisdictions = q.groupBy(F.col("jurisdiction").alias("name")).agg(
-        F.count(F.lit(1)).alias("value")
-    )
-
-    # year × area pivot with row total (A9, main.py:369-379)
-    years = (
-        q.groupBy("year")
-        .pivot("area", list(AREAS))
-        .count()
-        .select(
-            "year",
-            *[F.coalesce(F.col(a), F.lit(0)).alias(a) for a in AREAS],
-        )
-        .withColumn("total", sum(F.col(a) for a in AREAS))
-        .orderBy("year")
-    )
-
-    # splits: distinct questions per split + share of total (A4 + A15/W2,
-    # main.py:382-385). The total is the distinct count over all splits —
-    # computed in the same plan via a windowless cross-join of one row.
-    split_counts = v.groupBy(F.col("split").alias("name")).agg(
-        F.countDistinct("question_id").alias("value")
-    )
-    total_split = v.agg(F.countDistinct("question_id").alias("__total"))
-    splits = split_counts.crossJoin(F.broadcast(total_split)).select(
-        "name",
-        "value",
-        F.when(F.col("__total") > 0, F.concat(
-            F.round(F.col("value") / F.col("__total") * 100).cast("int").cast("string"),
-            F.lit("%"),
-        )).otherwise(F.lit("0%")).alias("pct"),
-    )
-
-    area_jurisdiction = (
-        q.groupBy("area")
-        .pivot("jurisdiction", list(JURISDICTIONS))
-        .count()
-        .select(
-            "area",
-            *[F.coalesce(F.col(j), F.lit(0)).alias(j) for j in JURISDICTIONS],
-        )
-    )
-    lang_area = (
-        q.groupBy("area")
-        .pivot("language", list(LANGUAGES))
-        .count()
-        .select("area", *[F.coalesce(F.col(lang), F.lit(0)).alias(lang) for lang in LANGUAGES])
-    )
-
-    # open answers (main.py:410-417): area ⋈ answer, config fixed
-    open_answers = (
-        v.filter((F.col("config") == "open_question") & F.col("answer").isNotNull())
-        .select("question_id", "answer")
-        .join(
-            F.broadcast(q.select(F.col("id").alias("question_id"), "area")),
-            "question_id",
-            "inner",
-        )
-    )
-    answer_lengths = answer_length_histogram(open_answers)
-    # A7: mean/median/min/max per area; exact median for oracle parity,
-    # percentile_approx is the documented 100 TB switch
-    answer_stats = (
-        open_answers.select("area", word_count(F.col("answer")).alias("wc"))
-        .groupBy("area")
-        .agg(
-            F.round(F.avg("wc")).cast("int").alias("avgWords"),
-            F.round(F.percentile("wc", F.lit(0.5))).cast("int").alias("medianWords"),
-            F.min("wc").alias("minWords"),
-            F.max("wc").alias("maxWords"),
-        )
-    )
-
-    return {
-        "total_questions": q.agg(F.count(F.lit(1)).alias("total_questions")),
-        "courses": courses,
-        "areas": areas,
-        "jurisdictions": jurisdictions,
-        "years": years,
-        "splits": splits,
-        "area_jurisdiction": area_jurisdiction,
-        "lang_area": lang_area,
-        "answer_lengths": answer_lengths,
-        "answer_stats": answer_stats,
-    }
+    cells = dashboard_cells(*_restrict(questions, variants, configs, languages))
+    # the question cells feed seven sections and the histogram two:
+    # slot-bounded caches, released when the next dashboard call
+    # replaces the slot (the returned frames are lazy — ADVICE r1 leak fix)
+    for t in ("q_cells", "wc_hist"):
+        cells[t] = persist_slot(cells[t], f"dashboard.{t}")
+    return dashboard_sections(cells)
 
 
 def course_summary(
@@ -295,54 +308,28 @@ def flatten_dashboard(d: dict[str, DataFrame]) -> DataFrame:
     q_dashboard_suite contract key and the streaming maintainer's
     served report (streaming/dashboard.py), so the flatten expressions
     cannot diverge between the batch and streaming doors."""
-
-    def flat(
-        section: str,
-        df: DataFrame,
-        key,
-        nums: tuple[str, ...] = (),
-        strs: tuple[str, ...] = (),
-    ) -> DataFrame:
-        # one stack generator per section, not one union branch per
-        # metric: the per-metric union re-plans (and can re-execute)
-        # the section's aggregate once per metric (round-9 measurement
-        # on the stats composites; identical cells either way)
-        cells: list[str] = []
-        for m in nums:
-            cells += [f"'{m}'", f"CAST(`{m}` AS DOUBLE)", "CAST(NULL AS STRING)"]
-        for m in strs:
-            cells += [f"'{m}'", "CAST(NULL AS DOUBLE)", f"CAST(`{m}` AS STRING)"]
-        n = len(nums) + len(strs)
-        return df.select(
-            F.lit(section).alias("section"),
-            key.cast("string").alias("key"),
-            F.expr(f"stack({n}, {', '.join(cells)})").alias(
-                "metric", "value_num", "value_str"
-            ),
-        )
-
     parts = [
-        flat("total", d["total_questions"], F.lit("all"), ("total_questions",)),
-        flat(
+        flat_section("total", d["total_questions"], F.lit("all"), ("total_questions",)),
+        flat_section(
             "courses",
             d["courses"],
             F.col("course"),
             ("count", "lang_de", "lang_en"),
             ("area",),
         ),
-        flat("areas", d["areas"], F.col("name"), ("value",)),
-        flat("jurisdictions", d["jurisdictions"], F.col("name"), ("value",)),
-        flat("years", d["years"], F.col("year"), (*AREAS, "total")),
-        flat("splits", d["splits"], F.col("name"), ("value",), ("pct",)),
-        flat(
+        flat_section("areas", d["areas"], F.col("name"), ("value",)),
+        flat_section("jurisdictions", d["jurisdictions"], F.col("name"), ("value",)),
+        flat_section("years", d["years"], F.col("year"), (*AREAS, "total")),
+        flat_section("splits", d["splits"], F.col("name"), ("value",), ("pct",)),
+        flat_section(
             "area_jurisdiction",
             d["area_jurisdiction"],
             F.col("area"),
             tuple(JURISDICTIONS),
         ),
-        flat("lang_area", d["lang_area"], F.col("area"), tuple(LANGUAGES)),
-        flat("answer_lengths", d["answer_lengths"], F.col("range"), ("count",)),
-        flat(
+        flat_section("lang_area", d["lang_area"], F.col("area"), tuple(LANGUAGES)),
+        flat_section("answer_lengths", d["answer_lengths"], F.col("range"), ("count",)),
+        flat_section(
             "answer_stats",
             d["answer_stats"],
             F.col("area"),

@@ -15,6 +15,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from lexam_data_pipeline_spark.functions.extract import gold_choice
+from lexam_data_pipeline_spark.operators.caching import persist_slot
 from lexam_data_pipeline_spark.operators.partitioning import narrow
 
 MAX_LIST_LIMIT = 500  # ref generation.py:34 / judging.py:39
@@ -68,38 +69,39 @@ def answers_page(
     answers, variants, questions = narrow(answers), narrow(variants), narrow(questions)
     limit = max(1, min(int(limit), MAX_LIST_LIMIT))
     offset = max(0, int(offset))
-    base = answers.filter(F.col("experiment_id") == experiment_id).persist()
-    try:
-        total = base.count()
-        page = base.orderBy("id").offset(offset).limit(limit)
-        rows = (
-            page.join(F.broadcast(_dims(variants, questions)), "variant_id", "left_outer")
-            .select(
-                "id",
-                "variant_id",
-                "question_id",
-                "config",
-                "course",
-                "area",
-                "question_text",
-                "gold_answer",
-                "gold_index",
-                "choices",
-                "gold_choice_text",
-                "run_index",
-                "model_name",
-                "answer_text",
-                "extracted_letter",
-                "mcq_correct",
-                "input_tokens",
-                "output_tokens",
-                F.date_format("created_at", ISO).alias("created_at"),
-            )
-            .orderBy("id")
+    # the persist must outlive this call: count and the caller's lazy
+    # ``rows`` both read it (serving/questions.py's page_base slot shape)
+    base = persist_slot(
+        answers.filter(F.col("experiment_id") == experiment_id), "serving.answers.page_base"
+    )
+    total = base.count()
+    page = base.orderBy("id").offset(offset).limit(limit)
+    rows = (
+        page.join(F.broadcast(_dims(variants, questions)), "variant_id", "left_outer")
+        .select(
+            "id",
+            "variant_id",
+            "question_id",
+            "config",
+            "course",
+            "area",
+            "question_text",
+            "gold_answer",
+            "gold_index",
+            "choices",
+            "gold_choice_text",
+            "run_index",
+            "model_name",
+            "answer_text",
+            "extracted_letter",
+            "mcq_correct",
+            "input_tokens",
+            "output_tokens",
+            F.date_format("created_at", ISO).alias("created_at"),
         )
-        return ListingPage(total=total, offset=offset, limit=limit, rows=rows)
-    finally:
-        base.unpersist()
+        .orderBy("id")
+    )
+    return ListingPage(total=total, offset=offset, limit=limit, rows=rows)
 
 
 def judgments_page(
@@ -129,32 +131,29 @@ def judgments_page(
     base = judgments.join(F.broadcast(exp_answers), "answer_id", "left_semi")
     if judge_model:
         base = base.filter(F.col("judge_model") == judge_model)
-    base = base.persist()
-    try:
-        total = base.count()
-        page = base.orderBy("id").offset(offset).limit(limit)
-        rows = (
-            page.join(F.broadcast(exp_answers), "answer_id", "left_outer")
-            .join(F.broadcast(_dims(variants, questions)), "variant_id", "left_outer")
-            .select(
-                "id",
-                "answer_id",
-                "question_id",
-                "config",
-                "course",
-                "area",
-                "question_text",
-                "gold_answer",
-                "model_answer",
-                "judge_model",
-                "judgment_text",
-                "score",
-                "input_tokens",
-                "output_tokens",
-                F.date_format("created_at", ISO).alias("created_at"),
-            )
-            .orderBy("id")
+    base = persist_slot(base, "serving.judgments.page_base")
+    total = base.count()
+    page = base.orderBy("id").offset(offset).limit(limit)
+    rows = (
+        page.join(F.broadcast(exp_answers), "answer_id", "left_outer")
+        .join(F.broadcast(_dims(variants, questions)), "variant_id", "left_outer")
+        .select(
+            "id",
+            "answer_id",
+            "question_id",
+            "config",
+            "course",
+            "area",
+            "question_text",
+            "gold_answer",
+            "model_answer",
+            "judge_model",
+            "judgment_text",
+            "score",
+            "input_tokens",
+            "output_tokens",
+            F.date_format("created_at", ISO).alias("created_at"),
         )
-        return ListingPage(total=total, offset=offset, limit=limit, rows=rows)
-    finally:
-        base.unpersist()
+        .orderBy("id")
+    )
+    return ListingPage(total=total, offset=offset, limit=limit, rows=rows)

@@ -30,6 +30,7 @@ from lexam_data_pipeline_spark.functions.embeddings import (
     label_dim_sums,
     quantized_components,
 )
+from lexam_data_pipeline_spark.plans.fixture_queries import _d18
 from lexam_data_pipeline_spark.streaming.state import ReadState, WriteState, start_fold
 
 STATE_COLUMNS = ("label", "pos", "s", "nl")
@@ -37,10 +38,6 @@ STATE_TABLES = ("sums",)
 
 __all__ = ["QUANT_SCALE", "STATE_COLUMNS", "STATE_TABLES", "batch_sums", "centroid_merge",
            "centroid_cosines", "start_streaming_centroids"]
-
-
-def _d18(c: str):
-    return F.col(c).cast("decimal(18,0)")
 
 
 def batch_sums(batch: DataFrame) -> DataFrame:

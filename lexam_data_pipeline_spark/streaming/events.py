@@ -34,6 +34,10 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+# exact decimal sum cast to double — the batch queries' parity rule
+# (order-independent across micro-batches)
+from lexam_data_pipeline_spark.plans.fixture_queries import _dec_sum
+
 #: schema of the events fixture after catalog normalization (ts in micros)
 EVENTS_SCHEMA = StructType(
     [
@@ -62,12 +66,6 @@ def read_events_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(events_dir)
     )
-
-
-def _dec_sum(col: str) -> F.Column:
-    # exact decimal sum cast to double — same parity rule as the batch
-    # queries (order-independent across micro-batches)
-    return F.sum(F.col(col).cast("decimal(18,2)")).cast("double")
 
 
 def tumbling_counts(events: DataFrame, watermark: str | None = DEFAULT_WATERMARK) -> DataFrame:

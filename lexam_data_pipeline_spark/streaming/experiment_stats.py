@@ -36,8 +36,9 @@ expressions cannot diverge from the batch key, and the drained report
 is CELL-IDENTICAL to q_experiment_stats' flatten over the union of all
 batches for ANY micro-batch split
 (tests/test_streaming_experiment_stats.py proves it; the exact median
-is rebuilt from the score cells with percentile(0.5)'s interpolation
-formula).
+is the batch key's ``percentile(score, 0.5)`` with the cell count as
+its frequency, so the report builds lazily, with no driver-side
+collect).
 
 Contract: answers and judgments arrive exactly once, and a judgment
 arrives no earlier than its answer (the generate→judge pipeline
@@ -82,13 +83,10 @@ STATE_TABLES = (
 #: the IDENTITY: fold-equality with the batch keys is preserved exactly.
 #: Against an adversarial stream of arbitrary floats in [0,1] the cell
 #: count is now HARD-BOUNDED at 10^5+1 per group key instead of
-#: unbounded; out-of-range scores still hit the collect_bounded guard,
-#: which raises rather than OOMs.
+#: unbounded.  Out-of-range scores are not bounded by it; the reports
+#: aggregate the cells in Spark and never collect them to the driver,
+#: so such scores grow only the state tables.
 SCORE_CELL_PRECISION = 5
-
-#: serve-time collect ceiling for score-cell tables: the quantization
-#: bound (100_001 in-range cells) plus headroom for a few group keys.
-SCORE_CELL_GUARD = 8 * 100_001
 
 _SCHEMAS = {
     "overall": (
@@ -266,40 +264,15 @@ def experiment_stats_fold_judgments(
     }
 
 
-def _median_from_cells(cells: list[tuple[float, int]]) -> float:
-    """Exact interpolated median from (score, count) cells — Spark
-    percentile(0.5)'s formula: pos = 0.5·(T−1) over the sorted values,
-    linear interpolation between the straddling values."""
-    cells = sorted(cells)
-    total = sum(n for _, n in cells)
-    if total == 0:
-        return 0.0
-    pos = 0.5 * (total - 1)
-    lo_idx, hi_idx = int(pos), int(pos) + (0 if pos == int(pos) else 1)
-
-    def value_at(i: int) -> float:
-        seen = 0
-        for s, n in cells:
-            seen += n
-            if i < seen:
-                return s
-        return cells[-1][0]
-
-    lo, hi = value_at(lo_idx), value_at(hi_idx)
-    return lo + (pos - int(pos)) * (hi - lo)
-
-
 def experiment_stats_report(
     state: dict[str, DataFrame | None], *, n_answers: int = 2
 ) -> DataFrame:
     """Serve the FULL flattened /stats payload off the maintained cells
     — the shared flatten guarantees shape identity with the batch key."""
-    from lexam_data_pipeline_spark.operators.guards import collect_bounded
-
     st = {t: state.get(t) for t in STATE_TABLES}
     if any(v is None for v in st.values()):
         raise ValueError("no experiment-stats state yet")
-    spark = st["overall"].sparkSession
+    cells = st["jscore_cells"]
 
     overall = st["overall"].select(
         "*",
@@ -310,40 +283,34 @@ def experiment_stats_report(
         .otherwise(F.lit(0.0))
         .alias("mcq_accuracy"),
     )
-    # open score stats: judged/avg off the cells in one aggregate; the
-    # exact median via the bounded cell collect (≤ |distinct scores|)
-    cell_rows = [
-        (r["score"], r["n"])
-        for r in collect_bounded(st["jscore_cells"], SCORE_CELL_GUARD, "jscore_cells")
-    ]
-    # raw interpolated value; the 4-decimal rounding happens in Spark so
-    # the HALF_UP tie behavior matches the batch key's F.round exactly
-    # (Python's round is banker's — 0.03125 would flip the last digit)
-    median = _median_from_cells(cell_rows)
-    open_stats = st["jscore_cells"].agg(
+    # open score stats off the cells in one aggregate; the exact median
+    # is the batch key's percentile(0.5) with the cell count as frequency
+    open_stats = cells.agg(
         F.coalesce(F.sum("n"), F.lit(0)).alias("judged"),
         F.coalesce(
             F.round(F.sum(F.col("score") * F.col("n")) / F.sum("n"), 4), F.lit(0.0)
         ).alias("avg_score"),
-        F.round(F.lit(float(median)), 4).alias("median_score"),
+        F.coalesce(
+            F.round(F.percentile("score", F.lit(0.5), F.col("n")), 4), F.lit(0.0)
+        ).alias("median_score"),
     )
     bucket_spec = local_rows(
-        spark,
+        cells.sparkSession,
         [(label,) for _, _, label in SCORE_BUCKETS], "range string"
     )
     bucket = F.least(F.floor(F.col("score") * 10), F.lit(10)).cast("int")
     labels = F.array(*[F.lit(label) for _, _, label in SCORE_BUCKETS])
     # emitted only when judged scores exist — the batch twin's
-    # ``if scores:`` gate (ref experiment_stats.py:55-61); here the gate
-    # reads the already-collected cells, no extra job
-    any_scores = local_rows(
-        spark,
-        [(1,)] if cell_rows else [], "__has_scores int"
+    # ``if scores:`` gate (ref experiment_stats.py:55-61), the same
+    # broadcast 0-or-1-row aggregate as the batch key's
+    any_scores = (
+        cells.agg(F.count(F.lit(1)).alias("__cells"))
+        .where(F.col("__cells") > 0)
+        .select(F.lit(1).alias("__has_scores"))
     )
     score_distribution = (
         bucket_spec.join(
-            st["jscore_cells"]
-            .select(F.element_at(labels, bucket + 1).alias("range"), "n")
+            cells.select(F.element_at(labels, bucket + 1).alias("range"), "n")
             .groupBy("range")
             .agg(F.sum("n").alias("count")),
             "range",

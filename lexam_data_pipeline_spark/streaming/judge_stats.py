@@ -43,7 +43,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from lexam_data_pipeline_spark.catalog import local_rows
 from lexam_data_pipeline_spark.operators.caching import persist_slot
 from lexam_data_pipeline_spark.serving.stats import flatten_compare_judges
 from lexam_data_pipeline_spark.streaming.state import (
@@ -193,34 +192,12 @@ def judge_stats_fold_judgments(
 def judge_stats_report(state: dict[str, DataFrame | None]) -> DataFrame:
     """Serve the flattened compare-judges + by-question payload off the
     maintained cells."""
-    from lexam_data_pipeline_spark.operators.guards import collect_bounded
-    from lexam_data_pipeline_spark.streaming.experiment_stats import (
-        _median_from_cells,
-    )
-
     st = {t: state.get(t) for t in STATE_TABLES}
     if any(v is None for v in st.values()):
         raise ValueError("no judge-stats state yet")
-    spark = st["judge_cells"].sparkSession
 
-    # per-judge medians: cells are ≤ |judges| × 100_001 (the quantized
-    # key's hard bound) — driver-side interpolation with
-    # percentile(0.5)'s exact formula.  The guard is sized from the
-    # OBSERVED judge count: a fixed 8-group ceiling tripped
-    # collect_bounded under >8 judge models even though the state table
-    # itself was still bounded (ADVICE r10).
-    n_judges = st["judge_cells"].select("judge_model").distinct().count()
-    rows = collect_bounded(
-        st["judge_cells"], max(n_judges, 1) * 100_001, "judge_cells"
-    )
-    per_judge: dict[str, list[tuple[float, int]]] = {}
-    for r in rows:
-        per_judge.setdefault(r["judge_model"], []).append((r["score"], r["n"]))
-    medians = [(j, float(_median_from_cells(c))) for j, c in sorted(per_judge.items())]
-    med_df = local_rows(
-        spark,
-        medians or [], "judge_model string, median_raw double"
-    )
+    # per-judge exact medians: the batch key's percentile(score, 0.5)
+    # with the cell count as frequency, in the same aggregate
     judges = (
         st["judge_cells"]
         .groupBy("judge_model")
@@ -229,13 +206,9 @@ def judge_stats_report(state: dict[str, DataFrame | None]) -> DataFrame:
             F.round(F.sum(F.col("score") * F.col("n")) / F.sum("n"), 4).alias(
                 "avg_score"
             ),
-        )
-        .join(med_df, "judge_model", "left_outer")
-        .select(
-            "judge_model",
-            "judged",
-            "avg_score",
-            F.round(F.col("median_raw"), 4).alias("median_score"),
+            F.round(F.percentile("score", F.lit(0.5), F.col("n")), 4).alias(
+                "median_score"
+            ),
         )
         .orderBy("judge_model")
     )

@@ -67,3 +67,17 @@ def test_ivfpq_search_exact_rerank_scores(spark, sf_small):
     for vid, cos in approx.items():
         if vid in exact:
             assert cos == exact[vid], "refine stage must score exactly"
+
+
+def test_ivfpq_build_collects_one_sample(spark, sf_small):
+    """The coarse quantizer and the PQ codebooks train on ONE collected
+    sample: building the index runs one Spark job, the sample collect
+    (the assignment and encoding passes stay lazy)."""
+    emb = load_table(spark, sf_small, "embeddings")
+    sc = spark.sparkContext
+    sc.setJobGroup("ivfpq-build", "index build")
+    try:
+        build_ivfpq_index(emb)
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup("ivfpq-build")) == 1

@@ -294,6 +294,22 @@ def test_judgments_page_filter_and_enrichment(spark, t):
     assert all_page.total == 6
 
 
+@pytest.mark.parametrize("listing", ["answers", "judgments"])
+def test_listing_rows_read_the_persisted_base(spark, t, listing):
+    """The page's persisted base outlives the call: the caller's lazy
+    ``rows`` reads the cache too, not only the page's count."""
+    from lexam_data_pipeline_spark.serving import answers_page, judgments_page
+    from tests.test_plan_memo import _inmemory_relations
+
+    if listing == "answers":
+        page = answers_page(t["answers"], t["variants"], t["questions"], experiment_id=1)
+    else:
+        page = judgments_page(
+            t["judgments"], t["answers"], t["variants"], t["questions"], experiment_id=1
+        )
+    assert _inmemory_relations(page.rows) >= 1
+
+
 # ── summary endpoints ──────────────────────────────────────────────────────
 
 

@@ -1,7 +1,7 @@
 """Incremental dashboard maintenance must serve a report row-identical
 to the batch contract key (q_dashboard_suite) after draining ANY
-micro-batch split — including the exact interpolated median rebuilt
-from the word-count histogram."""
+micro-batch split — including the exact median computed over
+the word-count histogram cells."""
 
 from __future__ import annotations
 

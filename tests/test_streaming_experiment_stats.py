@@ -2,8 +2,8 @@
 the batch q_experiment_stats flatten after draining ANY micro-batch
 split of the answers/judgments streams — including the open-answer
 semi-join discipline (a judgment counts only once its NULL-letter
-answer is known) and the exact interpolated median rebuilt from the
-score cells."""
+answer is known) and the exact median computed over the score
+cells."""
 
 from __future__ import annotations
 
@@ -16,7 +16,6 @@ from lexam_data_pipeline_spark.plans.fixture_queries import (
 )
 from lexam_data_pipeline_spark.streaming.experiment_stats import (
     STATE_TABLES,
-    _median_from_cells,
     experiment_stats_fold_answers,
     experiment_stats_fold_judgments,
     experiment_stats_report,
@@ -177,14 +176,71 @@ def test_adversarial_scores_state_hard_bounded(spark, state_store):
     assert abs(avg - round(true_avg, 4)) <= 1e-4  # 4-dp edge round ± grid snap
 
 
-def test_median_interpolation_formula():
-    """The cell-median rebuild is percentile(0.5): even-count midpoint
-    interpolated, odd-count exact value, empty → 0."""
-    assert _median_from_cells([]) == 0.0
-    assert _median_from_cells([(0.5, 3)]) == 0.5
-    assert _median_from_cells([(0.0, 1), (1.0, 1)]) == 0.5
-    assert _median_from_cells([(0.0, 2), (0.25, 1), (1.0, 2)]) == 0.25
-    assert _median_from_cells([(0.0, 1), (0.25, 1), (0.75, 1), (1.0, 1)]) == 0.5
+def test_median_interpolation_formula(spark):
+    """The cell median is Spark's percentile(0.5) with the cell count as
+    frequency: even-count midpoint interpolated, odd-count exact value,
+    empty → 0 after the reports' coalesce."""
+    median = F.percentile("score", F.lit(0.5), F.col("n"))
+    sets = {
+        1: ([(0.5, 3)], 0.5),
+        2: ([(0.0, 1), (1.0, 1)], 0.5),
+        3: ([(0.0, 2), (0.25, 1), (1.0, 2)], 0.25),
+        4: ([(0.0, 1), (0.25, 1), (0.75, 1), (1.0, 1)], 0.5),
+    }
+    cells = spark.createDataFrame(
+        [(i, s, n) for i, (c, _) in sets.items() for s, n in c],
+        "set int, score double, n long",
+    )
+    got = {r["set"]: r["m"] for r in cells.groupBy("set").agg(median.alias("m")).collect()}
+    assert got == {i: want for i, (_, want) in sets.items()}
+    empty = spark.createDataFrame([], "score double, n long")
+    assert empty.agg(F.coalesce(median, F.lit(0.0))).first()[0] == 0.0
+
+
+def test_reports_build_without_jobs(spark):
+    """Both cell reports build lazily: the medians are percentile
+    aggregates, so building a report runs no Spark job (no driver-side
+    collect of the score cells)."""
+    from lexam_data_pipeline_spark.streaming import experiment_stats, judge_stats
+
+    cases = [
+        (
+            experiment_stats._SCHEMAS,
+            experiment_stats.experiment_stats_report,
+            {
+                "overall": [(3, 1, 1, 2, 30, 30)],
+                "open_names": [(2, "area", "A"), (3, "area", "A")],
+                "variant_letters": [(1, "A")],
+                "jscore_cells": [(0.25, 1), (0.75, 1)],
+                "jtokens": [(4, 4)],
+                "mcq_cells": [("area", "A", 1, 1)],
+                "open_cells": [("area", "A", 0.25, 1), ("area", "A", 0.75, 1)],
+            },
+        ),
+        (
+            judge_stats._SCHEMAS,
+            judge_stats.judge_stats_report,
+            {
+                "exp_ids": [(1,), (2,)],
+                "judge_cells": [("j", 0.25, 1), ("j", 0.75, 1)],
+                "q_map": [(1, "q"), (2, "q")],
+                "byq_cells": [("q", 1, "c", "A", "open_question", None, None, 2, 2, 1.0)],
+            },
+        ),
+    ]
+    sc = spark.sparkContext
+    for schemas, report, rows in cases:
+        state = {t: spark.createDataFrame(r, schemas[t]) for t, r in rows.items()}
+        grp = f"report-build-{report.__name__}"
+        sc.setJobGroup(grp, "report build")
+        try:
+            df = report(state)
+        finally:
+            sc.setJobGroup(None, None)
+        jobs = sc.statusTracker().getJobIdsForGroup(grp)
+        assert not jobs, f"{report.__name__} ran {len(jobs)} job(s) at build"
+        medians = [r["value_num"] for r in df.collect() if r["metric"] == "median_score"]
+        assert medians == [0.5]
 
 
 def test_zero_scores_report_equals_batch_empty_key(spark, sf_small, proj, state_store):
