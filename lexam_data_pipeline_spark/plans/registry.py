@@ -53,6 +53,11 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     # maintainer); it already sits in this window, so nothing rotated.
     # Its ``courses`` section reads ``first(area)``, which is row-order
     # dependent in general but exact here: area is a function of course.
+    # The three stats keys' plans changed the same way when the /stats
+    # and compare-judges endpoints began counting their rows into the
+    # cell tables their streaming maintainers keep (serving.stats
+    # builders, stats_sections, judge_sections); they already sit in
+    # slots 5-7, so nothing rotated.
     "q_questions_page",
     "q_search_top_courses",
     "q_dashboard_suite",

@@ -7,7 +7,8 @@ rescan the corpus per refresh.  Each micro-batch of NEW questions (with
 their variants) is counted into the dashboard's cell tables
 (:func:`serving.dashboard.dashboard_cells`, the same function the batch
 endpoint counts its rows with), and those cells are summed into the
-bounded state tables:
+bounded state tables (:func:`streaming.state.sum_cells`, the merge the
+/stats maintainers share):
 
 * ``q_cells (course, area, jurisdiction, language, year, n)`` — counts
   of restricted questions; every question-side section (total, courses,
@@ -42,7 +43,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from lexam_data_pipeline_spark.operators.caching import persist_slot
 from lexam_data_pipeline_spark.serving.dashboard import (
@@ -56,6 +57,7 @@ from lexam_data_pipeline_spark.streaming.state import (
     WriteState,
     or_empty,
     start_fold,
+    sum_cells,
 )
 
 STATE_TABLES = ("q_cells", "split_counts", "split_total", "wc_hist")
@@ -87,16 +89,14 @@ def dashboard_merge(
     delta = dashboard_cells(
         persist_slot(q, "stream_dashboard.q"), persist_slot(v, "stream_dashboard.v")
     )
-    merged = {}
-    for t, schema in _SCHEMAS.items():
-        keys = [c for c in delta[t].columns if c != "n"]
-        merged[t] = (
-            or_empty(questions.sparkSession, state.get(t), schema)
-            .unionByName(delta[t])
-            .groupBy(*keys)
-            .agg(F.sum("n").alias("n"))
+    return {
+        t: sum_cells(
+            or_empty(questions.sparkSession, state.get(t), schema),
+            delta[t],
+            [c for c in delta[t].columns if c != "n"],
         )
-    return merged
+        for t, schema in _SCHEMAS.items()
+    }
 
 
 def dashboard_report(state: dict[str, DataFrame]) -> DataFrame:

@@ -10,6 +10,11 @@ overwrite the data a reader plan points at: it either swaps atomically
 to a fresh location (:func:`parquet_state_store`) or materializes ``df``
 before replacing the table (the in-memory store in ``tests/conftest.py``).
 
+Cells.  Most state tables are count cells: a micro-batch is counted
+into the same cell tables as the batch endpoint counts its rows
+(``serving.dashboard.dashboard_cells``, the builders of
+``serving.stats``), and :func:`sum_cells` sums them into the state.
+
 Triggers.  Every maintainer drains the input available when it starts
 and stops (``trigger(availableNow=True)``).  There is no continuous
 trigger: no maintainer sets a ``checkpointLocation``, so a long-running
@@ -21,7 +26,7 @@ from __future__ import annotations
 import os
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from lexam_data_pipeline_spark.catalog import local_rows
 
@@ -34,6 +39,31 @@ def or_empty(spark: SparkSession, df: DataFrame | None, schema: str) -> DataFram
     """``df``, or an empty frame of ``schema`` for a table with no
     version yet."""
     return df if df is not None else local_rows(spark, [], schema)
+
+
+#: Score-keyed state cells quantize their key to ROUND(score, 5) when a
+#: micro-batch is merged.  The engine's judge-score extraction clamps to
+#: [0,1] and the reference's ``[[x.x]]`` format carries ONE decimal, so
+#: every in-contract score satisfies ``round(s, 5) == s`` (so does the
+#: oracle fixture's 1/32 grid — k/32 = k·3125/100000, exactly 5 decimal
+#: digits): quantization is the IDENTITY and the folds equal the batch
+#: endpoints exactly.  Against a stream of arbitrary floats in [0,1] it
+#: bounds the cells at 10^5+1 per group key.  Out-of-range scores are
+#: not bounded by it; the reports aggregate the cells in Spark and never
+#: collect them to the driver, so such scores grow only the state.
+SCORE_CELL_PRECISION = 5
+
+
+def sum_cells(state: DataFrame, delta: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """Merge a micro-batch's cells ``delta`` into the ``state`` table:
+    the rows of both, every column but ``keys`` summed per key (with no
+    other column, the distinct keys).  A ``score`` key is quantized to
+    :data:`SCORE_CELL_PRECISION` first."""
+    if "score" in keys:
+        delta = delta.withColumn("score", F.round("score", SCORE_CELL_PRECISION))
+    rows = state.unionByName(delta)
+    sums = [F.sum(c).alias(c) for c in rows.columns if c not in keys]
+    return rows.groupBy(*keys).agg(*sums) if sums else rows.distinct()
 
 
 def parquet_state_store(spark: SparkSession, root: str) -> tuple[ReadState, WriteState]:

@@ -235,3 +235,79 @@ def test_breakdown_by_fields_matches_single_field(spark, sf_small, proj):
             ).collect()
         )
         assert got == want, field
+
+
+def test_public_stats_frames_schema_and_order(proj):
+    """The public /stats frames keep their column names, order and
+    types, built off cell tables or not, and stats_by_question keeps its
+    row order: avg score desc (NULL as 0), question id asc."""
+    from lexam_data_pipeline_spark.serving.stats import (
+        breakdown_by_field,
+        breakdown_by_fields,
+        compare_judges,
+        experiment_stats,
+        stats_by_question,
+    )
+
+    questions, variants, answers, judgments = proj
+
+    def cols(df):
+        return [(f.name, f.dataType.simpleString()) for f in df.schema]
+
+    breakdown = [
+        ("name", "string"),
+        ("mcq_accuracy", "double"),
+        ("mcq_total", "bigint"),
+        ("open_avg_score", "double"),
+        ("open_total", "bigint"),
+    ]
+    stats = {
+        "overall": [
+            ("total_answers", "bigint"),
+            ("mcq_total", "bigint"),
+            ("mcq_correct", "bigint"),
+            ("open_total", "bigint"),
+            ("generation_input", "bigint"),
+            ("generation_output", "bigint"),
+            ("mcq_accuracy", "double"),
+        ],
+        "open": [("judged", "bigint"), ("avg_score", "double"), ("median_score", "double")],
+        "judge_tokens": [("judge_input", "bigint"), ("judge_output", "bigint")],
+        "score_distribution": [("range", "string"), ("count", "bigint")],
+        "self_consistency": [
+            ("total_variants", "bigint"),
+            ("unanimous", "bigint"),
+            ("unanimous_rate", "double"),
+        ],
+    }
+    for n in (1, 2):
+        s = experiment_stats(answers, judgments, experiment_id=1, n_answers=n)
+        want = [k for k in stats if n > 1 or k != "self_consistency"]
+        assert list(s) == want
+        assert {k: cols(df) for k, df in s.items()} == {k: stats[k] for k in want}
+    dims = (answers, judgments, variants, questions)
+    assert cols(
+        breakdown_by_fields(*dims, experiment_id=1, fields=("area", "course"))
+    ) == [("field", "string"), *breakdown]
+    assert cols(breakdown_by_field(*dims, experiment_id=1, field="area")) == breakdown
+    assert cols(compare_judges(answers, judgments, experiment_id=1)) == [
+        ("judge_model", "string"),
+        ("judged", "bigint"),
+        ("avg_score", "double"),
+        ("median_score", "double"),
+    ]
+    by_q = stats_by_question(*dims, experiment_id=1, judge_model="judge-x")
+    assert cols(by_q) == [
+        ("question_id", "string"),
+        ("course", "string"),
+        ("area", "string"),
+        ("config", "string"),
+        ("mcq_correct", "boolean"),
+        ("answer_count", "bigint"),
+        ("avg_score", "double"),
+        ("judgment_count", "bigint"),
+    ]
+    rows = by_q.collect()
+    keys = [(-(r["avg_score"] or 0.0), r["question_id"]) for r in rows]
+    assert keys == sorted(keys)
+    assert any(r["avg_score"] is None for r in rows) and len({k[0] for k in keys}) > 2

@@ -101,9 +101,7 @@ def test_score_cell_quantization_is_identity_in_contract(spark):
     1/32 grid (k/32 = k·3125/1e5 — exactly 5 decimal digits).  This is
     the lemma that makes cell-key quantization lossless for every
     fold-equality proof in this file."""
-    from lexam_data_pipeline_spark.streaming.experiment_stats import (
-        SCORE_CELL_PRECISION,
-    )
+    from lexam_data_pipeline_spark.streaming.state import SCORE_CELL_PRECISION
 
     grid = [k / 32.0 for k in range(33)] + [k / 10.0 for k in range(11)]
     df = spark.createDataFrame([(s,) for s in grid], "s double")
